@@ -21,12 +21,15 @@ Scale design (the 100-TB contract of the build brief):
 
 from __future__ import annotations
 
+import logging
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import normalize_text, shingles, tokens
+
+LOG = logging.getLogger("metaframe_spark")
 
 
 def content_hash(col) -> Column:
@@ -689,6 +692,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+_JOB_DESC = "spark.job.description"
+
+
 def near_dup_groups(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -699,33 +705,50 @@ def near_dup_groups(
     returns (id, group_id) where group_id is the smallest id in the
     component — the canonical survivor.
 
-    Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) in pure
-    DataFrame ops: each round halves chain depth, so convergence is
-    O(log diameter) rounds — vs O(diameter) for plain min-label
-    propagation (VERDICT r5 #6) — with every round just two
-    groupBy-min + broadcast-or-shuffle joins over the current edge set,
-    whose size never exceeds the input edge count. The fixpoint is a
-    forest of stars rooted at each component's minimum id, read off as
-    the (child, root) edge list. This is the standard large-scale
-    alternative to driver-side union-find, which dies once the pair list
-    outgrows memory.
+    The edge list is checkpointed once (every later step reads it instead
+    of re-running the upstream pair-generation pipeline — LSH candidates
+    plus exact verification, at any scale the dominant cost) and counted;
+    the count is the action that fills the checkpoint. Which algorithm
+    runs then follows Spark's own "small enough to ship whole" rule:
 
-    Measured (sf-independent probe, local[32]): one 10^5-edge chain —
-    diameter 10^5, the pathological worst case; min-label propagation
-    would need ~10^5 rounds — converges in 18 rounds / ~30 s, exactly the
-    log2(d) the algorithm promises. ``max_iterations=50`` is runaway
-    protection only (covers diameters beyond 2^49; convergence breaks the
-    loop early), not a tuning knob.
+    * **driver path** — the edge list's estimated size (edge count × the
+      schema's default row size) is within
+      ``spark.sql.autoBroadcastJoinThreshold``: it is collected over
+      Arrow, union-find with min-id roots runs on the driver, and the
+      labels return as a local relation. One collect job replaces the
+      star path's two jobs per round, which on a typical near-dup pair
+      list (tens to thousands of edges) are pure per-job overhead.
+    * **star path** — larger edge lists, or the threshold at ``-1``:
+      alternating large-star/small-star contraction (Kiveris et al.,
+      "Connected Components in MapReduce and Beyond", SoCC'14) in pure
+      DataFrame ops. Each round halves chain depth, so convergence is
+      O(log diameter) rounds — vs O(diameter) for plain min-label
+      propagation — with every round just two groupBy-min +
+      broadcast-or-shuffle joins over the current edge set, whose size
+      never exceeds the input edge count. The fixpoint is a forest of
+      stars rooted at each component's minimum id, read off as the
+      (child, root) edge list. No pair list ever reaches the driver on
+      this path, so it scales past driver memory.
 
-    Convergence detection: count + order-independent xxhash64 sum over the
-    canonically-oriented edge set — an exact set-difference check would
-    cost another join per round. A false "converged" needs two DIFFERENT
-    edge sets with equal count and equal 64-bit hash sum in consecutive
-    rounds (~2^-64); accepted.
+    Measured on the star path (sf-independent probe, local[32]): one
+    10^5-edge chain — diameter 10^5, the pathological worst case;
+    min-label propagation would need ~10^5 rounds — converges in 18
+    rounds / ~30 s, exactly the log2(d) the algorithm promises.
+    ``max_iterations=50`` is runaway protection only (covers diameters
+    beyond 2^49; convergence breaks the loop early), not a tuning knob.
 
-    ``near_dup_groups.last_rounds`` records the rounds of the most recent
-    call (introspection for the O(log d) test; not part of the API).
+    Star-path convergence detection: count + order-independent xxhash64
+    sum over the canonically-oriented edge set — an exact set-difference
+    check would cost another join per round. A false "converged" needs
+    two DIFFERENT edge sets with equal count and equal 64-bit hash sum in
+    consecutive rounds (~2^-64); accepted.
+
+    Jobs are labelled ``near_dup_groups:<step>`` (the caller's job
+    description is restored on return), and the chosen path, edge count
+    and rounds are logged to the ``metaframe_spark`` logger.
+    ``near_dup_groups.last_rounds`` records the star rounds of the most
+    recent call — 0 on the driver path (introspection for the O(log d)
+    test; not part of the API).
     """
     edges = (
         pairs.select(
@@ -735,18 +758,83 @@ def near_dup_groups(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    # materialize the edge list ONCE: every round traverses it and without
-    # a checkpoint each round would re-run the entire upstream
-    # pair-generation pipeline (LSH candidates + exact verification) —
-    # at any scale the dominant cost by far
-    edges = edges.localCheckpoint(eager=True)
+    spark = edges.sparkSession
+    sc = spark.sparkContext
+    caller_desc = sc.getLocalProperty(_JOB_DESC)
+    try:
+        sc.setJobDescription("near_dup_groups:edges")
+        edges = edges.localCheckpoint(eager=False)
+        # one job over the internal rows fills the lazy checkpoint — the
+        # same single job an eager checkpoint runs, now also yielding n
+        n_edges = edges._jdf.queryExecution().toRdd().count()
+        size = n_edges * edges._jdf.schema().defaultSize()
+        conf = spark._jsparkSession.sessionState().conf()
+        if 0 <= size <= conf.autoBroadcastJoinThreshold():
+            path, rounds = "driver", 0
+            out = _driver_components(edges, n_edges)
+        else:
+            path = "star"
+            out, rounds = _star_components(edges, max_iterations)
+    finally:
+        sc.setLocalProperty(_JOB_DESC, caller_desc)
+    near_dup_groups.last_rounds = rounds
+    LOG.info("near_dup_groups: path=%s edges=%d rounds=%d", path, n_edges, rounds)
+    return out
+
+
+def _driver_components(edges: DataFrame, n_edges: int) -> DataFrame:
+    """Connected components of a small, checkpointed ``(src, dst)`` edge
+    list by union-find on the driver: every union hangs the larger root
+    under the smaller, so each root is its component's minimum id.
+    Returns ``(id, group_id)`` typed like the edge columns."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    spark = edges.sparkSession
+    id_type = edges.schema["src"].dataType
+    schema = StructType(
+        [StructField("id", id_type), StructField("group_id", id_type)]
+    )
+    if n_edges == 0:
+        return spark.createDataFrame([], schema)
+    spark.sparkContext.setJobDescription("near_dup_groups:collect")
+    table = edges.toArrow()
+    parent = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(table.column("src").to_pylist(), table.column("dst").to_pylist()):
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = list(parent)
+    arrow_type = table.schema.field("src").type
+    labels = pa.table(
+        {
+            "id": pa.array(ids, arrow_type),
+            "group_id": pa.array([find(x) for x in ids], arrow_type),
+        }
+    )
+    return spark.createDataFrame(labels, schema)
+
+
+def _star_components(edges: DataFrame, max_iterations: int):
+    """Alternating large-star/small-star rounds over a checkpointed edge
+    list until two consecutive rounds agree (see :func:`near_dup_groups`).
+    Returns ``(labels, rounds)``."""
+    sc = edges.sparkSession.sparkContext
     # all node ids, from the ORIGINAL edges (star rounds rewire edges, so
     # intermediate edge sets need not mention every node); lazy — read off
     # the checkpoint by the final labels plan, no eager job of its own
-    edges0 = edges
     nodes = (
-        edges0.select(F.col("src").alias("id"))
-        .unionByName(edges0.select(F.col("dst").alias("id")))
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
 
@@ -783,6 +871,7 @@ def near_dup_groups(
     prev_ckpt = None  # round k-1's checkpoint RDD, releasable after round k
     for _ in range(max_iterations):
         rounds += 1
+        sc.setJobDescription(f"near_dup_groups:round{rounds}")
         # LAZY checkpoint + signature in one action: the _sig aggregation
         # scans every partition, so it both materializes the round's
         # checkpoint and reads the convergence signature in a single job
@@ -792,21 +881,20 @@ def near_dup_groups(
         # the new round is materialized: its input (the previous round's
         # checkpoint) can never be read again — release it now. The FINAL
         # round's checkpoint is never released here: the labels plan below
-        # reads it. edges0 (the eager input checkpoint) is likewise kept —
-        # prev_ckpt starts at None, so round 1 releases nothing.
+        # reads it. The input checkpoint is likewise kept (nodes reads it)
+        # — prev_ckpt starts at None, so round 1 releases nothing.
         if prev_ckpt is not None:
             prev_ckpt.unpersist(False)
         prev_ckpt = _ckpt_rdd(edges)
         if sig == prev_sig:
             break
         prev_sig = sig
-    near_dup_groups.last_rounds = rounds
     # fixpoint edges are (child, component-min); roots appear only as dst
     parents = edges.groupBy("src").agg(F.min("dst").alias("_g"))
-    return (
-        nodes.join(parents, nodes["id"] == parents["src"], "left")
-        .select("id", F.coalesce(F.col("_g"), F.col("id")).alias("group_id"))
+    labels = nodes.join(parents, nodes["id"] == parents["src"], "left").select(
+        "id", F.coalesce(F.col("_g"), F.col("id")).alias("group_id")
     )
+    return labels, rounds
 
 
 def dedup_survivors(
@@ -1216,6 +1304,8 @@ def minhash_near_dup_against(
             "text) or new_signatures= (a minhash_signatures relation)"
         )
 
+    sig_sides = []  # (label, relation) of every signature-store side
+
     def _sig_side(sigs, label):
         missing = {"shingle_hashes", "n_shingles", "shingle_n"} - set(
             sigs.columns
@@ -1226,18 +1316,7 @@ def minhash_near_dup_against(
                 f"(missing columns: "
                 f"{sorted(missing) + ([id_col] if id_col not in sigs.columns else [])!r})"
             )
-        # cheap action with an early-out: any row with a foreign shingle_n
-        # proves a parameter mismatch that would otherwise yield silent
-        # zero-recall (stored and fresh shingle spaces never collide);
-        # null-safe so a malformed store with NULL shingle_n also raises
-        if not sigs.filter(
-            ~F.col("shingle_n").eqNullSafe(F.lit(int(shingle_n)))
-        ).isEmpty():
-            raise ValueError(
-                f"{label} was built with a different shingle_n "
-                f"than this call's shingle_n={shingle_n}; rebuild the "
-                "store or match the parameter"
-            )
+        sig_sides.append((label, sigs))
         return sigs.select(
             id_col,
             F.col("shingle_hashes").alias("_sh"),
@@ -1280,6 +1359,39 @@ def minhash_near_dup_against(
         h_seen = _sig_side(seen_signatures, "seen_signatures")
     else:
         h_seen = _hashed(seen)
+    if sig_sides:
+        # any row with a foreign shingle_n proves a parameter mismatch that
+        # would otherwise yield silent zero-recall (stored and fresh shingle
+        # spaces never collide); null-safe so a malformed store with NULL
+        # shingle_n also raises. Every side is checked in ONE noop scan
+        # whose observed metric is the first offending side's index.
+        from functools import reduce
+
+        from pyspark.sql import Observation
+
+        scan = reduce(
+            DataFrame.unionByName,
+            [
+                sigs.select(
+                    F.when(
+                        ~F.col("shingle_n").eqNullSafe(F.lit(int(shingle_n))),
+                        F.lit(i),
+                    ).alias("_bad_side")
+                )
+                for i, (_, sigs) in enumerate(sig_sides)
+            ],
+        )
+        check = Observation()
+        scan.observe(check, F.min("_bad_side").alias("side")).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        bad_side = check.get["side"]
+        if bad_side is not None:
+            raise ValueError(
+                f"{sig_sides[bad_side][0]} was built with a different "
+                f"shingle_n than this call's shingle_n={shingle_n}; rebuild "
+                "the store or match the parameter"
+            )
     if persist:
         h_new, h_seen = h_new.persist(), h_seen.persist()
     cand = (
@@ -1737,7 +1849,7 @@ def semantic_dedup(
 ) -> DataFrame:
     """End-to-end semantic (embedding-cluster) dedup — the SemDeDup
     composition: :func:`semantic_dup_pairs` (cell-bounded cosine pairs) →
-    :func:`near_dup_groups` (O(log d) connected components) →
+    :func:`near_dup_groups` (connected components) →
     :func:`dedup_survivors` (smallest id per component survives, unpaired
     rows pass through). Returns the surviving rows of ``corpus``.
     ``kwargs`` forward to :func:`semantic_dup_pairs`."""

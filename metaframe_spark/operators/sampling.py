@@ -32,13 +32,14 @@ def shard_assignments(
     most 1, shard boundaries follow the deterministic interleave, and the
     same inputs produce the same shards on any cluster layout.
 
-    N comes from the checkpointed shuffle result (already materialized, so
-    the count is a cached-scan job, not a recompute).
+    The interleave is materialized once, as :func:`global_shuffle`'s
+    checkpoint, and N is the row total its rank offsets already collect
+    (the per-partition counts, summed on the driver) — sharding adds no
+    job of its own.
     """
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
-    shuffled = global_shuffle(df, id_col, seq_col)
-    n = shuffled.count()  # cheap: reads the localCheckpoint
+    shuffled, n = _interleave(df, id_col, seq_col)
     return shuffled.withColumn(
         shard_col,
         F.floor((F.col(seq_col) - 1) * n_shards / F.lit(max(n, 1))).cast("int"),
@@ -199,14 +200,20 @@ def global_shuffle(
     The mechanism itself lives in :func:`_global_rank`, shared with
     :func:`curriculum_stages` (same machinery pointed at a score).
     """
-    ranked, handle, _ = _global_rank(
+    return _interleave(df, id_col, seq_col)[0]
+
+
+def _interleave(df: DataFrame, id_col: str, seq_col: str):
+    """:func:`global_shuffle`'s body, also returning the row total the
+    rank offsets were built from: ``(checkpointed result, n)``."""
+    ranked, handle, n = _global_rank(
         df.withColumn("_draw", F.md5(F.col(id_col).cast("string"))),
         [F.asc("_draw"), F.asc(id_col)],
         seq_col,
     )
     result = ranked.drop("_draw", "_pid").localCheckpoint(eager=True)
     handle.unpersist()
-    return result
+    return result, n
 
 
 def curriculum_stages(

@@ -12,10 +12,20 @@ pipeline a reference user would actually run:
    contiguous near-equal training shards.
 
 Every stage is the library operator (see each module's scale notes); this
-module only wires them and reports per-stage row counts. The heavy text
-relation is persisted through stage 2, then the post-dedup survivor set is
-localCheckpointed so stages 3-5 never re-traverse the MinHash/verify
-lineage; both caches are released as soon as they are superseded.
+module only wires them and reports per-stage row counts. Each counted
+relation is computed once, and its count is the action that materializes
+it:
+
+* the exact-dedup output is persisted BEFORE its count, so the count fills
+  the cache stage 2 reads twice (MinHash pipeline + the anti-join); the
+  cache is released once the near-dup survivors are checkpointed;
+* the near-dup survivor set is localCheckpointed, so stages 3-5 never
+  re-traverse the MinHash/verify lineage;
+* the quality survivors are localCheckpointed lazily: their count fills
+  the checkpoint and the interleave's range sample and range shuffle read
+  it instead of re-running the feature plan;
+* the interleave is checkpointed by :func:`~metaframe_spark.operators.
+  sampling.global_shuffle`, and sharding takes N from its rank offsets.
 """
 
 from __future__ import annotations
@@ -292,8 +302,12 @@ def curate_corpus(
         if stage_counts:
             counts["line_filter"] = df.count()
 
-    # 1. exact dedup (full surviving rows, min-id survivor)
-    cur = exact_dedup_rows(df, text_col, id_col)
+    # 1. exact dedup (full surviving rows, min-id survivor). Stage 2
+    # traverses its output twice (minhash pipeline + the anti-join), so it
+    # is pinned BEFORE the count: the count is the action that fills the
+    # cache. Pins are released once cur2 is checkpointed below.
+    pinned = [exact_dedup_rows(df, text_col, id_col).persist()]
+    cur = pinned[0]
     if stage_counts:
         counts["exact_dedup"] = cur.count()
 
@@ -305,7 +319,9 @@ def curate_corpus(
             span_dedup(cur, text_col, id_col)
             .drop("n_spans_removed")
             .filter(F.length(F.col(text_col)) > 0)
+            .persist()
         )
+        pinned.append(cur)
         if stage_counts:
             counts["span_dedup"] = cur.count()
 
@@ -321,12 +337,11 @@ def curate_corpus(
             substring_dedup(cur, text_col, id_col)
             .drop("n_spans_removed", "n_chars_removed")
             .filter(F.length(F.col(text_col)) > 0)
+            .persist()
         )
+        pinned.append(cur)
         if stage_counts:
             counts["substring_dedup"] = cur.count()
-    # stage 2 traverses this twice (minhash pipeline + the anti-join);
-    # released as soon as cur2 is checkpointed below
-    cur = cur.persist()
 
     # 2. near-dup removal: verified pairs -> components -> keep min id
     pairs = minhash_near_dup_pairs(
@@ -345,7 +360,8 @@ def curate_corpus(
     # checkpointed by the operator; this pins the anti-join's survivors).
     cur2 = cur2.localCheckpoint(eager=True)
     counts["near_dedup"] = cur2.count()
-    cur.unpersist()
+    for frame in pinned:
+        frame.unpersist()
 
     # 2c. optional benchmark decontamination (drop docs leaking eval text)
     if benchmark is not None:
@@ -381,9 +397,14 @@ def curate_corpus(
         if stage_counts:
             counts["semantic_dedup"] = cur2.count()
 
-    # 3. quality gate
+    # 3. quality gate. The survivors are checkpointed lazily: their count
+    # (or, without stage counts, the interleave's range sample) fills the
+    # checkpoint, and every later stage — the range shuffle included —
+    # reads it instead of re-running the feature plan.
     scored = quality_features(cur2, text_col)
-    kept = scored.filter(F.col("quality_score") >= min_quality)
+    kept = scored.filter(F.col("quality_score") >= min_quality).localCheckpoint(
+        eager=False
+    )
     if stage_counts:
         counts["quality"] = kept.count()
 

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -46,6 +47,29 @@ def spark():
         extra_conf={"spark.driver.memory": "4g"},
     )
     yield spark
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn) -> (fn(), job_ids)``: the ids of the Spark jobs
+    ``fn`` launched, collected through a private job group."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        props = ("spark.jobGroup.id", "spark.job.description")
+        prev = [sc.getLocalProperty(k) for k in props]
+        sc.setJobGroup(group, group, False)
+        try:
+            result = fn()
+        finally:
+            for k, v in zip(props, prev):
+                sc.setLocalProperty(k, v)
+        # job events reach the status tracker asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -64,30 +64,6 @@ class TestSidecarFastPathGuard:
         assert _local_rel_dir("/tmp/rel", "parquet", spark) == "/tmp/rel"
 
 
-class TestCCCheckpointRelease:
-    """r15: the connected-components loop releases each SUPERSEDED round's
-    localCheckpoint RDD as soon as the next round has materialized —
-    otherwise every round's edge snapshot stays persisted until the
-    ContextCleaner happens to notice (O(rounds) live copies of the edge
-    list; at 100 TB edge scale that is the executors' storage memory)."""
-
-    def test_superseded_round_checkpoints_released(self, spark):
-        from metaframe_spark.operators.dedup import near_dup_groups
-
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(32)], "id_a long, id_b long"
-        )
-        before = spark.sparkContext._jsc.getPersistentRDDs().size()
-        out = near_dup_groups(pairs, "id_a", "id_b")
-        assert out.count() == 33
-        rounds = near_dup_groups.last_rounds
-        assert rounds >= 3  # a 33-node chain takes several star rounds
-        after = spark.sparkContext._jsc.getPersistentRDDs().size()
-        # only the eager input checkpoint and the FINAL round's checkpoint
-        # may survive the loop — not one snapshot per round
-        assert after - before <= 2
-
-
 class TestPoolRoundingDeterminism:
     """The pooled-mean rounding must be floor(x*1e6 + 0.5D)/1e6 — pure
     IEEE ops both engines execute bit-identically — not round(x, 6),

@@ -60,6 +60,21 @@ def test_curate_removes_dups_and_reports_stages(spark, messy):
     assert a == b
 
 
+def test_curate_job_budget(spark, messy, spark_jobs):
+    """Each counted stage is materialized once: exact dedup is cached
+    before its count, the quality survivors are checkpointed by theirs,
+    small pair graphs resolve on the driver and sharding reuses the
+    interleave's row total. 31 jobs when pinned (54 before)."""
+    messy.count()  # the fixture's cache is filled before counting
+    (out, counts), jobs = spark_jobs(
+        lambda: curate_corpus(
+            messy, min_quality=0.0, near_dup_jaccard=0.8, n_shards=4
+        )
+    )
+    assert len(jobs) <= 31, len(jobs)
+    assert counts["output"] == counts["quality"] == counts["near_dedup"]
+
+
 def test_line_filter_and_span_dedup_stages(spark):
     """Optional C4 stages: the line scrub drops junk lines pre-dedup, and
     span dedup removes a cross-document boilerplate footer exactly once,

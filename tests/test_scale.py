@@ -140,6 +140,17 @@ class TestTrainingShards:
         got = {r.doc_id: r.shard for r in back.collect()}
         assert got == expect
 
+    def test_sharding_adds_no_job_over_the_interleave(self, spark, spark_jobs):
+        """N for the shard split is the total the interleave's rank offsets
+        already collect: shard_assignments runs exactly global_shuffle's
+        jobs, with no count of its own."""
+        from metaframe_spark.operators import global_shuffle, shard_assignments
+
+        d = load_table(spark, SF, "documents").to_spark().select("doc_id", "text")
+        _, shuffle_jobs = spark_jobs(lambda: global_shuffle(d))
+        _, shard_jobs = spark_jobs(lambda: shard_assignments(d, 4))
+        assert len(shard_jobs) == len(shuffle_jobs)
+
     def test_single_shard_and_guard(self, spark, tmp_path):
         from metaframe_spark.operators import write_training_shards
 
