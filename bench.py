@@ -43,12 +43,6 @@ def _materialize(df) -> None:
     # noop sink: executes the whole plan on executors, returns nothing
     raw = df.to_spark() if hasattr(df, "to_spark") else df
     raw.write.format("noop").mode("overwrite").save()
-    # operators that persist() an intermediate expose the handle so callers
-    # can release the cache once the plan has run (otherwise repeated bench
-    # iterations pin executor memory for the whole session)
-    handle = getattr(df, "_mf_persisted", None)
-    if handle is not None:
-        handle.unpersist()
 
 
 def dispatch_microbench(spark, sf_dir: str, n_ops: int = 1000) -> dict:
@@ -129,7 +123,7 @@ def main() -> int:
     with_baseline = os.environ.get("BENCH_BASELINE", "1") == "1"
 
     from metaframe_spark.queries import QUERIES
-    from metaframe_spark.session import get_session
+    from metaframe_spark.session import get_session, persist_scope
 
     spark = get_session(
         "metaframe_spark_bench",
@@ -180,7 +174,8 @@ def main() -> int:
         # one warm-up pass builds the plan + fills the file-listing caches so
         # the timed runs measure execution, not first-touch setup
         t_warm = time.monotonic()
-        _materialize(fn(spark, sf_dir))
+        with persist_scope(spark):
+            _materialize(fn(spark, sf_dir))
         t_warm = time.monotonic() - t_warm
         # adaptive repeat (only when BENCH_REPEAT is unset): short entries
         # keep median-of-5 — scheduling noise is a large FRACTION of their
@@ -200,7 +195,8 @@ def main() -> int:
             # schemas, so construction adds only milliseconds.
             def timed_wrapped():
                 t0 = time.monotonic()
-                _materialize(fn(spark, sf_dir))
+                with persist_scope(spark):
+                    _materialize(fn(spark, sf_dir))
                 samples.append(time.monotonic() - t0)
 
             def timed_raw():
@@ -208,23 +204,11 @@ def main() -> int:
                 # wrapped and raw execute the identical Catalyst plan — this
                 # interleaved re-run documents parity within run noise
                 t0 = time.monotonic()
-                raw_df = fn(spark, sf_dir)
-                raw = raw_df.to_spark() if hasattr(raw_df, "to_spark") else raw_df
-                _materialize(raw)
-                # release the operator's persisted intermediates via the
-                # ORIGINAL return value: to_spark() returns a new DataFrame
-                # object without the _mf_persisted attribute, so the raw
-                # leg used to leak one CacheManager entry per persisting
-                # entry (every entry's last run is a raw run) — the leak
-                # taxed every later query's analysis for the rest of the
-                # session AND let alternating wrapped/raw runs of the same
-                # entry short-circuit to InMemoryTableScan, corrupting the
-                # ratio in both directions (r15: the r14 "tail tax").
-                # Unpersist stays inside the timed window, matching the
-                # wrapped leg, where _materialize releases it.
-                handle = getattr(raw_df, "_mf_persisted", None)
-                if handle is not None:
-                    handle.unpersist()
+                with persist_scope(spark):
+                    raw_df = fn(spark, sf_dir)
+                    _materialize(
+                        raw_df.to_spark() if hasattr(raw_df, "to_spark") else raw_df
+                    )
                 base_samples.append(time.monotonic() - t0)
 
             # alternate execution order per iteration: the second run of a

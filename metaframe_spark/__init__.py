@@ -19,6 +19,7 @@ _EXPORTS = {
     "MetaWriter": ("metaframe_spark.core", "MetaWriter"),
     "MetaStreamWriter": ("metaframe_spark.core", "MetaStreamWriter"),
     "get_session": ("metaframe_spark.session", "get_session"),
+    "persist_scope": ("metaframe_spark.session", "persist_scope"),
     "read_parquet": ("metaframe_spark.io", "read_parquet"),
     "read_csv": ("metaframe_spark.io", "read_csv"),
     "read_json": ("metaframe_spark.io", "read_json"),

@@ -242,17 +242,15 @@ def _fingerprint_near_dup_pairs(
     """Shared choreography for every perceptual *_near_dup_pairs wrapper:
     pin the fingerprint relation (both join sides consume it — without
     the pin each side re-decodes every payload through its own Arrow
-    pass), run the banded-Hamming engine, hand the pin back through the
-    repo-wide ``_mf_persisted`` release contract. One implementation so
-    a banding or release fix lands everywhere at once."""
+    pass) and run the banded-Hamming engine; the caller's
+    :func:`~metaframe_spark.session.persist_scope` releases the pin. One
+    implementation so a banding fix lands everywhere at once."""
     from ..operators.dedup import hamming_near_dup_pairs
 
     fp = fp_df.persist()
-    out = hamming_near_dup_pairs(
+    return hamming_near_dup_pairs(
         fp, id_col, fp_col, bits=64, max_hamming=max_hamming, n_bands=n_bands
     )
-    out._mf_persisted = fp
-    return out
 
 
 def image_near_dup_pairs(
@@ -277,8 +275,8 @@ def image_near_dup_pairs(
     before the self-join — both join sides consume it, and without the
     pin each side would re-decode every payload through its own Arrow
     pass (the 2× that matters when decode dominates, which for real
-    images it does). Released via the repo-wide ``_mf_persisted``
-    handle contract."""
+    images it does). The caller's
+    :func:`~metaframe_spark.session.persist_scope` releases the pin."""
     return _fingerprint_near_dup_pairs(
         image_dhash(df, id_col=id_col, payload_col=payload_col),
         id_col,
@@ -544,7 +542,8 @@ def audio_near_dup_pairs(
     complete for ``max_hamming < n_bands`` by pigeonhole, so banded
     output ≡ an exhaustive all-pairs Hamming scan at banded-candidate
     cost. The fingerprint relation pins once (both join sides consume
-    it; released via the ``_mf_persisted`` handle contract)."""
+    it; the caller's :func:`~metaframe_spark.session.persist_scope`
+    releases the pin)."""
     return _fingerprint_near_dup_pairs(
         audio_fingerprint(df, id_col=id_col, payload_col=payload_col),
         id_col,
@@ -644,7 +643,7 @@ def video_near_dup_pairs(
     lo_frame = F.when(
         F.col("_da") < F.col("_db"), F.col("_fa")
     ).otherwise(F.col("_fb"))
-    out = (
+    return (
         docs.select(
             F.least("_da", "_db").alias("id_a"),
             F.greatest("_da", "_db").alias("id_b"),
@@ -656,5 +655,3 @@ def video_near_dup_pairs(
         )
         .filter(F.col("n_shared_frames") >= min_shared_frames)
     )
-    out._mf_persisted = fp
-    return out

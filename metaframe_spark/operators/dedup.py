@@ -493,10 +493,10 @@ def simhash_near_dup_pairs(
     # pin the fingerprint relation — both sides of the banded self-join
     # consume it, and without the pin the per-document SimHash aggregate
     # (tokenize + per-token hash + 64-bit majority vote) runs once per
-    # side; released via the repo-wide _mf_persisted handle (the same
-    # choreography as the multimodal _fingerprint_near_dup_pairs wrapper)
+    # side (the same choreography as the multimodal
+    # _fingerprint_near_dup_pairs wrapper)
     sh = simhash_by_id(df, id_col, text_col, token_hash=token_hash).persist()
-    out = hamming_near_dup_pairs(
+    return hamming_near_dup_pairs(
         sh,
         id_col,
         "simhash",
@@ -504,8 +504,6 @@ def simhash_near_dup_pairs(
         max_hamming=max_hamming,
         n_bands=n_bands,
     )
-    out._mf_persisted = sh
-    return out
 
 
 def jaccard_similarity_pairs(
@@ -552,8 +550,9 @@ def jaccard_similarity_pairs(
     ~n²/2⁶⁴ ≈ 1e-15 per pair. Turn off only for exact-string auditing.
 
     ``persist`` pins the hashed-shingle relation both self-join sides
-    consume (released via the repo-wide ``_mf_persisted`` handle); without
-    it the tokenize+shingle pipeline executes once per join side.
+    consume (the caller's :func:`~metaframe_spark.session.persist_scope`
+    releases it); without it the tokenize+shingle pipeline executes once
+    per join side.
     """
     if block_col is None and not minhash_block:
         raise ValueError(
@@ -615,7 +614,7 @@ def jaccard_similarity_pairs(
     # |A ∪ B| = |A| + |B| - |A ∩ B| over distinct sets: the intersection is
     # computed once per pair and the union is pure arithmetic (materializing
     # array_union per pair would double the dominant cost)
-    out = (
+    return (
         a.join(
             b,
             (F.col("a._block") == F.col("b._block"))
@@ -640,9 +639,6 @@ def jaccard_similarity_pairs(
         )
         .filter(F.col("jaccard") >= min_jaccard)
     )
-    if persist:
-        out._mf_persisted = base
-    return out
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -1108,7 +1104,7 @@ def prefix_filter_pairs(
         F.col("_n").alias("_nb"),
     )
     inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("long")
-    out = (
+    return (
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
         .withColumn("n_inter", inter)
@@ -1131,24 +1127,6 @@ def prefix_filter_pairs(
             ).alias("jaccard"),
         )
     )
-    if persist:
-        out._mf_persisted = _MultiHandle(base, pref)
-    return out
-
-
-class _MultiHandle:
-    """Composite release handle for the repo-wide ``_mf_persisted``
-    contract (callers invoke exactly ``handle.unpersist()`` once the
-    consuming action has run): operators that pin MORE than one
-    intermediate hand back one of these so every cache is released."""
-
-    def __init__(self, *handles):
-        self._handles = [h for h in handles if h is not None]
-
-    def unpersist(self, blocking: bool = False):
-        for h in self._handles:
-            h.unpersist(blocking)
-        return self
 
 
 def neardup_threshold_sweep(
@@ -1179,13 +1157,13 @@ def neardup_threshold_sweep(
     Scale shape: the expensive stage (shingle explode + prefix join +
     verify) runs once at the floor — the bounded pair relation is
     PERSISTED because it feeds two aggregation branches (pair counts
-    and the doc-distinct), and both it and the generator's signature
-    cache hand back through the repo-wide ``_mf_persisted`` release
-    handle. The sweep itself multiplies only that bounded relation
-    (near-dup volume, not corpus volume) by a literal handful of
-    thresholds — one broadcast join, two partial-aggregated groupBys on
-    ≤ |thresholds| keys, one distinct on (threshold, doc) bounded by
-    pair volume. The corpus total is a one-row aggregate broadcast
+    and the doc-distinct); the caller's
+    :func:`~metaframe_spark.session.persist_scope` releases it and the
+    generator's signature cache. The sweep itself multiplies only that
+    bounded relation (near-dup volume, not corpus volume) by a literal
+    handful of thresholds — one broadcast join, two partial-aggregated
+    groupBys on ≤ |thresholds| keys, one distinct on (threshold, doc)
+    bounded by pair volume. The corpus total is a one-row aggregate broadcast
     back. Zero-pair thresholds still emit a row (left join from the
     threshold literal relation)."""
     ts = sorted({float(t) for t in thresholds})
@@ -1201,9 +1179,7 @@ def neardup_threshold_sweep(
     )
     # persist the bounded pair relation: it feeds TWO aggregation
     # branches (pair counts and the doc-distinct), so without the pin
-    # the candidate join + verify subtree would execute twice; both this
-    # cache and the generator's signature cache release through the
-    # composite _mf_persisted handle below
+    # the candidate join + verify subtree would execute twice
     pairs = inner.select("id_a", "id_b", "n_inter", "n_union").persist()
     th = spark.createDataFrame([(t,) for t in ts], "threshold double")
     qual = pairs.crossJoin(F.broadcast(th)).filter(
@@ -1222,7 +1198,7 @@ def neardup_threshold_sweep(
         .agg(F.count(F.lit(1)).alias("n_dup_docs"))
     )
     total = df.select(F.count(F.lit(1)).alias("_n_total"))
-    out = (
+    return (
         th.join(F.broadcast(pair_counts), "threshold", "left")
         .join(F.broadcast(doc_counts), "threshold", "left")
         .crossJoin(F.broadcast(total))
@@ -1241,10 +1217,6 @@ def neardup_threshold_sweep(
             ).alias("dup_doc_rate"),
         )
     )
-    out._mf_persisted = _MultiHandle(
-        getattr(inner, "_mf_persisted", None), pairs
-    )
-    return out
 
 
 def minhash_near_dup_against(
@@ -1517,11 +1489,6 @@ def _reshard_hot_cells(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    # hand the pinned cache back through the _mf_persisted release
-    # contract (same as pagerank / minhash_near_dup_pairs) so callers can
-    # unpersist after the consuming action instead of leaking it for the
-    # session
-    out._mf_persisted = assigned
     return out
 
 
@@ -1669,16 +1636,12 @@ def semantic_dup_pairs(
     )
     ea = cfeats.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     eb = cfeats.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    result = (
+    return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
         .select("id_a", "id_b", F.round(cosine_expr("_va", "_vb"), 6).alias("cosine"))
         .filter(F.col("cosine") >= min_cosine)
     )
-    # propagate the hot-cell reshard's pinned cache (if any) to the
-    # relation the caller actually consumes, so it can be released there
-    result._mf_persisted = getattr(assigned, "_mf_persisted", None)
-    return result
 
 
 def semantic_dup_against(
@@ -1727,6 +1690,27 @@ def semantic_dup_against(
     corpus for the dedup path (or decode offline). Vectors must be
     unit-normalized and ids integral (the GEMM carries ids as int64),
     matching :func:`semantic_dup_pairs`."""
+    return _semantic_dup_against(
+        spark, corpus_path, new_corpus, min_cosine, new_id, seen_id,
+        vec_col, format, max_cell_rows, gemm_margin, gemm_chunk_target,
+    )[0]
+
+
+def _semantic_dup_against(
+    spark,
+    corpus_path: str,
+    new_corpus: DataFrame,
+    min_cosine: float = 0.85,
+    new_id: str = "vec_id",
+    seen_id: str = "vec_id",
+    vec_col: str = "embedding",
+    format: str = "parquet",
+    max_cell_rows: int = 200_000,
+    gemm_margin: float = 1e-4,
+    gemm_chunk_target: int = 2_000_000,
+):
+    """:func:`semantic_dup_against`'s body, also returning the pinned
+    ``(new_id, vec_col, _cell)`` assignment relation: ``(pairs, assigned)``."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
     from .similarity import assign_cells, cosine_expr, read_ivf_index
@@ -1835,8 +1819,7 @@ def semantic_dup_against(
         )
         .filter(F.col("cosine") >= min_cosine)
     )
-    result._mf_persisted = assigned
-    return result
+    return result, assigned
 
 
 def semantic_dedup(
@@ -1857,9 +1840,7 @@ def semantic_dedup(
         corpus, min_cosine=min_cosine, n_cells=n_cells,
         id_col=id_col, vec_col=vec_col, **kwargs,
     )
-    out = dedup_survivors(corpus, pairs, id_col=id_col)
-    out._mf_persisted = getattr(pairs, "_mf_persisted", None)
-    return out
+    return dedup_survivors(corpus, pairs, id_col=id_col)
 
 
 def ngram_contamination(
@@ -2193,8 +2174,8 @@ def corpus_overlap(
     document pairs. One shuffle builds the distinct ``(group, shingle)``
     relation (partial-aggregated — duplicate shingles within a group
     collapse map-side), PERSISTED because three consumers read it (the
-    size relation plus both self-join sides; released through the
-    ``_mf_persisted`` handle — the :func:`shingle_novelty` discipline);
+    size relation plus both self-join sides; the caller's
+    :func:`~metaframe_spark.session.persist_scope` releases it);
     intersections come from a self-equi-join ON THE
     SHINGLE, where per-key fan-out is bounded by the number of groups
     (a shingle can co-occur in at most |groups| of them), so candidate
@@ -2247,7 +2228,7 @@ def corpus_overlap(
         .groupBy("group_a", "group_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
     )
-    out = (
+    return (
         pairs.join(inter, ["group_a", "group_b"], "left")
         .withColumn("n_inter", F.coalesce(F.col("n_inter"), F.lit(0)).cast("long"))
         .select(
@@ -2263,8 +2244,6 @@ def corpus_overlap(
             ).alias("jaccard"),
         )
     )
-    out._mf_persisted = rel
-    return out
 
 
 def shingle_novelty(
@@ -2307,12 +2286,11 @@ def shingle_novelty(
     if hash_shingles:
         sh = sh.select(id_col, F.xxhash64("_sh").alias("_sh"))
     # both the DF rollup and the join-back consume the exploded relation —
-    # persist so the scan+tokenize+explode runs once, released by the
-    # caller through the _mf_persisted contract (the minhash/pagerank
-    # discipline). A count-over-window single-pass alternative would drop
-    # the second consumer but funnels every occurrence of a hot shingle
-    # (stopword trigrams: millions of rows) through ONE window task;
-    # groupBy+join partial-aggregates and stays skew-safe.
+    # persist so the scan+tokenize+explode runs once. A count-over-window
+    # single-pass alternative would drop the second consumer but funnels
+    # every occurrence of a hot shingle (stopword trigrams: millions of
+    # rows) through ONE window task; groupBy+join partial-aggregates and
+    # stays skew-safe.
     sh = sh.persist()
     dfreq = sh.groupBy("_sh").agg(F.count(F.lit(1)).alias("_c"))
     per = (
@@ -2325,7 +2303,7 @@ def shingle_novelty(
             .alias("n_unique"),
         )
     )
-    out = (
+    return (
         df.select(id_col)
         .join(per, id_col, "left")
         .select(
@@ -2344,8 +2322,6 @@ def shingle_novelty(
             ).alias("novelty"),
         )
     )
-    out._mf_persisted = sh
-    return out
 
 
 def winnow_fingerprints(
@@ -2490,8 +2466,7 @@ def winnow_overlap_pairs(
         )
     # the fingerprint relation feeds the doc-freq filter AND both join
     # sides — three plan branches; Spark has no cross-branch subplan CSE,
-    # so pin it once (the _mf_persisted release convention the semantic
-    # ops use; the ContextCleaner reclaims it when the result is dropped)
+    # so pin it once
     fps = (
         winnow_fingerprints(
             df, text_col=text_col, id_col=id_col, k=k, window=window
@@ -2509,15 +2484,13 @@ def winnow_overlap_pairs(
         )
     a = kept.select(F.col(id_col).alias("id_a"), "fp")
     b = kept.select(F.col(id_col).alias("id_b"), "fp")
-    result = (
+    return (
         a.join(b, "fp")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    result._mf_persisted = fps
-    return result
 
 
 def substring_dedup(
@@ -2641,7 +2614,7 @@ def substring_dedup(
         ")), 1)), 1)"
     )
     passthrough = [c for c in df.columns if c != text_col]
-    result = (
+    return (
         df.join(ext, id_col, "left")
         .withColumn("_mf_out", F.expr(sel))
         .select(
@@ -2651,5 +2624,3 @@ def substring_dedup(
             F.col("_mf_out.c").cast("long").alias("n_chars_removed"),
         )
     )
-    result._mf_persisted = fps
-    return result

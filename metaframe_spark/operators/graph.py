@@ -105,9 +105,7 @@ def pagerank(
     n = nodes.count()  # the one driver scalar (teleport term literal)
     if n == 0:
         # empty edge list -> empty ranking, not a ZeroDivisionError
-        out = nodes.withColumn("pr", F.lit(0.0)).select("node", "pr")
-        out._mf_persisted = nodes
-        return out
+        return nodes.withColumn("pr", F.lit(0.0)).select("node", "pr")
     teleport = (1.0 - damping) / n
     # redistribute references pr twice per sweep -> the unrolled plan
     # doubles per iteration; truncate every other sweep unless the
@@ -162,9 +160,4 @@ def pagerank(
             )
         if eff_ck and (it + 1) % eff_ck == 0 and (it + 1) < n_iter:
             pr = pr.localCheckpoint(eager=True)
-    out = pr.select("node", F.col("_pr").alias("pr"))
-    # the node relation is re-read every iteration; release the cache
-    # after the consuming action (the oracle-harness/_mf_persisted
-    # contract, same as dedup.minhash_near_dup_pairs)
-    out._mf_persisted = nodes
-    return out
+    return pr.select("node", F.col("_pr").alias("pr"))

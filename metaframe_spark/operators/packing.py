@@ -603,8 +603,8 @@ def pack_token_arrays(
     most its own length past a boundary), so executor memory is sized by
     the sequence length — not by corpus size. The token-id relation is
     persisted for its two consumers (the count pass and the slice join)
-    and handed back via the repo-wide ``_mf_persisted`` release
-    convention.
+    and released by the caller's
+    :func:`~metaframe_spark.session.persist_scope`.
     """
     if seq_len < 1:
         raise ValueError("pack_token_arrays: seq_len must be >= 1")
@@ -629,7 +629,7 @@ def pack_token_arrays(
         )
         .withColumn("_seg", (seg - 1).cast("long"))
     )
-    out = (
+    return (
         sliced.groupBy("seq_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -651,8 +651,6 @@ def pack_token_arrays(
             ).alias("segment_ids"),
         )
     )
-    out._mf_persisted = toks
-    return out
 
 
 def temperature_mixture(

@@ -661,7 +661,7 @@ def dsir_weights(
 
     # raw grams feed BOTH the raw-LM fit and the per-doc scoring join —
     # no cross-branch CSE in Spark, so pin the (id, bucket) relation once
-    # (winnow persist convention; ContextCleaner reclaims with the result)
+    # (the caller's persist_scope releases it)
     raw_g = _bucketed(raw).persist()
     tgt_b = _bucketed(target).groupBy("_b").agg(
         F.count(F.lit(1)).alias("_ct")
@@ -694,7 +694,7 @@ def dsir_weights(
             .alias("_lr"),
         )
     )
-    result = (
+    return (
         raw_g.join(F.broadcast(ratio), "_b")
         .groupBy(id_col)
         .agg(
@@ -702,5 +702,3 @@ def dsir_weights(
             F.round(F.sum("_lr").cast("double"), 6).alias("log_weight"),
         )
     )
-    result._mf_persisted = raw_g
-    return result

@@ -1452,8 +1452,7 @@ def ivf_topk_stored(
                 "probing with a foreign index reads the wrong cells"
             )
     # the probe feeds BOTH the driver-side distinct-cell collect and the
-    # final join — persist it so the queries × centroids ranking runs once;
-    # released via the repo-wide _mf_persisted handle contract
+    # final join — persist it so the queries × centroids ranking runs once
     probed = _probe_cells(
         queries, centroids, query_id, vec_col, n_probe
     ).persist()
@@ -1525,9 +1524,7 @@ def ivf_topk_stored(
             f"({vec_dtype}) but no readable {bounds_path!r} — rewrite the "
             "layout or restore the bounds relation"
         )
-    out = _topk_within_cells(probed, indexed, k, corpus_id, query_id, vec_col)
-    out._mf_persisted = probed
-    return out
+    return _topk_within_cells(probed, indexed, k, corpus_id, query_id, vec_col)
 
 
 def scalar_quantize(

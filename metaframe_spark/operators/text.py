@@ -473,8 +473,8 @@ def bpe_tokenize(
     )
     # the exploded (id, word) relation feeds BOTH the vocabulary branch
     # and the count join — Spark has no cross-branch subplan CSE, so pin
-    # it once or the corpus is re-tokenized twice (the winnow_overlap
-    # persist convention; ContextCleaner reclaims it with the result)
+    # it once or the corpus is re-tokenized twice (the caller's
+    # persist_scope releases it)
     exploded = df.select(
         F.col(id_col), F.explode_outer(toks).alias("_mf_word")
     ).persist()
@@ -485,7 +485,7 @@ def bpe_tokenize(
         merges,
         merges_in_hex=merges_in_hex,
     ).select("word", "n_tokens")
-    result = (
+    return (
         exploded.join(
             vocab, exploded["_mf_word"] == vocab["word"], "left"
         )
@@ -500,8 +500,6 @@ def bpe_tokenize(
             .alias("n_tokens"),
         )
     )
-    result._mf_persisted = exploded
-    return result
 
 
 def bpe_fertility(
@@ -560,7 +558,7 @@ def bpe_fertility(
         F.col(den) > 0,
         F.round(F.col(num).cast("double") / F.col(den), 6),
     )
-    out = agg.select(
+    return agg.select(
         *by,
         "n_docs",
         "n_bytes",
@@ -569,10 +567,6 @@ def bpe_fertility(
         safe("n_tokens", "n_bytes").alias("tokens_per_byte"),
         safe("n_bytes", "n_tokens").alias("bytes_per_token"),
     )
-    # propagate bpe_tokenize's persist release handle — without this the
-    # exploded (id, word) cache leaks for the session
-    out._mf_persisted = getattr(counts, "_mf_persisted", None)
-    return out
 
 
 def bpe_chunk_documents(
@@ -663,7 +657,7 @@ def bpe_chunk_documents(
             "_chunk", F.floor(F.col("_start") / F.lit(content_budget))
         )
     )
-    result = (
+    return (
         assigned.groupBy(id_col, "_chunk")
         .agg(
             (F.sum("_wtok") + F.lit(int(n_special_per_chunk)))
@@ -682,8 +676,6 @@ def bpe_chunk_documents(
             ),
         )
     )
-    result._mf_persisted = words
-    return result
 
 
 def shingles(tokens_col, n: int = 3) -> Column:
@@ -873,7 +865,8 @@ def vocabulary_drift(
     9 decimals — addition-order-independent, so the PSI is
     bit-reproducible cross-engine and under any partitioning. The
     joined term relation is persisted (it feeds the totals AND the
-    contribution pass) and handed back via ``_mf_persisted``."""
+    contribution pass); the caller's
+    :func:`~metaframe_spark.session.persist_scope` releases it."""
     def _counts(df, side):
         return (
             df.select(F.explode(tokens(F.col(text_col))).alias("term"))
@@ -907,13 +900,11 @@ def vocabulary_drift(
         .cast("decimal(38,9)")
         .alias("_c")
     )
-    out = contrib.agg(
+    return contrib.agg(
         F.round(F.sum("_c").cast("double"), 6).alias("psi")
     ).crossJoin(F.broadcast(scal)).select(
         "n_vocab", "total_a", "total_b", "psi"
     )
-    out._mf_persisted = j
-    return out
 
 
 #: the Gopher rule-set's required-stopword list (Rae et al. 2021, A1.1)
@@ -1696,8 +1687,8 @@ def zipf_fit(
     TakeOrderedAndProject over the vocabulary; ranking + the OLS sums
     then run on ≤ ``top_k`` rows (a bounded single-partition window —
     the one-row output IS the plan's product). The counts relation is
-    persisted for its two consumers and handed back via the repo-wide
-    ``_mf_persisted`` release convention.
+    persisted for its two consumers and released by the caller's
+    :func:`~metaframe_spark.session.persist_scope`.
     """
     from pyspark.sql import Window
 
@@ -1738,7 +1729,7 @@ def zipf_fit(
         F.col("_n") * F.col("_syy") - F.col("_sy") * F.col("_sy"), F.lit(0.0)
     )
     slope = cov / varx
-    out = totals.join(F.broadcast(sums)).select(
+    return totals.join(F.broadcast(sums)).select(
         "n_tokens",
         "vocab_size",
         F.col("_n").cast("long").alias("top_v"),
@@ -1748,8 +1739,6 @@ def zipf_fit(
         ),
         F.round(cov * cov / (varx * vary), 6).alias("zipf_r2"),
     )
-    out._mf_persisted = counts
-    return out
 
 
 #: Credential-shaped patterns, ordered by masking precedence. Constructs are

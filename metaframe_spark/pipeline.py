@@ -17,8 +17,10 @@ relation is computed once, and its count is the action that materializes
 it:
 
 * the exact-dedup output is persisted BEFORE its count, so the count fills
-  the cache stage 2 reads twice (MinHash pipeline + the anti-join); the
-  cache is released once the near-dup survivors are checkpointed;
+  the cache stage 2 reads twice (MinHash pipeline + the anti-join); a
+  :func:`~metaframe_spark.session.persist_scope` releases it, and every
+  operator cache stages 1-2 pin, once the near-dup survivors are
+  checkpointed;
 * the near-dup survivor set is localCheckpointed, so stages 3-5 never
   re-traverse the MinHash/verify lineage;
 * the quality survivors are localCheckpointed lazily: their count fills
@@ -43,6 +45,7 @@ from .operators import (
     shard_assignments,
 )
 from .operators.text import language_scores, quality_features
+from .session import persist_scope
 
 
 def curate_corpus(
@@ -305,196 +308,198 @@ def curate_corpus(
     # 1. exact dedup (full surviving rows, min-id survivor). Stage 2
     # traverses its output twice (minhash pipeline + the anti-join), so it
     # is pinned BEFORE the count: the count is the action that fills the
-    # cache. Pins are released once cur2 is checkpointed below.
-    pinned = [exact_dedup_rows(df, text_col, id_col).persist()]
-    cur = pinned[0]
-    if stage_counts:
-        counts["exact_dedup"] = cur.count()
-
-    # 1b. optional global span dedup (cross-corpus boilerplate removal)
-    if dedup_spans:
-        from .operators.dedup import span_dedup
-
-        cur = (
-            span_dedup(cur, text_col, id_col)
-            .drop("n_spans_removed")
-            .filter(F.length(F.col(text_col)) > 0)
-            .persist()
-        )
-        pinned.append(cur)
+    # cache. The scope releases it, and every cache stages 1-2 pin, once
+    # cur2 is checkpointed below.
+    with persist_scope(df.sparkSession):
+        cur = exact_dedup_rows(df, text_col, id_col).persist()
         if stage_counts:
-            counts["span_dedup"] = cur.count()
+            counts["exact_dedup"] = cur.count()
 
-    # 1c. optional exact-substring removal (Lee et al. 2022): the
-    # duplicated passage itself is cut out of the losing doc — stronger
-    # than whole-sentence spans; text comes back in winnow's normalized
-    # space, so run it AFTER span dedup (which re-joins on normalized
-    # whitespace anyway) and before the near-dup stage reads the text
-    if dedup_substrings:
-        from .operators.dedup import substring_dedup
+        # 1b. optional global span dedup (cross-corpus boilerplate removal)
+        if dedup_spans:
+            from .operators.dedup import span_dedup
 
-        cur = (
-            substring_dedup(cur, text_col, id_col)
-            .drop("n_spans_removed", "n_chars_removed")
-            .filter(F.length(F.col(text_col)) > 0)
-            .persist()
+            cur = (
+                span_dedup(cur, text_col, id_col)
+                .drop("n_spans_removed")
+                .filter(F.length(F.col(text_col)) > 0)
+                .persist()
+            )
+            if stage_counts:
+                counts["span_dedup"] = cur.count()
+
+        # 1c. optional exact-substring removal (Lee et al. 2022): the
+        # duplicated passage itself is cut out of the losing doc — stronger
+        # than whole-sentence spans; text comes back in winnow's normalized
+        # space, so run it AFTER span dedup (which re-joins on normalized
+        # whitespace anyway) and before the near-dup stage reads the text
+        if dedup_substrings:
+            from .operators.dedup import substring_dedup
+
+            cur = (
+                substring_dedup(cur, text_col, id_col)
+                .drop("n_spans_removed", "n_chars_removed")
+                .filter(F.length(F.col(text_col)) > 0)
+                .persist()
+            )
+            if stage_counts:
+                counts["substring_dedup"] = cur.count()
+
+        # 2. near-dup removal: verified pairs -> components -> keep min id
+        pairs = minhash_near_dup_pairs(
+            cur, id_col, text_col, min_jaccard=near_dup_jaccard
         )
-        pinned.append(cur)
-        if stage_counts:
-            counts["substring_dedup"] = cur.count()
-
-    # 2. near-dup removal: verified pairs -> components -> keep min id
-    pairs = minhash_near_dup_pairs(
-        cur, id_col, text_col, min_jaccard=near_dup_jaccard
-    )
-    groups = near_dup_groups(pairs, "id_a", "id_b")
-    losers = groups.filter(F.col("id") != F.col("group_id")).select(
-        F.col("id").alias(id_col)
-    )
-    # no broadcast hint: the loser set is usually tiny (AQE will broadcast
-    # it), but a heavily-duplicated crawl can make it a large fraction of
-    # the corpus — let the optimizer decide from measured sizes
-    cur2 = cur.join(losers, id_col, "left_anti")
-    # Truncate lineage so stages 3-5 never re-traverse the losers ->
-    # pairs -> LSH band/verify pipeline (pairs itself is already
-    # checkpointed by the operator; this pins the anti-join's survivors).
-    cur2 = cur2.localCheckpoint(eager=True)
-    counts["near_dedup"] = cur2.count()
-    for frame in pinned:
-        frame.unpersist()
-
-    # 2c. optional benchmark decontamination (drop docs leaking eval text)
-    if benchmark is not None:
-        from .operators.dedup import ngram_contamination
-
-        contaminated = ngram_contamination(
-            cur2, benchmark, id_col, text_col, n=benchmark_ngram
-        ).select(id_col)
-        cur2 = cur2.join(contaminated, id_col, "left_anti")
-        if stage_counts:
-            counts["decontaminate"] = cur2.count()
-
-    # 2d. optional semantic (embedding) dedup on the lexical survivors
-    if embeddings is not None:
-        from .operators import unit_normalize
-        from .operators.dedup import semantic_dup_pairs
-
-        surv_emb = unit_normalize(
-            embeddings.join(cur2.select(id_col), id_col), embedding_col
-        )
-        sem_pairs = semantic_dup_pairs(
-            surv_emb,
-            min_cosine=semantic_min_cosine,
-            n_cells=semantic_cells,
-            id_col=id_col,
-            vec_col=embedding_col,
-        )
-        sem_groups = near_dup_groups(sem_pairs, "id_a", "id_b")
-        sem_losers = sem_groups.filter(F.col("id") != F.col("group_id")).select(
+        groups = near_dup_groups(pairs, "id_a", "id_b")
+        losers = groups.filter(F.col("id") != F.col("group_id")).select(
             F.col("id").alias(id_col)
         )
-        cur2 = cur2.join(sem_losers, id_col, "left_anti")
-        if stage_counts:
-            counts["semantic_dedup"] = cur2.count()
+        # no broadcast hint: the loser set is usually tiny (AQE will broadcast
+        # it), but a heavily-duplicated crawl can make it a large fraction of
+        # the corpus — let the optimizer decide from measured sizes
+        cur2 = cur.join(losers, id_col, "left_anti")
+        # Truncate lineage so stages 3-5 never re-traverse the losers ->
+        # pairs -> LSH band/verify pipeline (pairs itself is already
+        # checkpointed by the operator; this pins the anti-join's survivors).
+        cur2 = cur2.localCheckpoint(eager=True)
+        counts["near_dedup"] = cur2.count()
 
-    # 3. quality gate. The survivors are checkpointed lazily: their count
-    # (or, without stage counts, the interleave's range sample) fills the
-    # checkpoint, and every later stage — the range shuffle included —
-    # reads it instead of re-running the feature plan.
-    scored = quality_features(cur2, text_col)
-    kept = scored.filter(F.col("quality_score") >= min_quality).localCheckpoint(
-        eager=False
-    )
-    if stage_counts:
-        counts["quality"] = kept.count()
+    # 2c-5b run in a second scope: operators below pin caches (DSIR's
+    # gram relation, a semantic hot-cell reshard, BPE's word relation)
+    # that plans up to the interleave and token-budget checkpoints read,
+    # so the scope closes once those checkpoints are filled.
+    with persist_scope(df.sparkSession):
+        # 2c. optional benchmark decontamination (drop docs leaking eval text)
+        if benchmark is not None:
+            from .operators.dedup import ngram_contamination
 
-    # 3b. optional learned quality classifier (fastText-style filter —
-    # runs after the heuristic gate so the scoring scan sees fewer rows)
-    if quality_model is not None:
-        from .operators.classifier import score_quality
+            contaminated = ngram_contamination(
+                cur2, benchmark, id_col, text_col, n=benchmark_ngram
+            ).select(id_col)
+            cur2 = cur2.join(contaminated, id_col, "left_anti")
+            if stage_counts:
+                counts["decontaminate"] = cur2.count()
 
-        probs = score_quality(kept, quality_model, text_col, id_col).select(
-            id_col, "quality_prob"
-        )
-        kept = kept.join(probs, id_col).filter(
-            F.col("quality_prob") >= min_classifier_prob
-        ).drop("quality_prob")
-        if stage_counts:
-            counts["classifier"] = kept.count()
+        # 2d. optional semantic (embedding) dedup on the lexical survivors
+        if embeddings is not None:
+            from .operators import unit_normalize
+            from .operators.dedup import semantic_dup_pairs
 
-    # 4. language filter
-    if keep_langs:
-        kept = language_scores(kept, text_col).filter(
-            F.col("predicted_lang").isin(list(keep_langs))
-        )
-        if stage_counts:
-            counts["language"] = kept.count()
-
-    # 4b. optional DSIR importance resampling toward a target corpus —
-    # runs LAST among the filters (weights are only worth computing on
-    # rows that survived everything else) and before the interleave so
-    # the shard/order layout sees the final selection. Log-space A-ES
-    # keeps the DSIR log-likelihood ratios from ever exponentiating.
-    if dsir_target is not None and dsir_keep > 0:
-        from .operators.sampling import dsir_weights, weighted_sample_exact
-
-        wts = dsir_weights(
-            kept.select(id_col, text_col),
-            dsir_target,
-            text_col,
-            id_col,
-            buckets=dsir_buckets,
-        )
-        chosen = weighted_sample_exact(
-            wts,
-            dsir_keep,
-            "log_weight",
-            id_col,
-            seed=dsir_seed,
-            log_space=True,
-        ).select(id_col)
-        kept = kept.join(chosen, id_col, "left_semi")
-        if stage_counts:
-            counts["dsir"] = kept.count()
-
-    # 5. deterministic interleave (+ optional sharding)
-    out = (
-        shard_assignments(kept, n_shards, id_col)
-        if n_shards > 0
-        else global_shuffle(kept, id_col)
-    )
-
-    # 5b. optional token-denominated corpus cap: keep the maximal PREFIX
-    # of the deterministic interleave whose token total fits max_tokens —
-    # exact and rerun-stable because seq is a pure function of the data.
-    # With token_merges the budget is REAL byte-level BPE counts
-    # (bpe_tokenize); without, the regex pre-token bound (bpe_token_count).
-    if max_tokens > 0:
-        from .operators.packing import take_token_budget
-        from .operators.text import bpe_token_count, bpe_tokenize
-
-        if token_merges is not None:
-            tok = bpe_tokenize(
-                out.select(id_col, text_col), token_merges, text_col, id_col,
-                n_special_per_doc=n_special_per_doc,
-            ).select(
-                id_col, F.col("n_tokens").alias("budget_tokens")
+            surv_emb = unit_normalize(
+                embeddings.join(cur2.select(id_col), id_col), embedding_col
             )
-            out = out.join(tok, id_col, "left").withColumn(
-                "budget_tokens",
-                F.coalesce(
-                    F.col("budget_tokens"), F.lit(int(n_special_per_doc))
-                ),
+            sem_pairs = semantic_dup_pairs(
+                surv_emb,
+                min_cosine=semantic_min_cosine,
+                n_cells=semantic_cells,
+                id_col=id_col,
+                vec_col=embedding_col,
             )
-        else:
-            out = out.withColumn(
-                "budget_tokens",
-                F.coalesce(bpe_token_count(F.col(text_col)), F.lit(0))
-                + F.lit(int(n_special_per_doc)),
+            sem_groups = near_dup_groups(sem_pairs, "id_a", "id_b")
+            sem_losers = sem_groups.filter(F.col("id") != F.col("group_id")).select(
+                F.col("id").alias(id_col)
             )
-        out = take_token_budget(out, max_tokens, "budget_tokens", "seq")
+            cur2 = cur2.join(sem_losers, id_col, "left_anti")
+            if stage_counts:
+                counts["semantic_dedup"] = cur2.count()
+
+        # 3. quality gate. The survivors are checkpointed lazily: their count
+        # (or, without stage counts, the interleave's range sample) fills the
+        # checkpoint, and every later stage — the range shuffle included —
+        # reads it instead of re-running the feature plan.
+        scored = quality_features(cur2, text_col)
+        kept = scored.filter(F.col("quality_score") >= min_quality).localCheckpoint(
+            eager=False
+        )
         if stage_counts:
-            counts["token_budget"] = out.count()
+            counts["quality"] = kept.count()
+
+        # 3b. optional learned quality classifier (fastText-style filter —
+        # runs after the heuristic gate so the scoring scan sees fewer rows)
+        if quality_model is not None:
+            from .operators.classifier import score_quality
+
+            probs = score_quality(kept, quality_model, text_col, id_col).select(
+                id_col, "quality_prob"
+            )
+            kept = kept.join(probs, id_col).filter(
+                F.col("quality_prob") >= min_classifier_prob
+            ).drop("quality_prob")
+            if stage_counts:
+                counts["classifier"] = kept.count()
+
+        # 4. language filter
+        if keep_langs:
+            kept = language_scores(kept, text_col).filter(
+                F.col("predicted_lang").isin(list(keep_langs))
+            )
+            if stage_counts:
+                counts["language"] = kept.count()
+
+        # 4b. optional DSIR importance resampling toward a target corpus —
+        # runs LAST among the filters (weights are only worth computing on
+        # rows that survived everything else) and before the interleave so
+        # the shard/order layout sees the final selection. Log-space A-ES
+        # keeps the DSIR log-likelihood ratios from ever exponentiating.
+        if dsir_target is not None and dsir_keep > 0:
+            from .operators.sampling import dsir_weights, weighted_sample_exact
+
+            wts = dsir_weights(
+                kept.select(id_col, text_col),
+                dsir_target,
+                text_col,
+                id_col,
+                buckets=dsir_buckets,
+            )
+            chosen = weighted_sample_exact(
+                wts,
+                dsir_keep,
+                "log_weight",
+                id_col,
+                seed=dsir_seed,
+                log_space=True,
+            ).select(id_col)
+            kept = kept.join(chosen, id_col, "left_semi")
+            if stage_counts:
+                counts["dsir"] = kept.count()
+
+        # 5. deterministic interleave (+ optional sharding)
+        out = (
+            shard_assignments(kept, n_shards, id_col)
+            if n_shards > 0
+            else global_shuffle(kept, id_col)
+        )
+
+        # 5b. optional token-denominated corpus cap: keep the maximal PREFIX
+        # of the deterministic interleave whose token total fits max_tokens —
+        # exact and rerun-stable because seq is a pure function of the data.
+        # With token_merges the budget is REAL byte-level BPE counts
+        # (bpe_tokenize); without, the regex pre-token bound (bpe_token_count).
+        if max_tokens > 0:
+            from .operators.packing import take_token_budget
+            from .operators.text import bpe_token_count, bpe_tokenize
+
+            if token_merges is not None:
+                tok = bpe_tokenize(
+                    out.select(id_col, text_col), token_merges, text_col, id_col,
+                    n_special_per_doc=n_special_per_doc,
+                ).select(
+                    id_col, F.col("n_tokens").alias("budget_tokens")
+                )
+                out = out.join(tok, id_col, "left").withColumn(
+                    "budget_tokens",
+                    F.coalesce(
+                        F.col("budget_tokens"), F.lit(int(n_special_per_doc))
+                    ),
+                )
+            else:
+                out = out.withColumn(
+                    "budget_tokens",
+                    F.coalesce(bpe_token_count(F.col(text_col)), F.lit(0))
+                    + F.lit(int(n_special_per_doc)),
+                )
+            out = take_token_budget(out, max_tokens, "budget_tokens", "seq")
+            if stage_counts:
+                counts["token_budget"] = out.count()
 
     # 6. optional deterministic train/val/test split (post-dedup, so a
     # per-id draw is leakage-safe — see docstring)

@@ -745,12 +745,7 @@ def llm_ngram_jaccard(spark, sf):
     pairs = jaccard_similarity_pairs(
         _twin_corpus(d), "doc_id", "text", minhash_block=True
     )
-    out = pairs.select("id_a", "id_b", "n_inter", "n_union")
-    # .select() returns a NEW DataFrame object — re-attach the persist
-    # release handle or the blocked-signature cache leaks for the session
-    # (leaked CacheManager entries tax every later query's analysis)
-    out._mf_persisted = getattr(pairs, "_mf_persisted", None)
-    return out
+    return pairs.select("id_a", "id_b", "n_inter", "n_union")
 
 
 @query(
@@ -833,12 +828,7 @@ def llm_prefix_jaccard(spark, sf):
     pairs = prefix_filter_pairs(
         _twin_corpus(d), "doc_id", "text", min_jaccard=0.7
     )
-    out = pairs.select("id_a", "id_b", "n_inter", "n_union", "jaccard")
-    # re-attach the release handle across the projection (see
-    # llm_ngram_jaccard): prefix_filter_pairs pins base+pref and hands
-    # back a _MultiHandle the bench must be able to release
-    out._mf_persisted = getattr(pairs, "_mf_persisted", None)
-    return out
+    return pairs.select("id_a", "id_b", "n_inter", "n_union", "jaccard")
 
 
 @query(
@@ -4840,9 +4830,7 @@ def llm_domain_pagerank(spark, sf):
     )
     edges = e1.unionAll(e2.to_spark())
     pr = pagerank(edges, n_iter=2, damping=0.85)
-    out = pr.select("node", F.round("pr", 6).alias("pr"))
-    out._mf_persisted = getattr(pr, "_mf_persisted", None)
-    return out
+    return pr.select("node", F.round("pr", 6).alias("pr"))
 
 
 #: the redistribute-mode sweep: identical to _PR_STEP_SQL plus the
@@ -4907,9 +4895,7 @@ def llm_pagerank_redistribute(spark, sf):
     )
     edges = e1.unionAll(e2.to_spark())
     pr = pagerank(edges, n_iter=2, damping=0.85, dangling="redistribute")
-    out = pr.select("node", F.round("pr", 6).alias("pr"))
-    out._mf_persisted = getattr(pr, "_mf_persisted", None)
-    return out
+    return pr.select("node", F.round("pr", 6).alias("pr"))
 
 
 @query(
@@ -7987,7 +7973,7 @@ def llm_pack_tokens(spark, sf):
     d = load_table(spark, sf, "documents").to_spark()
     ids = d.select("doc_id", hashed_token_ids("text").alias("ids"))
     packed = pack_token_arrays(ids, 512, "ids")
-    out = packed.select(
+    return packed.select(
         "seq_id",
         "n_docs",
         "n_tokens",
@@ -7998,11 +7984,6 @@ def llm_pack_tokens(spark, sf):
             "concat_ws(',', transform(segment_ids, x -> cast(x as string)))"
         ).alias("segment_ids"),
     )
-    # re-attach the persist release handle across the projection (see
-    # llm_ngram_jaccard): .select() returns a NEW DataFrame object and
-    # bench/verify must still be able to unpersist the token relation
-    out._mf_persisted = getattr(packed, "_mf_persisted", None)
-    return out
 
 
 
@@ -8296,609 +8277,3 @@ def llm_centroid_drift(spark, sf):
         e.filter(F.col("vec_id") % 2 == 1),
         "label",
     )
-
-
-
-# -- driver-window registration rotation (round 7) ----------------------------
-#
-# The driver's per-round CORRECTNESS check covers exactly the FIRST 50 keys
-# of this catalog in registration order (verified r4/r5/r6: identical key
-# sets, equal to the first-50 prefix).  q01..q31_asof plus the first 18
-# ``llm_*`` entries carry six rounds of green driver rows already; the 48
-# registered after them have only ever been blessed by the local
-# driver-replica oracle (tests/test_oracle.py, same DuckDB compare at the
-# same sf).  Rotating the registration order is the only lever that moves
-# the driver's window, so: entries listed in ``_ROTATE_FIRST`` (newly added
-# this round — never checked anywhere before) go first, then every other
-# never-driver-blessed entry in its original relative order, then the
-# long-blessed block.  Behavior of every entry is unchanged — this reorders
-# two dicts.
-_R6_DRIVER_BLESSED = frozenset(
-    [f"q{i:02d}" for i in range(1, 31)]
-    + [
-        "q19b",
-        "q31_asof",
-        "llm_exact_dedup",
-        "llm_quality",
-        "llm_lang_id",
-        "llm_fingerprint",
-        "llm_ngram_jaccard",
-        "llm_cosine_topk",
-        "llm_minhash_pairs",
-        "llm_simhash_pairs",
-        "llm_ann_topk",
-        "llm_multimodal_extract",
-        "llm_token_count",
-        "llm_chunks",
-        "llm_neardup_groups",
-        "llm_ivf_topk",
-        "llm_pii_mask",
-        "llm_repetition",
-        "llm_multimodal_resize",
-        "llm_multimodal_frames",
-    ]
-)
-
-# Keys with a green row in CORRECTNESS_r07.json (the r7 driver window) —
-# folded into the blessed set per the round-8 rotation plan.
-_R7_DRIVER_BLESSED = frozenset(
-    [
-        "llm_semantic_dedup",
-        "q61_profile_extended",
-        "q32_sessionize",
-        "llm_cosine_dups",
-        "q33_resample",
-        "q34_pivot",
-        "q35_explode",
-        "q36_from_json",
-        "q37_higher_order",
-        "q38_regexp_extract",
-        "q39_map_funcs",
-        "q40_salted_agg",
-        "llm_dedup_incremental",
-        "llm_stratified_sample",
-        "llm_decontaminate",
-        "llm_vocab",
-        "llm_quantize",
-        "llm_global_shuffle",
-        "q41_percentiles",
-        "q42_grouping_sets",
-        "q43_ffill",
-        "llm_tfidf",
-        "llm_bm25",
-        "q44_fuzzy_match",
-        "q45_funnel",
-        "q46_retention",
-        "q47_rank_funcs",
-        "q48_percentiles_dist",
-        "q49_unpivot",
-        "llm_char_entropy",
-        "q50_rolling",
-        "q51_conditional_agg",
-        "llm_corpus_stats",
-        "q52_string_funcs",
-        "q53_date_funcs",
-        "q54_pk_broadcast_join",
-        "llm_c4_lines",
-        "llm_gopher_flags",
-        "llm_span_dedup",
-        "llm_pack_sequences",
-        "llm_mixture_sample",
-        "llm_perplexity",
-        "q55_merge_upsert",
-        "q56_scd2",
-        "llm_hash_split",
-        "q57_array_funcs",
-        "q58_profile",
-        "q59_time_funcs",
-        "q60_conditional_expr",
-        "llm_bigram_nll",
-    ]
-)
-
-# Keys with a green row in CORRECTNESS_r08.json (the r8 driver window, 50/50
-# green) — folded into the blessed set per the round-9 rotation plan.
-_R8_DRIVER_BLESSED = frozenset(
-    [f"q{i:02d}" for i in range(1, 13)]
-    + [
-        "q62_null_safe_join",
-        "q63_map_hof",
-        "q64_salted_join",
-        "q65_bitwise",
-        "q66_string_agg",
-        "q67_variant",
-        "q68_interpolate",
-        "q69_snapshot_diff",
-        "q70_stats_agg",
-        "q71_interval_join",
-        "q72_bitmap_distinct",
-        "q73_gapfill",
-        "q74_posexplode",
-        "q75_try_funcs",
-        "q76_regex_funcs",
-        "q77_minmax_by",
-        "q78_asof_nearest",
-        "q79_set_ops_all",
-        "q80_sort_nulls",
-        "q81_cogroup",
-        "q82_make_datetime",
-        "q83_union_by_name",
-        "q84_json_array",
-        "llm_bloom_decontaminate",
-        "llm_dedup_keep_best",
-        "llm_domain_cap",
-        "llm_domain_pagerank",
-        "llm_html_extract",
-        "llm_html_links",
-        "llm_label_centroids",
-        "llm_mix_report",
-        "llm_neardup_incremental",
-        "llm_psl_domains",
-        "llm_quality_classifier",
-        "llm_text_clean",
-        "llm_url_canonical",
-        "llm_url_features",
-        "llm_weighted_sample",
-    ]
-)
-
-_R9_DRIVER_BLESSED = frozenset(
-    [
-        "llm_ann_topk",
-        "llm_chunks",
-        "llm_cosine_topk",
-        "llm_exact_dedup",
-        "llm_fingerprint",
-        "llm_ivf_topk",
-        "llm_lang_id",
-        "llm_minhash_pairs",
-        "llm_minhash_store",
-        "llm_multimodal_extract",
-        "llm_multimodal_frames",
-        "llm_multimodal_resize",
-        "llm_neardup_groups",
-        "llm_ngram_jaccard",
-        "llm_pagerank_redistribute",
-        "llm_pii_mask",
-        "llm_quality",
-        "llm_repetition",
-        "llm_simhash_pairs",
-        "llm_token_count",
-        "q01",
-        "q02",
-        "q03",
-        "q04",
-        "q05",
-        "q06",
-        "q13",
-        "q14",
-        "q15",
-        "q16",
-        "q17",
-        "q18",
-        "q19",
-        "q19b",
-        "q20",
-        "q21",
-        "q22",
-        "q23",
-        "q24",
-        "q25",
-        "q26",
-        "q27",
-        "q28",
-        "q29",
-        "q30",
-        "q31_asof",
-        "q85_hll_sketch",
-        "q86_blocklist_antijoin",
-        "q87_moments_store",
-        "q88_histogram_quantiles",
-    ]
-)
-
-# Keys with a green row in CORRECTNESS_r10.json (the r10 driver window, 50/50
-# green) — folded into the blessed set per the round-10 rotation note.
-_R10_DRIVER_BLESSED = frozenset(
-    [
-        "q89_heavy_hitters",
-        "q91_heavy_hitters_pruned",
-        "llm_ivf_store",
-        "llm_ivf_corpus",
-        "llm_ivf_sq",
-        "q90_sketch_compact",
-        "q92_drift_psi",
-        "q93_expectations",
-        "q94_bottomk_sample",
-        "llm_prefix_jaccard",
-        "q32_sessionize",
-        "q33_resample",
-        "q34_pivot",
-        "q35_explode",
-        "q36_from_json",
-        "q37_higher_order",
-        "q38_regexp_extract",
-        "q39_map_funcs",
-        "q40_salted_agg",
-        "q41_percentiles",
-        "q42_grouping_sets",
-        "q43_ffill",
-        "q44_fuzzy_match",
-        "q45_funnel",
-        "q46_retention",
-        "q47_rank_funcs",
-        "q48_percentiles_dist",
-        "q49_unpivot",
-        "q50_rolling",
-        "q51_conditional_agg",
-        "q52_string_funcs",
-        "q53_date_funcs",
-        "q54_pk_broadcast_join",
-        "q55_merge_upsert",
-        "q56_scd2",
-        "q57_array_funcs",
-        "q58_profile",
-        "q59_time_funcs",
-        "q60_conditional_expr",
-        "q61_profile_extended",
-        "llm_semantic_dedup",
-        "llm_span_dedup",
-        "llm_decontaminate",
-        "llm_dedup_incremental",
-        "llm_cosine_dups",
-        "llm_quantize",
-        "llm_vocab",
-        "llm_tfidf",
-        "llm_bm25",
-        "llm_perplexity",
-    ]
-)
-
-# Keys with a green row in CORRECTNESS_r11.json (the r11 driver window, 50/50
-# green) — folded into the blessed set per the round-11 rotation note.
-_R11_DRIVER_BLESSED = frozenset(
-    [
-        "llm_audio_neardup",
-        "llm_bigram_nll",
-        "llm_c4_lines",
-        "llm_char_entropy",
-        "llm_containment",
-        "llm_corpus_stats",
-        "llm_dup_report",
-        "llm_global_shuffle",
-        "llm_gopher_flags",
-        "llm_hash_split",
-        "llm_image_neardup",
-        "llm_ivf_append",
-        "llm_mixture_sample",
-        "llm_pack_sequences",
-        "llm_rep_signals",
-        "llm_semantic_against",
-        "llm_stratified_sample",
-        "llm_video_neardup",
-        "llm_winnow",
-        "q07",
-        "q08",
-        "q09",
-        "q10",
-        "q11",
-        "q12",
-        "q62_null_safe_join",
-        "q63_map_hof",
-        "q64_salted_join",
-        "q65_bitwise",
-        "q66_string_agg",
-        "q67_variant",
-        "q68_interpolate",
-        "q69_snapshot_diff",
-        "q70_stats_agg",
-        "q71_interval_join",
-        "q72_bitmap_distinct",
-        "q73_gapfill",
-        "q74_posexplode",
-        "q75_try_funcs",
-        "q76_regex_funcs",
-        "q77_minmax_by",
-        "q78_asof_nearest",
-        "q79_set_ops_all",
-        "q80_sort_nulls",
-        "q81_cogroup",
-        "q95_anomaly_rules",
-        "q96_drift_from_store",
-        "q97_anomaly_kmv",
-        "q98_cms_counts",
-        "q99_kmv_overlap",
-    ]
-)
-
-_R12_DRIVER_BLESSED = frozenset(
-    {
-        # CORRECTNESS_r12.json — all 50 window rows green (rows+schema+hash)
-        "llm_ann_topk",
-        "llm_bloom_decontaminate",
-        "llm_bpe_chunks",
-        "llm_bpe_fertility",
-        "llm_bpe_tokens",
-        "llm_chunks",
-        "llm_cosine_topk",
-        "llm_dedup_keep_best",
-        "llm_domain_cap",
-        "llm_domain_pagerank",
-        "llm_dsir_weights",
-        "llm_exact_dedup",
-        "llm_fingerprint",
-        "llm_html_extract",
-        "llm_html_links",
-        "llm_ivf_topk",
-        "llm_label_centroids",
-        "llm_lang_id",
-        "llm_minhash_pairs",
-        "llm_minhash_store",
-        "llm_mix_report",
-        "llm_multimodal_extract",
-        "llm_multimodal_frames",
-        "llm_multimodal_resize",
-        "llm_neardup_groups",
-        "llm_neardup_incremental",
-        "llm_ngram_jaccard",
-        "llm_pagerank_redistribute",
-        "llm_pii_mask",
-        "llm_psl_domains",
-        "llm_quality",
-        "llm_quality_classifier",
-        "llm_repetition",
-        "llm_simhash_pairs",
-        "llm_substring_dedup",
-        "llm_text_clean",
-        "llm_token_count",
-        "llm_url_canonical",
-        "llm_url_features",
-        "llm_weighted_sample",
-        "q13",
-        "q14",
-        "q31_asof",
-        "q82_make_datetime",
-        "q83_union_by_name",
-        "q84_json_array",
-        "q85_hll_sketch",
-        "q86_blocklist_antijoin",
-        "q87_moments_store",
-        "q88_histogram_quantiles",
-    }
-)
-
-_R13_DRIVER_BLESSED = frozenset(
-    {
-        # CORRECTNESS_r13.json — all 50 window rows green (rows+schema+hash)
-        "llm_token_budget",
-        "llm_pack_documents",
-        "llm_bpe_chunks_special",
-        "llm_pq_topk",
-        "llm_ivf_pq",
-        "llm_rp_project",
-        "llm_pack_report",
-        "q01",
-        "q02",
-        "q03",
-        "q04",
-        "q05",
-        "q06",
-        "q15",
-        "q16",
-        "q17",
-        "q18",
-        "q19",
-        "q19b",
-        "q20",
-        "q21",
-        "q22",
-        "q23",
-        "q24",
-        "q25",
-        "q26",
-        "q27",
-        "q28",
-        "q29",
-        "q30",
-        "llm_semantic_dedup",
-        "llm_dedup_incremental",
-        "llm_ivf_corpus",
-        "llm_ivf_sq",
-        "llm_ivf_store",
-        "llm_prefix_jaccard",
-        "llm_quantize",
-        "llm_cosine_dups",
-        "llm_decontaminate",
-        "llm_span_dedup",
-        "llm_bm25",
-        "llm_tfidf",
-        "llm_vocab",
-        "llm_perplexity",
-        "q32_sessionize",
-        "q33_resample",
-        "q34_pivot",
-        "q35_explode",
-        "q36_from_json",
-        "q37_higher_order",
-    }
-)
-
-_DRIVER_BLESSED = (
-    _R6_DRIVER_BLESSED
-    | _R7_DRIVER_BLESSED
-    | _R8_DRIVER_BLESSED
-    | _R9_DRIVER_BLESSED
-    | _R10_DRIVER_BLESSED
-    | _R11_DRIVER_BLESSED
-    | _R12_DRIVER_BLESSED
-    | _R13_DRIVER_BLESSED
-)
-
-# New-this-round entries to pin at the very front of the driver window.
-#
-# ROUND-14 ROTATION (executing the r13 note / VERDICT r13 next-#1): every
-# key's latest driver check is now r10 (30 keys), r11 (50), r12 (50) or
-# r13 (50) — cumulative blessing 180/180 with zero latest-check failures.
-# The round-14 window is: round-14 additions (never driver-checked)
-# first, then the THIRTY r10-blessed keys that overflowed the r13 window
-# (last driver-checked r10: q38..q61, q89..q94), then the next-oldest
-# blessed block — the r11 wave (last driver-checked r11) with the heavier
-# multi-stage llm_* operators first. Keys past slot 50 overflow to round
-# 15 — cheapest/most-stable at the tail.
-#
-# ROUND-15 NOTE (execute at the start of round 15): fold every key with a
-# green row in CORRECTNESS_r14.json into a `_R14_DRIVER_BLESSED`
-# frozenset (union into `_DRIVER_BLESSED`), reset `_ROTATE_FIRST` to
-# round-15 additions + the FOUR remaining r10-stale keys
-# (q91_heavy_hitters_pruned, q92_drift_psi, q93_expectations,
-# q94_bottomk_sample — the TWENTY-FOUR r14 additions + 26 r10
-# re-checks fill all 50 slots this round, so they overflowed)
-# + the FIFTY
-# r11-blessed keys (the whole r11 wave, still last-driver-checked r11:
-# llm_winnow, llm_rep_signals,
-# llm_ivf_append, llm_semantic_against,
-# llm_pack_sequences,
-# llm_containment, llm_video_neardup,
-# llm_image_neardup, llm_audio_neardup, llm_global_shuffle,
-# llm_hash_split,
-# llm_stratified_sample, llm_mixture_sample, llm_dup_report,
-# llm_corpus_stats, llm_gopher_flags, llm_c4_lines, llm_char_entropy,
-# llm_bigram_nll, q07, q08, q09, q10, q11, q12, q62_null_safe_join,
-# q63_map_hof, q64_salted_join, q65_bitwise, q66_string_agg,
-# q67_variant, q68_interpolate, q69_snapshot_diff, q70_stats_agg,
-# q71_interval_join, q72_bitmap_distinct, q73_gapfill, q74_posexplode,
-# q75_try_funcs, q76_regex_funcs, q77_minmax_by, q78_asof_nearest,
-# q79_set_ops_all, q80_sort_nulls, q81_cogroup, q95_anomaly_rules,
-# q96_drift_from_store, q97_anomaly_kmv, q98_cms_counts,
-# q99_kmv_overlap), then the r12 wave (last driver-checked r12) as the
-# next-oldest block.
-_ROTATE_FIRST: list = [
-    # round-14 additions (never driver-checked before) are prepended here
-    # as they are implemented — see the registrations below.
-    "llm_zipf_fit",
-    "llm_secrets_scan",
-    "llm_mojibake",
-    "llm_triplets",
-    "llm_rrf_fusion",
-    "llm_pack_tokens",
-    "llm_temperature_mix",
-    "llm_source_quality",
-    "llm_distinctive_terms",
-    "llm_length_ks",
-    "llm_embed_pool",
-    "llm_centroid_drift",
-    "llm_corpus_overlap",
-    "llm_curriculum",
-    "llm_dynamic_batches",
-    "llm_novelty",
-    "llm_prototype_prune",
-    "llm_quality_sweep",
-    "llm_vocab_drift",
-    "llm_pq_refine",
-    "llm_ann_recall",
-    "llm_neardup_sweep",
-    "llm_refine_sweep",
-    "llm_mixture_plan",
-    # stalest re-checks: the r10 wave that overflowed the r13 window
-    # (last driver-checked r10)
-    "q38_regexp_extract",
-    "q39_map_funcs",
-    "q40_salted_agg",
-    "q41_percentiles",
-    "q42_grouping_sets",
-    "q43_ffill",
-    "q44_fuzzy_match",
-    "q45_funnel",
-    "q46_retention",
-    "q47_rank_funcs",
-    "q48_percentiles_dist",
-    "q49_unpivot",
-    "q50_rolling",
-    "q51_conditional_agg",
-    "q52_string_funcs",
-    "q53_date_funcs",
-    "q54_pk_broadcast_join",
-    "q55_merge_upsert",
-    "q56_scd2",
-    "q57_array_funcs",
-    "q58_profile",
-    "q59_time_funcs",
-    "q60_conditional_expr",
-    "q61_profile_extended",
-    "q89_heavy_hitters",
-    "q90_sketch_compact",
-    # tail: slot 50 ends at q90_sketch_compact (24 r14 additions +
-    # 26 r10) — everything below overflows to round 15, including the
-    # four remaining r10-stale keys q91_heavy_hitters_pruned,
-    # q92_drift_psi, q93_expectations, q94_bottomk_sample
-    "q91_heavy_hitters_pruned",
-    "q92_drift_psi",
-    "q93_expectations",
-    "q94_bottomk_sample",
-    # next-oldest blessed block: the r11 wave (last driver-checked r11) —
-    # llm_* first (the heavier multi-stage operators where a re-check
-    # carries the most information), then the relational q-entries
-    "llm_winnow",
-    "llm_rep_signals",
-    "llm_ivf_append",
-    "llm_semantic_against",
-    "llm_pack_sequences",
-    "llm_containment",
-    "llm_video_neardup",
-    "llm_image_neardup",
-    "llm_audio_neardup",
-    "llm_global_shuffle",
-    "llm_hash_split",
-    "llm_stratified_sample",
-    "llm_mixture_sample",
-    "llm_dup_report",
-    "llm_corpus_stats",
-    "llm_gopher_flags",
-    "llm_c4_lines",
-    "llm_char_entropy",
-    "llm_bigram_nll",
-    "q07",
-    "q08",
-    "q09",
-    "q10",
-    "q11",
-    "q12",
-    "q62_null_safe_join",
-    "q63_map_hof",
-    "q64_salted_join",
-    "q65_bitwise",
-    "q66_string_agg",
-    "q67_variant",
-    "q68_interpolate",
-    "q69_snapshot_diff",
-    "q70_stats_agg",
-    "q71_interval_join",
-    "q72_bitmap_distinct",
-    "q73_gapfill",
-    "q74_posexplode",
-    "q75_try_funcs",
-    "q76_regex_funcs",
-    "q77_minmax_by",
-    "q78_asof_nearest",
-    "q79_set_ops_all",
-    "q80_sort_nulls",
-    "q81_cogroup",
-    "q95_anomaly_rules",
-    "q96_drift_from_store",
-    "q97_anomaly_kmv",
-    "q98_cms_counts",
-    "q99_kmv_overlap",
-]
-
-
-def _rotate_registration() -> None:
-    front = [k for k in _ROTATE_FIRST if k in QUERIES]
-    fresh = [k for k in QUERIES if k not in _DRIVER_BLESSED and k not in front]
-    order = front + fresh + [k for k in QUERIES if k in _DRIVER_BLESSED]
-    for d in (QUERIES, ORACLE):
-        snap = {k: d[k] for k in order if k in d}
-        d.clear()
-        d.update(snap)
-
-
-_rotate_registration()

@@ -11,7 +11,8 @@ builder is used with ``master`` unset (taken from spark-submit) and
 from __future__ import annotations
 
 import os
-from typing import Optional
+from contextlib import contextmanager
+from typing import Iterator, Optional
 
 from pyspark.sql import SparkSession
 
@@ -57,3 +58,40 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def persist_scope(spark: SparkSession) -> Iterator[None]:
+    """Release, on exit, every plan cached in ``spark``'s CacheManager
+    inside the block.
+
+    Operators ``persist()`` intermediates their plans read more than once
+    and leave them cached, so the consuming action reads the cache. Wrap
+    construction AND the consuming action::
+
+        with persist_scope(spark):
+            out = simhash_near_dup_pairs(docs, "doc_id", "text")
+            rows = out.collect()
+
+    Entries cached before the block are left alone. Each new entry is
+    dropped with ``uncacheQuery(cascade=False, blocking=False)`` — the
+    same non-blocking release ``DataFrame.unpersist()`` does — newest
+    first, so a dependent cache goes before the cache it reads. The
+    CacheManager is shared by every session of the application: a plan
+    another thread caches while the block runs is released too.
+    """
+    jss = spark._jsparkSession
+    manager = jss.sharedState().cacheManager()
+    identity = spark._jvm.java.lang.System.identityHashCode
+
+    def entries():
+        data = manager.cachedData()
+        return [data.apply(i) for i in range(data.size())]
+
+    before = {identity(e) for e in entries()}
+    try:
+        yield
+    finally:
+        for e in entries():
+            if identity(e) not in before:
+                manager.uncacheQuery(jss, e.plan(), False, False)

@@ -913,11 +913,12 @@ def stream_semantic_dedup(
     the no-crash result. Returns the started ``StreamingQuery``
     (availableNow)."""
     from ..operators.dedup import (
+        _semantic_dup_against,
         dedup_survivors,
-        semantic_dup_against,
         semantic_dup_pairs,
     )
     from ..operators.similarity import _prepare_ivf_delta
+    from ..session import persist_scope
 
     root = corpus_path.rstrip("/")
 
@@ -962,36 +963,38 @@ def stream_semantic_dedup(
                         fs.delete(f_st.getPath(), False)
             fs.delete(P(staging), True)
         batch = batch_df.select(id_col, vec_col)
-        pairs = semantic_dup_pairs(
-            batch,
-            min_cosine=min_cosine,
-            n_cells=within_cells,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        local = dedup_survivors(batch, pairs, id_col=id_col)
-        hits = semantic_dup_against(
-            spark,
-            corpus_path,
-            local,
-            min_cosine=min_cosine,
-            new_id=id_col,
-            seen_id=id_col,
-            vec_col=vec_col,
-            format=format,
-        )
-        dead = hits.select(F.col("new_id").alias(id_col)).distinct()
-        survivors = local.join(dead, id_col, "left_anti").persist()
-        try:
+        # every cache this batch pins (the within-batch pairs, the
+        # dup-check's cell assignment, the survivors) is released when
+        # the batch ends, committed or not
+        with persist_scope(spark):
+            pairs = semantic_dup_pairs(
+                batch,
+                min_cosine=min_cosine,
+                n_cells=within_cells,
+                id_col=id_col,
+                vec_col=vec_col,
+            )
+            local = dedup_survivors(batch, pairs, id_col=id_col)
+            hits, assigned = _semantic_dup_against(
+                spark,
+                corpus_path,
+                local,
+                min_cosine=min_cosine,
+                new_id=id_col,
+                seen_id=id_col,
+                vec_col=vec_col,
+                format=format,
+            )
+            dead = hits.select(F.col("new_id").alias(id_col)).distinct()
+            survivors = local.join(dead, id_col, "left_anti").persist()
             survivors.write.mode("overwrite").format(format).save(
                 out_path.rstrip("/") + f"/batch={batch_id}"
             )
-            # reuse the assignment the dup-check already paid for: hits'
+            # reuse the assignment the dup-check already paid for: its
             # pinned relation holds (id, vec, _cell) for the WHOLE batch
             # against this layout's own centroids, so the delta joins it
             # instead of re-running the assignment GEMM over the survivors
             # (r11 self-review)
-            batch_cells = getattr(hits, "_mf_persisted", None)
             _commit_ivf_delta(
                 spark,
                 corpus_path,
@@ -999,23 +1002,11 @@ def stream_semantic_dedup(
                 lambda: _prepare_ivf_delta(
                     spark, corpus_path, survivors,
                     vec_col=vec_col, format=format,
-                    cells=(
-                        batch_cells.select(id_col, "_cell")
-                        if batch_cells is not None
-                        else None
-                    ),
-                    cells_on=id_col if batch_cells is not None else None,
+                    cells=assigned.select(id_col, "_cell"),
+                    cells_on=id_col,
                 ),
                 format=format,
             )
-        finally:
-            survivors.unpersist()
-            for h in (
-                getattr(pairs, "_mf_persisted", None),
-                getattr(hits, "_mf_persisted", None),
-            ):
-                if h is not None:
-                    h.unpersist()
 
     writer = (
         stream.to_spark() if isinstance(stream, MetaFrame) else stream

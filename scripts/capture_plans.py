@@ -24,7 +24,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from metaframe_spark.queries import QUERIES
-    from metaframe_spark.session import get_session
+    from metaframe_spark.session import get_session, persist_scope
 
     spark = get_session("capture_plans")
     outdir = Path(_REPO) / "plans" / os.environ.get("PLANS_DIR", "r15")
@@ -32,16 +32,14 @@ def main() -> int:
     names = sorted(only & set(QUERIES) if only else QUERIES)
     for name in names:
         try:
-            df = QUERIES[name](spark, sf_dir)
-            raw = df.to_spark() if hasattr(df, "to_spark") else df
-            plan = raw._jdf.queryExecution().explainString(
-                raw._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
+            with persist_scope(spark):
+                df = QUERIES[name](spark, sf_dir)
+                raw = df.to_spark() if hasattr(df, "to_spark") else df
+                plan = raw._jdf.queryExecution().explainString(
+                    raw._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                        "formatted"
+                    )
                 )
-            )
-            handle = getattr(df, "_mf_persisted", None)
-            if handle is not None:
-                handle.unpersist()
         except Exception as exc:  # noqa: BLE001 — record the failure
             plan = f"PLAN CAPTURE FAILED: {exc!r}\n"
         (outdir / f"{name}_{suffix}.txt").write_text(plan)

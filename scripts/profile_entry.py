@@ -23,7 +23,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from metaframe_spark.queries import QUERIES
-    from metaframe_spark.session import get_session
+    from metaframe_spark.session import get_session, persist_scope
 
     spark = get_session("profile_entry")
     sc = spark.sparkContext
@@ -36,27 +36,22 @@ def main() -> int:
         fn = QUERIES[name]
         # warm
         t0 = time.monotonic()
-        df = fn(spark, sf_dir)
-        t_cons_warm = time.monotonic() - t0
-        raw = df.to_spark() if hasattr(df, "to_spark") else df
-        raw.write.format("noop").mode("overwrite").save()
-        h = getattr(df, "_mf_persisted", None)
-        if h is not None:
-            h.unpersist()
+        with persist_scope(spark):
+            df = fn(spark, sf_dir)
+            raw = df.to_spark() if hasattr(df, "to_spark") else df
+            raw.write.format("noop").mode("overwrite").save()
         t_warm = time.monotonic() - t0
         best = []
         for _ in range(repeat):
             sc.setJobGroup(f"prof-{name}", name)
             j0 = sc.statusTracker().getJobIdsForGroup(f"prof-{name}")
             t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            t_cons = time.monotonic() - t0
-            raw = df.to_spark() if hasattr(df, "to_spark") else df
-            raw.write.format("noop").mode("overwrite").save()
-            t_total = time.monotonic() - t0
-            h = getattr(df, "_mf_persisted", None)
-            if h is not None:
-                h.unpersist()
+            with persist_scope(spark):
+                df = fn(spark, sf_dir)
+                t_cons = time.monotonic() - t0
+                raw = df.to_spark() if hasattr(df, "to_spark") else df
+                raw.write.format("noop").mode("overwrite").save()
+                t_total = time.monotonic() - t0
             j1 = sc.statusTracker().getJobIdsForGroup(f"prof-{name}")
             best.append((t_total, t_cons, len(j1) - len(j0)))
             sc.setJobGroup(None, None)

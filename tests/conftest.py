@@ -9,7 +9,7 @@ import pytest
 # pyproject.toml this insert is a harmless no-op.
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from metaframe_spark.session import get_session  # noqa: E402
+from metaframe_spark.session import get_session, persist_scope  # noqa: E402
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 
@@ -70,6 +70,21 @@ def spark_jobs(spark):
         return result, list(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def cached_plans(spark):
+    """``cached_plans() -> int``: entries in the session's CacheManager."""
+    manager = spark._jsparkSession.sharedState().cacheManager()
+    return lambda: manager.cachedData().size()
+
+
+@pytest.fixture
+def scoped(spark):
+    """Run the test inside ``persist_scope(spark)``: every plan it caches
+    is released when it ends."""
+    with persist_scope(spark):
+        yield
 
 
 @pytest.fixture(scope="session")

@@ -85,11 +85,6 @@ def compare(spark_df, con, sql: str) -> dict:
     import pandas as pd  # noqa: F401
 
     sp = spark_df.toPandas()
-    # release operator-persisted intermediates (e.g. minhash's hashed-shingle
-    # relation) now that the plan has run — see dedup.minhash_near_dup_pairs
-    handle = getattr(spark_df, "_mf_persisted", None)
-    if handle is not None:
-        handle.unpersist()
     du = con.execute(sql).fetchdf()
     n1, c1, h1 = _normalize(sp)
     n2, c2, h2 = _normalize(du)

@@ -19,6 +19,7 @@ from metaframe_spark.operators import (
     unit_normalize,
 )
 from metaframe_spark.operators.similarity import ann_topk
+from metaframe_spark.session import persist_scope
 
 SF = "/root/testdata/sf0.001"
 
@@ -264,18 +265,19 @@ class TestMinHashVerified:
         assert got == want
         assert len(want) >= 8  # the injected twins are all in the truth set
 
-    def test_auto_releases_shingle_cache(self, spark, docs):
+    def test_auto_releases_shingle_cache(self, spark, docs, cached_plans):
         """The operator localCheckpoints its result and unpersists the
-        hashed-shingle cache itself (VERDICT r5 #5) — no ``_mf_persisted``
-        caller contract, no persisted RDDs left behind."""
+        hashed-shingle cache itself (VERDICT r5 #5) — no CacheManager
+        entry left without a caller scope, no persisted RDDs left behind."""
         from metaframe_spark.operators import minhash_near_dup_pairs
 
         corpus = _with_near_dups(docs, n=4)
+        n_plans = cached_plans()
         before = {
             rid for rid, _ in spark.sparkContext._jsc.getPersistentRDDs().items()
         }
         out = minhash_near_dup_pairs(corpus, "doc_id", "text", min_jaccard=0.7)
-        assert not hasattr(out, "_mf_persisted")
+        assert cached_plans() == n_plans
         assert out.count() > 0  # result usable after the cache is gone
         after = {
             rid for rid, _ in spark.sparkContext._jsc.getPersistentRDDs().items()
@@ -2182,9 +2184,9 @@ class TestSemanticDupAgainst:
 
         emb, seen, new = self._split(spark)
         _, path = self._layout(spark, seen, 1, tmp_path)
-        got = semantic_dup_against(spark, path, new, min_cosine=0.3)
-        rows = sorted(map(tuple, got.collect()))
-        got._mf_persisted.unpersist()
+        with persist_scope(spark):
+            got = semantic_dup_against(spark, path, new, min_cosine=0.3)
+            rows = sorted(map(tuple, got.collect()))
         a = new.select(F.col("vec_id").alias("new_id"), F.col("embedding").alias("_va"))
         b = seen.select(F.col("vec_id").alias("seen_id"), F.col("embedding").alias("_vb"))
         ref = (
@@ -2206,9 +2208,9 @@ class TestSemanticDupAgainst:
 
         emb, seen, new = self._split(spark)
         cent, path = self._layout(spark, seen, 8, tmp_path)
-        got = semantic_dup_against(spark, path, new, min_cosine=0.25)
-        rows = sorted(map(tuple, got.collect()))
-        got._mf_persisted.unpersist()
+        with persist_scope(spark):
+            got = semantic_dup_against(spark, path, new, min_cosine=0.25)
+            rows = sorted(map(tuple, got.collect()))
         # reference: a cross pair is compared iff both sides assign to the
         # same cell of the SAME stored centroids
         an = assign_cells(new, cent).select(
@@ -2232,9 +2234,9 @@ class TestSemanticDupAgainst:
         assert rows == sorted(map(tuple, ref.collect()))
         # a single new vector probes ONE cell: the seen scan must carry a
         # static partition filter on exactly that cell
-        one = semantic_dup_against(spark, path, new.limit(1), min_cosine=0.25)
-        plan = one._jdf.queryExecution().executedPlan().toString()
-        one._mf_persisted.unpersist()
+        with persist_scope(spark):
+            one = semantic_dup_against(spark, path, new.limit(1), min_cosine=0.25)
+            plan = one._jdf.queryExecution().executedPlan().toString()
         # a 1-element isin plans as equality, not IN
         m = re.search(
             r"PartitionFilters: \[[^\]]*\(cell#\d+ (?:= \d+|IN \([^)]*\))\)",
@@ -5717,9 +5719,9 @@ class TestPageRank:
         e = spark.createDataFrame(
             [("A", "B"), ("A", "C"), ("B", "C")], "src string, dst string"
         )
-        out = pagerank(e, n_iter=1)
-        got = {r.node: r.pr for r in out.collect()}
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = pagerank(e, n_iter=1)
+            got = {r.node: r.pr for r in out.collect()}
         assert got["A"] == pytest.approx(0.05)
         assert got["B"] == pytest.approx(0.05 + 0.85 / 6)
         assert got["C"] == pytest.approx(0.05 + 0.85 * (1 / 6 + 1 / 3))
@@ -5731,9 +5733,9 @@ class TestPageRank:
         e = spark.createDataFrame(
             [("A", "B"), ("A", "B"), ("A", "C")], "src string, dst string"
         )
-        out = pagerank(e, n_iter=1)
-        got = {r.node: r.pr for r in out.collect()}
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = pagerank(e, n_iter=1)
+            got = {r.node: r.pr for r in out.collect()}
         assert got["B"] == pytest.approx(0.05 + 0.85 * (2 / 3) * (1 / 3))
         assert got["C"] == pytest.approx(0.05 + 0.85 * (1 / 3) * (1 / 3))
 
@@ -5743,12 +5745,12 @@ class TestPageRank:
 
         rows = [(f"n{i % 17}", f"n{(i * 7 + 3) % 17}") for i in range(400)]
         e = spark.createDataFrame(rows, "src string, dst string")
-        a = pagerank(e, n_iter=3)
-        ga = {r.node: r.pr for r in a.collect()}
-        a._mf_persisted.unpersist()
-        b = pagerank(e.repartition(13), n_iter=3)
-        gb = {r.node: r.pr for r in b.collect()}
-        b._mf_persisted.unpersist()
+        with persist_scope(spark):
+            a = pagerank(e, n_iter=3)
+            ga = {r.node: r.pr for r in a.collect()}
+        with persist_scope(spark):
+            b = pagerank(e.repartition(13), n_iter=3)
+            gb = {r.node: r.pr for r in b.collect()}
         assert ga == gb  # exact equality, not approx
 
     def test_parameter_guards(self, spark):
@@ -5764,9 +5766,9 @@ class TestPageRank:
         from metaframe_spark.operators import pagerank
 
         e = spark.createDataFrame([], "src string, dst string")
-        out = pagerank(e, n_iter=2)
-        assert out.columns == ["node", "pr"] and out.count() == 0
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = pagerank(e, n_iter=2)
+            assert out.columns == ["node", "pr"] and out.count() == 0
 
     def test_redistribute_hand_computed_and_mass_conserving(self, spark):
         """A->B, A->C, B->C; C dangling, D_0 = 1/3 spread over N=3:
@@ -5777,22 +5779,22 @@ class TestPageRank:
         e = spark.createDataFrame(
             [("A", "B"), ("A", "C"), ("B", "C")], "src string, dst string"
         )
-        out = pagerank(e, n_iter=1, dangling="redistribute")
-        got = {r.node: r.pr for r in out.collect()}
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = pagerank(e, n_iter=1, dangling="redistribute")
+            got = {r.node: r.pr for r in out.collect()}
         assert got["A"] == pytest.approx(0.05 + 0.85 * (1 / 9))
         assert got["B"] == pytest.approx(0.05 + 0.85 * (1 / 6 + 1 / 9))
         assert got["C"] == pytest.approx(0.05 + 0.85 * (1 / 2 + 1 / 9))
         assert sum(got.values()) == pytest.approx(1.0)
         # still a distribution after several sweeps, and bit-deterministic
         # under repartitioning (decimal-summed dangling term included)
-        a = pagerank(e, n_iter=4, dangling="redistribute")
-        ga = {r.node: r.pr for r in a.collect()}
-        a._mf_persisted.unpersist()
+        with persist_scope(spark):
+            a = pagerank(e, n_iter=4, dangling="redistribute")
+            ga = {r.node: r.pr for r in a.collect()}
         assert sum(ga.values()) == pytest.approx(1.0)
-        b = pagerank(e.repartition(7), n_iter=4, dangling="redistribute")
-        gb = {r.node: r.pr for r in b.collect()}
-        b._mf_persisted.unpersist()
+        with persist_scope(spark):
+            b = pagerank(e.repartition(7), n_iter=4, dangling="redistribute")
+            gb = {r.node: r.pr for r in b.collect()}
         assert ga == gb  # exact equality, not approx
 
     def test_no_dangling_nodes_modes_agree(self, spark):
@@ -5802,12 +5804,12 @@ class TestPageRank:
 
         rows = [(f"n{i % 11}", f"n{(i * 5 + 2) % 11}") for i in range(60)]
         e = spark.createDataFrame(rows, "src string, dst string")
-        a = pagerank(e, n_iter=3)
-        ga = {r.node: r.pr for r in a.collect()}
-        a._mf_persisted.unpersist()
-        b = pagerank(e, n_iter=3, dangling="redistribute")
-        gb = {r.node: r.pr for r in b.collect()}
-        b._mf_persisted.unpersist()
+        with persist_scope(spark):
+            a = pagerank(e, n_iter=3)
+            ga = {r.node: r.pr for r in a.collect()}
+        with persist_scope(spark):
+            b = pagerank(e, n_iter=3, dangling="redistribute")
+            gb = {r.node: r.pr for r in b.collect()}
         assert ga == gb
 
     def test_checkpoint_every_is_a_no_op_on_results(self, spark):
@@ -5819,12 +5821,12 @@ class TestPageRank:
         rows += [(f"n{i % 17}", "sink") for i in range(17)]
         e = spark.createDataFrame(rows, "src string, dst string")
         for mode in ("drop", "redistribute"):
-            a = pagerank(e, n_iter=5, dangling=mode)
-            ga = {r.node: r.pr for r in a.collect()}
-            a._mf_persisted.unpersist()
-            b = pagerank(e, n_iter=5, dangling=mode, checkpoint_every=2)
-            gb = {r.node: r.pr for r in b.collect()}
-            b._mf_persisted.unpersist()
+            with persist_scope(spark):
+                a = pagerank(e, n_iter=5, dangling=mode)
+                ga = {r.node: r.pr for r in a.collect()}
+            with persist_scope(spark):
+                b = pagerank(e, n_iter=5, dangling=mode, checkpoint_every=2)
+                gb = {r.node: r.pr for r in b.collect()}
             assert ga == gb
 
     def test_new_parameter_guards(self, spark):
@@ -5838,12 +5840,10 @@ class TestPageRank:
 
 
 class TestSemanticPersistRelease:
-    def test_reshard_hands_back_pinned_cache(self, spark):
+    def test_reshard_hands_back_pinned_cache(self, spark, cached_plans):
         """When hot-cell resharding persists the assignment relation, the
-        pairs relation must expose it via the _mf_persisted release
-        contract (pagerank/minhash pattern) so callers can unpersist
-        after their consuming action instead of leaking the cache for
-        the session (ADVICE r8 low)."""
+        caller's persist_scope releases it after the consuming action
+        instead of leaking the cache for the session (ADVICE r8 low)."""
         import numpy as np
 
         from metaframe_spark.operators import semantic_dup_pairs
@@ -5856,19 +5856,19 @@ class TestSemanticPersistRelease:
             [(int(i), [float(v) for v in X[i]]) for i in range(300)],
             "vec_id long, embedding array<double>",
         )
-        pairs = semantic_dup_pairs(
-            df, min_cosine=0.999, n_cells=4, max_cell_rows=50
-        )
-        pairs.count()
-        pinned = getattr(pairs, "_mf_persisted", None)
-        assert pinned is not None and pinned.storageLevel.useMemory
-        pinned.unpersist()
-        assert not pinned.storageLevel.useMemory
+        n_plans = cached_plans()
+        with persist_scope(spark):
+            pairs = semantic_dup_pairs(
+                df, min_cosine=0.999, n_cells=4, max_cell_rows=50
+            )
+            pairs.count()
+            assert cached_plans() > n_plans
+        assert cached_plans() == n_plans
         # the common (no hot cell) path pins nothing
-        cold = semantic_dup_pairs(
+        semantic_dup_pairs(
             df, min_cosine=0.999, n_cells=4, max_cell_rows=100_000
-        )
-        assert getattr(cold, "_mf_persisted", None) is None
+        ).count()
+        assert cached_plans() == n_plans
 
 
 class TestPrefixFilterPairs:
@@ -6336,15 +6336,14 @@ class TestDuplicationReport:
         assert r2.n_clusters == 2
 
 
+@pytest.mark.usefixtures("scoped")
 class TestCorpusOverlap:
     """operators/dedup.py::corpus_overlap — exact pairwise group Jaccard
     over distinct shingle sets, including the zero-overlap pair frame."""
 
     @staticmethod
     def _collect(out):
-        rows = out.collect()
-        out._mf_persisted.unpersist()
-        return rows
+        return out.collect()
 
     def _df(self, spark):
         rows = [
@@ -6405,15 +6404,14 @@ class TestCorpusOverlap:
         assert len(self._collect(corpus_overlap(df, "source"))) == 0
 
 
+@pytest.mark.usefixtures("scoped")
 class TestShingleNovelty:
     """operators/dedup.py::shingle_novelty — per-document DF-1 shingle
     fraction, NULL-for-short-docs contract."""
 
     @staticmethod
     def _collect(out):
-        rows = out.collect()
-        out._mf_persisted.unpersist()
-        return rows
+        return out.collect()
 
     def test_unique_vs_shared_shingles(self, spark):
         from metaframe_spark.operators import shingle_novelty
@@ -6582,9 +6580,9 @@ class TestWinnowing:
             (4, rand(600)),
         ]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = winnow_overlap_pairs(df, min_shared=3)
-        pairs = {(r.id_a, r.id_b): r.n_shared for r in out.collect()}
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = winnow_overlap_pairs(df, min_shared=3)
+            pairs = {(r.id_a, r.id_b): r.n_shared for r in out.collect()}
         assert (1, 2) in pairs and pairs[(1, 2)] >= 3
         assert all(p == (1, 2) for p in pairs)
 
@@ -6596,14 +6594,11 @@ class TestWinnowing:
         boiler = "identical boilerplate navigation footer block here"
         rows = [(i, f"doc body {i} distinctcontent{i} " + boiler) for i in range(5)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        no_cap = winnow_overlap_pairs(df, min_shared=3)
-        capped = winnow_overlap_pairs(df, min_shared=3, max_df=2)
-        try:
+        with persist_scope(spark):
+            no_cap = winnow_overlap_pairs(df, min_shared=3)
+            capped = winnow_overlap_pairs(df, min_shared=3, max_df=2)
             assert no_cap.count() == 10  # all pairs share the boilerplate
             assert capped.count() == 0
-        finally:
-            no_cap._mf_persisted.unpersist()
-            capped._mf_persisted.unpersist()
 
     def test_guards(self, spark):
         from metaframe_spark.operators import (
@@ -7077,9 +7072,9 @@ class TestAudioFingerprint:
             [(i, bytearray(p)) for i, p in enumerate(payloads)],
             "doc_id long, payload binary",
         )
-        out = audio_near_dup_pairs(df, max_hamming=3, n_bands=4)
-        banded = {(r.id_a, r.id_b) for r in out.collect()}
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = audio_near_dup_pairs(df, max_hamming=3, n_bands=4)
+            banded = {(r.id_a, r.id_b) for r in out.collect()}
         fps = {
             r.doc_id: r.afp for r in audio_fingerprint(df).collect()
         }
@@ -7116,9 +7111,9 @@ class TestVideoNearDup:
         edited[1000] = (edited[1000] + 7) % 256  # edit inside frame 3
         unrelated = bytes(rng.randrange(256) for _ in range(1024))
         df = self._mk(spark, [(1, base), (2, bytes(edited)), (3, unrelated)])
-        out = video_near_dup_pairs(df, min_shared_frames=2)
-        rows = {(r.id_a, r.id_b): r.n_shared_frames for r in out.collect()}
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = video_near_dup_pairs(df, min_shared_frames=2)
+            rows = {(r.id_a, r.id_b): r.n_shared_frames for r in out.collect()}
         # doc 1 and 2 share frames 0-2 exactly and frame 3 within 2 bits
         assert rows == {(1, 2): 4}
 
@@ -7130,13 +7125,13 @@ class TestVideoNearDup:
         # doc 2 shares ONLY frame 0 with doc 1, rest is unrelated
         b = a[:256] + bytes(rng.randrange(256) for _ in range(768))
         df = self._mk(spark, [(1, a), (2, b)])
-        one = video_near_dup_pairs(df, min_shared_frames=1)
-        got1 = {(r.id_a, r.id_b): r.n_shared_frames for r in one.collect()}
-        one._mf_persisted.unpersist()
+        with persist_scope(spark):
+            one = video_near_dup_pairs(df, min_shared_frames=1)
+            got1 = {(r.id_a, r.id_b): r.n_shared_frames for r in one.collect()}
         assert got1 == {(1, 2): 1}
-        two = video_near_dup_pairs(df, min_shared_frames=2)
-        got2 = two.count()
-        two._mf_persisted.unpersist()
+        with persist_scope(spark):
+            two = video_near_dup_pairs(df, min_shared_frames=2)
+            got2 = two.count()
         assert got2 == 0
 
     def test_guards(self, spark):
@@ -7151,10 +7146,10 @@ class TestVideoNearDup:
         with pytest.raises(TypeError, match="integral"):
             video_near_dup_pairs(sdf)
         neg = self._mk(spark, [(-5, b"x" * 600), (-6, b"x" * 600)])
-        out = video_near_dup_pairs(neg)
-        with pytest.raises(Exception, match="ids must be in"):
-            out.collect()
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = video_near_dup_pairs(neg)
+            with pytest.raises(Exception, match="ids must be in"):
+                out.collect()
 
     def test_repeated_frames_do_not_inflate_vote(self, spark):
         """r11 self-review: the vote counts DISTINCT matched frames of
@@ -7165,9 +7160,9 @@ class TestVideoNearDup:
 
         zeros = bytes(512)  # two identical all-zero frames
         df = self._mk(spark, [(1, zeros), (2, zeros)])
-        out = video_near_dup_pairs(df, min_shared_frames=2)
-        rows = {(r.id_a, r.id_b): r.n_shared_frames for r in out.collect()}
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = video_near_dup_pairs(df, min_shared_frames=2)
+            rows = {(r.id_a, r.id_b): r.n_shared_frames for r in out.collect()}
         assert rows == {(1, 2): 2}
 
     def test_new_guards(self, spark):
@@ -7337,12 +7332,12 @@ class TestRound14Fuzz:
         )
         def check(docs):
             df = spark.createDataFrame(docs, "source string, text string")
-            out = corpus_overlap(df, "source")
-            got = {
-                (r.group_a, r.group_b): (r.n_inter, r.n_a, r.n_b, r.jaccard)
-                for r in out.collect()
-            }
-            out._mf_persisted.unpersist()
+            with persist_scope(spark):
+                out = corpus_overlap(df, "source")
+                got = {
+                    (r.group_a, r.group_b): (r.n_inter, r.n_a, r.n_b, r.jaccard)
+                    for r in out.collect()
+                }
             sets = {}
             for g, t in docs:
                 sets.setdefault(g, set()).update(self._shingle_set(t))
@@ -7379,12 +7374,12 @@ class TestRound14Fuzz:
         def check(docs):
             rows = [(i, t) for i, t in enumerate(docs)]
             df = spark.createDataFrame(rows, "doc_id long, text string")
-            out = shingle_novelty(df)
-            got = {
-                r.doc_id: (r.n_shingles, r.n_unique, r.novelty)
-                for r in out.collect()
-            }
-            out._mf_persisted.unpersist()
+            with persist_scope(spark):
+                out = shingle_novelty(df)
+                got = {
+                    r.doc_id: (r.n_shingles, r.n_unique, r.novelty)
+                    for r in out.collect()
+                }
             from collections import Counter
 
             sets = {i: self._shingle_set(t) for i, t in rows}
@@ -7532,6 +7527,7 @@ class TestQualityThresholdSweep:
             quality_threshold_sweep(self._df(spark), "score", [0.5, 0.5])
 
 
+@pytest.mark.usefixtures("scoped")
 class TestVocabularyDrift:
     """operators/text.py::vocabulary_drift — Laplace-smoothed unigram
     PSI between two corpora, DECIMAL-summed."""
@@ -7539,7 +7535,6 @@ class TestVocabularyDrift:
     @staticmethod
     def _collect_one(out):
         [r] = out.collect()
-        out._mf_persisted.unpersist()
         return r
 
     def _df(self, spark, texts):
@@ -7600,6 +7595,7 @@ class TestVocabularyDrift:
         assert r.psi is None
 
 
+@pytest.mark.usefixtures("scoped")
 class TestZipfFit:
     """operators/text.py::zipf_fit — OLS of ln(freq) ~ ln(rank) over the
     bounded head, DECIMAL-summed, one-row card."""
@@ -7607,7 +7603,6 @@ class TestZipfFit:
     @staticmethod
     def _collect_one(out):
         [r] = out.collect()
-        out._mf_persisted.unpersist()
         return r
 
     def _df(self, spark, texts):
@@ -7989,15 +7984,14 @@ class TestHashedTokenIds:
             hashed_token_ids("text", 0)
 
 
+@pytest.mark.usefixtures("scoped")
 class TestPackTokenArrays:
     """operators/packing.py::pack_token_arrays — materialized packed
     sequences with segment ids."""
 
     @staticmethod
     def _collect(out):
-        rows = sorted(out.collect(), key=lambda r: r.seq_id)
-        out._mf_persisted.unpersist()
-        return rows
+        return sorted(out.collect(), key=lambda r: r.seq_id)
 
     def _df(self, spark, arrs):
         return spark.createDataFrame(
@@ -8454,7 +8448,7 @@ class TestCentroidDrift:
 class TestPass4RegressionFixes:
     """Regression pins for the second review pass over the continuation
     operators (NULL-stratum quotas, NULL-centroid clamp, non-numeric
-    ids, the pack_tokens release handle)."""
+    ids, the pack_tokens cache release)."""
 
     def test_temperature_mixture_excludes_null_strata(self, spark):
         from metaframe_spark.operators.packing import temperature_mixture
@@ -8491,23 +8485,25 @@ class TestPass4RegressionFixes:
         with pytest.raises(ValueError, match="numeric"):
             mine_triplets(c, c.selectExpr("vec_id AS q_id", "embedding", "label"))
 
-    def test_pack_tokens_entry_carries_release_handle(self, spark):
+    def test_pack_tokens_entry_carries_release_handle(self, spark, cached_plans):
+        """The entry pins its token relation through the projection it
+        returns, and the caller's scope releases it."""
         from metaframe_spark.queries import QUERIES
 
-        out = QUERIES["llm_pack_tokens"](spark, "/root/testdata/sf0.001")
-        handle = getattr(out, "_mf_persisted", None)
-        assert handle is not None
-        assert out.count() > 0
-        handle.unpersist()
+        n_plans = cached_plans()
+        with persist_scope(spark):
+            out = QUERIES["llm_pack_tokens"](spark, "/root/testdata/sf0.001")
+            assert cached_plans() > n_plans
+            assert out.count() > 0
+        assert cached_plans() == n_plans
 
 
 class TestSelfJoinPins:
     """Round-14 optimization internals: every banded/prefix SELF-join pins
     the relation both join sides consume (a broadcast build side cannot
     reuse the probe side's exchanges, so without the pin the upstream
-    pipeline executes once per side) and every pin releases through the
-    repo-wide ``_mf_persisted`` handle — nothing stays cached after the
-    caller honors the contract."""
+    pipeline executes once per side) and the caller's persist_scope
+    releases every pin."""
 
     @staticmethod
     def _pins(spark):
@@ -8520,35 +8516,38 @@ class TestSelfJoinPins:
 
         docs.count()  # materialize the fixture cache OUTSIDE the window
         before = self._pins(spark)
-        out = prefix_filter_pairs(
-            _with_near_dups(docs.select("doc_id", "text"), n=4),
-            min_jaccard=0.7,
-        )
-        assert out.count() > 0
-        during = self._pins(spark) - before
-        # two pins while live: the signature relation AND the prefix relation
-        assert len(during) >= 2
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = prefix_filter_pairs(
+                _with_near_dups(docs.select("doc_id", "text"), n=4),
+                min_jaccard=0.7,
+            )
+            assert out.count() > 0
+            during = self._pins(spark) - before
+            # two pins while live: the signature relation AND the prefix relation
+            assert len(during) >= 2
         assert not (self._pins(spark) & during)
 
-    def test_jaccard_similarity_pairs_pins_and_releases(self, spark, docs):
+    def test_jaccard_similarity_pairs_pins_and_releases(
+        self, spark, docs, cached_plans
+    ):
         from metaframe_spark.operators.dedup import jaccard_similarity_pairs
 
         before = self._pins(spark)
-        out = jaccard_similarity_pairs(
-            docs.select("doc_id", "text"), minhash_block=True
-        )
-        assert out.count() >= 0 and out is not None
-        during = self._pins(spark) - before
-        assert len(during) >= 1
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = jaccard_similarity_pairs(
+                docs.select("doc_id", "text"), minhash_block=True
+            )
+            assert out.count() >= 0 and out is not None
+            during = self._pins(spark) - before
+            assert len(during) >= 1
         assert not (self._pins(spark) & during)
-        # persist=False: no handle, no pin
+        # persist=False: no cached plan, no pin
         before2 = self._pins(spark)
+        n_plans = cached_plans()
         lazy = jaccard_similarity_pairs(
             docs.select("doc_id", "text"), minhash_block=True, persist=False
         )
-        assert not hasattr(lazy, "_mf_persisted")
+        assert cached_plans() == n_plans
         lazy.count()
         assert not (self._pins(spark) - before2)
 
@@ -8556,64 +8555,36 @@ class TestSelfJoinPins:
         from metaframe_spark.operators.dedup import simhash_near_dup_pairs
 
         before = self._pins(spark)
-        out = simhash_near_dup_pairs(
-            _with_near_dups(docs.select("doc_id", "text"), n=4),
-            "doc_id",
-            "text",
-        )
-        assert out.count() > 0
-        during = self._pins(spark) - before
-        assert len(during) >= 1
-        out._mf_persisted.unpersist()
+        with persist_scope(spark):
+            out = simhash_near_dup_pairs(
+                _with_near_dups(docs.select("doc_id", "text"), n=4),
+                "doc_id",
+                "text",
+            )
+            assert out.count() > 0
+            during = self._pins(spark) - before
+            assert len(during) >= 1
         assert not (self._pins(spark) & during)
 
-    def test_minhash_near_dup_pairs_still_self_releasing(self, spark, docs):
+    def test_minhash_near_dup_pairs_still_self_releasing(
+        self, spark, docs, cached_plans
+    ):
         """The eager-checkpoint operator now ALSO pins its band relation
-        internally — but keeps releasing everything itself (no handle)."""
+        internally — but keeps releasing everything itself: no
+        CacheManager entry is left, with no caller scope."""
         from metaframe_spark.operators.dedup import minhash_near_dup_pairs
 
         docs.count()  # materialize the fixture cache OUTSIDE the window
         before = self._pins(spark)
+        n_plans = cached_plans()
         out = minhash_near_dup_pairs(
             _with_near_dups(docs.select("doc_id", "text"), n=4),
             "doc_id",
             "text",
             min_jaccard=0.7,
         )
-        assert not hasattr(out, "_mf_persisted")
+        assert cached_plans() == n_plans
         assert out.count() > 0
         # the only block allowed to remain is the eager localCheckpoint's
         # own materialized result RDD — both internal caches must be gone
         assert len(self._pins(spark) - before) <= 1
-
-    @pytest.mark.parametrize(
-        "entry",
-        ["llm_ngram_jaccard", "llm_prefix_jaccard", "llm_bpe_fertility"],
-    )
-    def test_entry_propagates_release_handle(self, spark, entry):
-        """Catalog entries that re-project an operator's output MUST
-        re-attach ``_mf_persisted`` (a ``.select()`` returns a new
-        DataFrame object and silently drops the Python attribute).
-        Round-14 finding: three entries leaked their caches this way, and
-        leaked CacheManager entries tax the ANALYSIS of every later query
-        in the session — the full-catalog bench measured llm_neardup_sweep
-        at 21.4 s in a leaking session vs 8.3 s in a clean one."""
-        from metaframe_spark.queries import QUERIES
-
-        cm = spark._jsparkSession.sharedState().cacheManager()
-
-        def n_cached():
-            it, n = cm.cachedData().iterator(), 0
-            while it.hasNext():
-                it.next()
-                n += 1
-            return n
-
-        before = n_cached()
-        out = QUERIES[entry](spark, SF)
-        raw = out.to_spark() if hasattr(out, "to_spark") else out
-        raw.write.format("noop").mode("overwrite").save()
-        handle = getattr(out, "_mf_persisted", None)
-        assert handle is not None, f"{entry} lost its _mf_persisted handle"
-        handle.unpersist()
-        assert n_cached() == before, f"{entry} leaked cached plans"

@@ -12,6 +12,7 @@ import os
 import pytest
 
 from metaframe_spark.queries import ORACLE, QUERIES
+from metaframe_spark.session import persist_scope
 
 from oracle_harness import compare, duck_connection
 
@@ -25,14 +26,19 @@ def duck():
     con.close()
 
 
+def test_queries_and_oracle_align():
+    assert list(QUERIES) == list(ORACLE)
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, duck, name):
-    if name not in ORACLE:
+def test_query_matches_oracle(spark, duck, cached_plans, name):
+    """The entry matches its oracle, and every plan it caches is released
+    by the persist_scope around construction and the consuming action."""
+    n_plans = cached_plans()
+    with persist_scope(spark):
         df = QUERIES[name](spark, SF_DIR)
-        assert df.count() >= 0  # rows-only check (non-SQL-expressible op)
-        return
-    df = QUERIES[name](spark, SF_DIR)
-    res = compare(df, duck, ORACLE[name])
+        res = compare(df, duck, ORACLE[name])
+    assert cached_plans() == n_plans, f"{name} left cached plans behind"
     assert res["rows_match"], res
     assert res["cols_match"], res
     assert res["hash_match"], res

@@ -75,6 +75,52 @@ def test_curate_job_budget(spark, messy, spark_jobs):
     assert counts["output"] == counts["quality"] == counts["near_dedup"]
 
 
+@pytest.mark.parametrize(
+    "option",
+    [
+        "default",
+        "dedup_spans",
+        "dedup_substrings",
+        "benchmark",
+        "dsir_target",
+        "embeddings",
+    ],
+)
+def test_curate_leaves_no_cached_plans(spark, messy, cached_plans, option):
+    """With no caller scope, curate_corpus releases every plan its stages
+    cache, whichever optional stage runs."""
+    clean = messy.filter(F.col("doc_id") < 10_000)
+    options = {
+        "default": {},
+        "dedup_spans": {"dedup_spans": True},
+        "dedup_substrings": {"dedup_substrings": True},
+        "benchmark": {
+            "benchmark": spark.createDataFrame(
+                [(1, "alpha bravo charlie delta echo foxtrot golf hotel")],
+                "qid long, text string",
+            )
+        },
+        "dsir_target": {
+            "dsir_target": clean.filter(F.col("doc_id") % 7 == 0),
+            "dsir_keep": 50,
+        },
+        "embeddings": {
+            "embeddings": clean.select(
+                "doc_id",
+                F.array(
+                    *[F.cos(F.col("doc_id") * (k + 1)) for k in range(8)]
+                ).alias("embedding"),
+            )
+        },
+    }
+    n_plans = cached_plans()
+    out, _ = curate_corpus(
+        clean, min_quality=0.0, near_dup_jaccard=0.8, **options[option]
+    )
+    assert out.count() > 0
+    assert cached_plans() == n_plans
+
+
 def test_line_filter_and_span_dedup_stages(spark):
     """Optional C4 stages: the line scrub drops junk lines pre-dedup, and
     span dedup removes a cross-document boilerplate footer exactly once,
