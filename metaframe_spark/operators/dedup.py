@@ -210,7 +210,6 @@ def minhash_near_dup_pairs(
     band_rows: int = 3,
     min_jaccard: float = 0.7,
     seed: int = 42,
-    persist: bool = True,
 ) -> DataFrame:
     """End-to-end near-duplicate pairs: banded MinHash candidates + EXACT
     n-gram Jaccard verification, all in codegen'd DataFrame ops.
@@ -234,13 +233,12 @@ def minhash_near_dup_pairs(
     Scale shape: one tokenize scan — the hashed-shingle relation is
     referenced four times (band build + both verify sides) and is
     ``persist()``-ed (MEMORY_AND_DISK) so the text is tokenized once, the
-    standard shape for multi-pass LSH pipelines; pass ``persist=False``
-    to trade recompute for memory. The cache is released by the operator
-    itself: the (small) verified-pairs result is ``localCheckpoint``-ed
-    eagerly — materializing it once and truncating its lineage off the
-    cached relation — and the cache unpersisted before returning, so
-    nothing stays pinned for the session and callers have no release
-    contract to honor (VERDICT r5 #5; same shape as
+    standard shape for multi-pass LSH pipelines. The cache is released by
+    the operator itself: the (small) verified-pairs result is
+    ``localCheckpoint``-ed eagerly — materializing it once and truncating
+    its lineage off the cached relation — and the cache unpersisted
+    before returning, so a call with no caller scope leaves no
+    CacheManager entry behind (same shape as
     :func:`~metaframe_spark.operators.sampling.global_shuffle`). The band
     relation is (id, band, key) —
     b small rows per doc, NOT b copies of the shingle array; the shingle
@@ -263,9 +261,7 @@ def minhash_near_dup_pairs(
             F.expr("transform(_shs, s -> xxhash64(s))").alias("_sh"),
         )
         .withColumn("_n", F.size("_sh"))
-    )
-    if persist:
-        hashed = hashed.persist()
+    ).persist()
     # n_bands*band_rows minhash permutations: permutation p re-hashes every
     # shingle hash with salt p and takes the min; band j hashes its r
     # consecutive permutation minima (a slice of the permutation array)
@@ -276,6 +272,11 @@ def minhash_near_dup_pairs(
         f"transform(sequence(0, {n_perms - 1}), "
         f"p -> array_min(transform(_sh, h -> xxhash64(h, {seed} + p))))"
     )
+    # both self-join sides consume bands; without this pin the
+    # n_perms-permutation minhash pass over every shingle array runs
+    # twice (the broadcast build side cannot reuse the probe side's
+    # computation). The cached relation is tiny: (id, band, key) ×
+    # n_bands rows per document.
     bands = hashed.withColumn("_perms", F.expr(perms)).select(
         id_col,
         F.posexplode(
@@ -284,14 +285,7 @@ def minhash_near_dup_pairs(
                 f"j -> xxhash64(slice(_perms, j * {band_rows} + 1, {band_rows}), j))"
             )
         ).alias("_band", "_bk"),
-    )
-    if persist:
-        # both self-join sides consume bands; without this pin the
-        # n_perms-permutation minhash pass over every shingle array runs
-        # twice (the broadcast build side cannot reuse the probe side's
-        # computation). The cached relation is tiny: (id, band, key) ×
-        # n_bands rows per document.
-        bands = bands.persist()
+    ).persist()
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -332,13 +326,12 @@ def minhash_near_dup_pairs(
             "jaccard", F.round(F.col("n_inter") / F.col("n_union").cast("double"), 6)
         )
     )
-    if persist:
-        # materialize the (small) pairs output once, truncating its lineage
-        # off the cached shingle relation, so the cache can be freed NOW
-        # instead of pinning the tokenized corpus for the session
-        out = out.localCheckpoint(eager=True)
-        bands.unpersist()
-        hashed.unpersist()
+    # materialize the (small) pairs output once, truncating its lineage
+    # off the cached shingle relation, so the cache can be freed NOW
+    # instead of pinning the tokenized corpus for the session
+    out = out.localCheckpoint(eager=True)
+    bands.unpersist()
+    hashed.unpersist()
     return out
 
 
@@ -516,7 +509,6 @@ def jaccard_similarity_pairs(
     hash_shingles: bool = True,
     minhash_block: bool = False,
     max_block_size: Optional[int] = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs within a block.
 
@@ -528,15 +520,14 @@ def jaccard_similarity_pairs(
     * ``minhash_block=True`` — derive the block key internally as the
       1-permutation MinHash fingerprint (min md5 over the document's own
       shingle set). Everything — fingerprint AND hashed shingle sets — is
-      derived from ONE tokenize+shingle pass (VERDICT r3 "what's wrong" #1:
-      fingerprinting separately via ``fingerprint_column`` tokenized the
-      corpus twice).
+      derived from ONE tokenize+shingle pass (fingerprinting separately
+      via ``fingerprint_column`` would tokenize the corpus twice).
 
     ``max_block_size`` bounds the quadratic within-block work: blocks
     larger than the cap are split by a *second* fingerprint permutation
     (min md5 over salted shingles), so a corpus where many documents share
     one min-shingle (boilerplate headers) degrades to banded-LSH recall
-    instead of a quadratic hot block (ADVICE r3 #4). Single-permutation
+    instead of a quadratic hot block. Single-permutation
     blocking bounds pair volume in expectation only — the cap makes the
     worst case sub-quadratic too. ``None`` disables the cap (and its extra
     exchange of the shingle relation).
@@ -549,10 +540,10 @@ def jaccard_similarity_pairs(
     compared pair (what it would take to change a count) has probability
     ~n²/2⁶⁴ ≈ 1e-15 per pair. Turn off only for exact-string auditing.
 
-    ``persist`` pins the hashed-shingle relation both self-join sides
-    consume (the caller's :func:`~metaframe_spark.session.persist_scope`
-    releases it); without it the tokenize+shingle pipeline executes once
-    per join side.
+    The hashed-shingle relation both self-join sides consume is pinned
+    (the caller's :func:`~metaframe_spark.session.persist_scope` releases
+    it), so the tokenize+shingle pipeline executes once, not once per
+    join side.
     """
     if block_col is None and not minhash_block:
         raise ValueError(
@@ -603,12 +594,11 @@ def jaccard_similarity_pairs(
         )
         .withColumn("_n", F.size("_sh"))
     )
-    if persist:
-        # both self-join sides consume base; without this pin the whole
-        # tokenize → shingle → md5-block (+ window recount under the cap)
-        # pipeline executes twice — once per join side (the broadcast
-        # build side cannot reuse the probe side's computation)
-        base = base.persist()
+    # both self-join sides consume base; without this pin the whole
+    # tokenize → shingle → md5-block (+ window recount under the cap)
+    # pipeline executes twice — once per join side (the broadcast
+    # build side cannot reuse the probe side's computation)
+    base = base.persist()
     a = base.alias("a")
     b = base.alias("b")
     # |A ∪ B| = |A| + |B| - |A ∩ B| over distinct sets: the intersection is
@@ -995,7 +985,6 @@ def prefix_filter_pairs(
     text_col: str = "text",
     min_jaccard: float = 0.7,
     shingle_n: int = 3,
-    persist: bool = True,
 ) -> DataFrame:
     """EXACT set-similarity self-join via prefix filtering (the
     SSJoin/PPJoin family) — the deterministic sibling of
@@ -1023,7 +1012,7 @@ def prefix_filter_pairs(
     all-pairs. The length filter ``min(n) ≥ t·max(n)`` prunes
     impossible pairs before verification.
 
-    Float robustness (ADVICE r10): every ``t·n`` comparison subtracts a
+    Float robustness: every ``t·n`` comparison subtracts a
     1e-9 epsilon before ``ceil``/``>=`` so double rounding can never
     round an exact integer product UP (e.g. ``0.1*10 →
     1.0000000000000002 → ceil 2``, which would shorten the prefix below
@@ -1042,9 +1031,7 @@ def prefix_filter_pairs(
         id_col,
         F.col("shingle_hashes").alias("_sh"),
         F.col("n_shingles").alias("_n"),
-    )
-    if persist:
-        base = base.persist()
+    ).persist()
     tok = base.select(id_col, "_n", F.explode("_sh").alias("_tok"))
     freq = tok.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
     # rarest-first total order: (document frequency, hash value) — every
@@ -1058,6 +1045,10 @@ def prefix_filter_pairs(
             ).alias("_ord")
         )
     )
+    # both self-join sides consume pref; without this pin the whole
+    # explode → frequency-join → per-doc sort → prefix-explode subtree
+    # executes twice (the broadcast build side cannot reuse the probe
+    # side's exchanges)
     pref = ordered.select(
         F.col(id_col),
         F.col("_n"),
@@ -1069,13 +1060,7 @@ def prefix_filter_pairs(
                 f"cast(_n - ceil({t!r}D * _n - 1e-9D) + 1 as int))"
             )
         ).alias("_tok"),
-    )
-    if persist:
-        # both self-join sides consume pref; without this pin the whole
-        # explode → frequency-join → per-doc sort → prefix-explode subtree
-        # executes twice (the broadcast build side cannot reuse the probe
-        # side's exchanges)
-        pref = pref.persist()
+    ).persist()
     cand = (
         pref.alias("a")
         .join(
@@ -1229,7 +1214,6 @@ def minhash_near_dup_against(
     band_rows: int = 3,
     min_jaccard: float = 0.7,
     seed: int = 42,
-    persist: bool = True,
     seen_signatures: "DataFrame | None" = None,
     new_signatures: "DataFrame | None" = None,
 ) -> DataFrame:
@@ -1364,8 +1348,7 @@ def minhash_near_dup_against(
                 f"shingle_n than this call's shingle_n={shingle_n}; rebuild "
                 "the store or match the parameter"
             )
-    if persist:
-        h_new, h_seen = h_new.persist(), h_seen.persist()
+    h_new, h_seen = h_new.persist(), h_seen.persist()
     cand = (
         _bands(h_new)
         .alias("a")
@@ -1412,10 +1395,9 @@ def minhash_near_dup_against(
         )
         .select("new_id", "seen_id", "n_inter", "n_union", "jaccard")
     )
-    if persist:
-        out = out.localCheckpoint(eager=True)
-        h_new.unpersist()
-        h_seen.unpersist()
+    out = out.localCheckpoint(eager=True)
+    h_new.unpersist()
+    h_seen.unpersist()
     return out
 
 
@@ -1988,10 +1970,10 @@ def containment_contamination(
     containment)`` for pairs at ``containment >= threshold``. The
     threshold gate compares INTEGERS — ``n_shared >=
     ceil(threshold·bench_size − 1e-9)`` — the same epsilon discipline
-    as :func:`prefix_filter_pairs` (ADVICE r10: bare float
-    ``ceil(t·n)`` rounds past exact products like 0.1·10 and silently
-    drops boundary pairs). ``containment`` itself is emitted rounded
-    to 6 places for engine-portable hashing.
+    as :func:`prefix_filter_pairs` (a bare float ``ceil(t·n)`` rounds
+    past exact products like 0.1·10 and silently drops boundary pairs).
+    ``containment`` itself is emitted rounded to 6 places for
+    engine-portable hashing.
 
     Scale shape: the benchmark's (bench_id, shingle) relation and its
     per-doc sizes are benchmark-sized (MBs against a TB corpus) and
@@ -2366,12 +2348,12 @@ def winnow_fingerprints(
         )
     # raw-length prefilter with a 2× safety margin: trim/collapse shrink,
     # but lower() can LENGTHEN some Unicode strings (U+0130 'İ' → 'i' +
-    # combining dot, 1 → 2 chars — ADVICE r12), and no lowercase mapping
+    # combining dot, 1 → 2 chars), and no lowercase mapping
     # expands beyond 2×, so length(raw)·2 < k cannot reach k normalized
     # chars and is a sound cheap reject; the EXACT short-doc gate lives
     # inside the bound expression below so the normalize regexp runs
     # exactly once per row (a normalize_text filter here would be a
-    # second full-text regex pass — r11 self-review)
+    # second full-text regex pass)
     base = df.select(F.col(id_col), F.col(text_col)).filter(
         F.length(F.col(text_col)) * 2 >= k
     )
@@ -2508,7 +2490,7 @@ def substring_dedup(
     anywhere in the corpus (or within one document) survive at exactly
     one canonical occurrence.
 
-    Built from the two halves the r11 verdict identified: the winnowing
+    Built from two halves: the winnowing
     fingerprints (:func:`winnow_fingerprints`) LOCALIZE shared content
     — their positions land inside every duplicated passage — and the
     indexed splice (the span_dedup removal idea, here at character

@@ -14,6 +14,15 @@ canonical watermarked windowed aggregation helper. Scale posture: event-time
 windows + watermarks bound state size; state lives in the streaming state
 store partitioned by group key, so the same aggregation scales with
 executors exactly like its batch twin (Q29/Q30 in the catalog).
+
+Every stateful writer here (``stream_*``, ``apply_cdc_stream``) starts its
+query through ``_each_batch``, which runs each micro-batch in its own
+:func:`~metaframe_spark.session.persist_scope`. A batch commits in one of
+two shapes: a **versioned store** (``_stream_store``: the whole store is
+staged and swapped in by backup-rename — the sketch stores, the near-dup
+signature store, the CDC base table) or an **append-only** move of the
+batch's own files (a run partition in ``stream_expectations``; per-cell
+files plus a marker in ``_commit_ivf_delta``, for the IVF corpus).
 """
 
 from __future__ import annotations
@@ -332,8 +341,8 @@ def _recover_swap_for_batch(spark, base_path: str, batch_id: int) -> Optional[st
 def _swap_in_base(spark, base_path: str, staging: str, batch_id: int,
                   label: str = "CDC swap") -> None:
     """Promote a fully-written ``staging`` directory over ``base_path``
-    with the backup-rename protocol shared by :func:`apply_cdc_stream`
-    and :func:`stream_distinct_sketches`: move the old base aside FIRST
+    with the backup-rename protocol of :func:`_stream_store`: move the
+    old base aside FIRST
     (a crash between the two renames leaves both versions on disk —
     recoverable by :func:`_recover_swap_for_batch` — never neither),
     promote, verify, and only then delete the backup. Every
@@ -368,27 +377,44 @@ def _swap_in_base(spark, base_path: str, staging: str, batch_id: int,
     fs.delete(bak, True)
 
 
-def _stream_sketch_store(stream, store_path: str, sketch, merge,
-                         checkpoint_dir: Optional[str], high_water: bool):
-    """Shared foreachBatch machinery for the continuously-maintained
-    sketch stores: per micro-batch, ``sketch(batch_df)`` reduces the
-    batch and ``merge(store_df, batch_sketch)`` folds it into the
-    parquet store at ``store_path``, under the same crash-safe
-    staged-write + backup-rename swap as :func:`apply_cdc_stream`
-    (repairable any time with :func:`recover_cdc_swap`).
+def _each_batch(stream, apply, checkpoint_dir: Optional[str]):
+    """Start ``apply(batch_df, batch_id)`` over every micro-batch of
+    ``stream`` (a DataFrame or MetaFrame) and return the
+    ``StreamingQuery``: ``availableNow`` drains what exists, then stops;
+    re-launch on the same ``checkpoint_dir`` to continue. Each batch runs
+    inside ``persist_scope``, so every plan it caches is released when it
+    ends, committed or not."""
+    from ..session import persist_scope
 
-    ``high_water=True`` adds exactly-once bookkeeping for ADDITIVE
-    sketches (sums/counts, where re-merging a replayed batch would
-    double-count): every store row carries ``_last_batch``, the highest
-    batch id folded in, and a batch with ``batch_id <= _last_batch`` is
-    skipped. Structured Streaming replays batch ids in order within one
-    checkpoint, so the single high-water mark is sufficient — the
-    standard foreachBatch idempotence recipe. It protects against
-    crash/retry replays on the store's OWN checkpoint; one store, one
-    checkpoint is the contract (a fresh checkpoint restarts batch ids
-    at 0 and would be skipped against an old store's mark).
-    ``high_water=False`` is for merges that are naturally idempotent
-    (HLL register-max)."""
+    def _scoped(batch_df, batch_id: int):
+        with persist_scope(batch_df.sparkSession):
+            apply(batch_df, batch_id)
+
+    raw = stream.to_spark() if isinstance(stream, MetaFrame) else stream
+    writer = raw.writeStream.foreachBatch(_scoped).trigger(availableNow=True)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
+def _stream_store(stream, store_path: str, fold, checkpoint_dir: Optional[str],
+                  high_water: bool, label: str):
+    """Maintain the parquet store at ``store_path`` from a stream: per
+    micro-batch, ``fold(batch_df, prior, batch_id)`` returns the new store
+    (``prior`` is None before the first batch), which is staged to
+    ``{store}._staging_{id}`` and swapped in by :func:`_swap_in_base`
+    (the first batch's staging is just promoted). A retried batch id first
+    repairs its own half-finished swap, so ``prior`` is always complete.
+
+    ``high_water=True`` makes non-idempotent folds (additive counts,
+    appended rows) exactly-once: every store row carries ``_last_batch``,
+    the highest batch id folded in; a batch with ``batch_id <=
+    _last_batch`` is skipped, and ``prior`` reaches the fold without the
+    column. Batch ids replay in order within one checkpoint, so one mark
+    suffices — but one store, one checkpoint: a fresh checkpoint restarts
+    ids at 0 and is skipped against an old store's mark.
+    ``high_water=False`` is for idempotent folds (HLL register-max,
+    upsert)."""
 
     def _apply(batch_df, batch_id: int):
         spark = batch_df.sparkSession
@@ -397,39 +423,40 @@ def _stream_sketch_store(stream, store_path: str, sketch, merge,
         has_store = fs.exists(P(store_path))
         prior = spark.read.parquet(store_path) if has_store else None
         if high_water and has_store:
-            last = prior.agg({"_last_batch": "max"}).collect()[0][0]
+            last = prior.agg(F.max("_last_batch")).collect()[0][0]
             if last is not None and batch_id <= last:
                 return  # replayed batch: already folded into the store
-        batch_sk = sketch(batch_df)
-        if has_store:
-            merged = merge(
-                prior.drop("_last_batch") if high_water else prior, batch_sk
-            )
-        else:
-            merged = batch_sk
+            prior = prior.drop("_last_batch")
+        merged = fold(batch_df, prior, batch_id)
         if high_water:
-            from pyspark.sql import functions as F
-
             merged = merged.withColumn(
                 "_last_batch", F.lit(batch_id).cast("long")
             )
         staging = store_path.rstrip("/") + f"._staging_{batch_id}"
         merged.write.mode("overwrite").parquet(staging)
         if has_store:
-            _swap_in_base(spark, store_path, staging, batch_id,
-                          label="sketch-store swap")
+            _swap_in_base(spark, store_path, staging, batch_id, label=label)
         elif not fs.rename(P(staging), P(store_path)):
             raise RuntimeError(
-                f"sketch-store swap batch {batch_id}: failed to promote "
+                f"{label} batch {batch_id}: failed to promote "
                 f"first-batch staging ({staging} -> {store_path})"
             )
 
-    writer = (
-        stream.to_spark() if isinstance(stream, MetaFrame) else stream
-    ).writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _each_batch(stream, _apply, checkpoint_dir)
+
+
+def _stream_sketch_store(stream, store_path: str, sketch, merge,
+                         checkpoint_dir: Optional[str], high_water: bool):
+    """:func:`_stream_store` for the mergeable sketch stores: each batch
+    is reduced by ``sketch(batch_df)`` and folded in with
+    ``merge(store_df, batch_sketch)``."""
+
+    def fold(batch_df, prior, batch_id):
+        batch_sk = sketch(batch_df)
+        return batch_sk if prior is None else merge(prior, batch_sk)
+
+    return _stream_store(stream, store_path, fold, checkpoint_dir,
+                         high_water=high_water, label="sketch-store swap")
 
 
 def stream_distinct_sketches(
@@ -490,7 +517,7 @@ def stream_moment_sketches(
     ``moment_estimates(spark.read.parquet(store_path).drop("_last_batch"),
     group_by)``. Moment sums are ADDITIVE — a replayed micro-batch would
     double-count — so the store carries the ``_last_batch`` high-water
-    mark (see :func:`_stream_sketch_store`): at-least-once delivery
+    mark (see :func:`_stream_store`): at-least-once delivery
     becomes exactly-once, and because the sums are decimal-exact the
     continuously-accreted statistics hash-match a batch pass over
     everything the stream ever delivered."""
@@ -696,12 +723,7 @@ def stream_expectations(
                 f"{staging} -> {final}"
             )
 
-    writer = (
-        stream.to_spark() if isinstance(stream, MetaFrame) else stream
-    ).writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _each_batch(stream, _apply, checkpoint_dir)
 
 
 def stream_ivf_append(
@@ -713,11 +735,12 @@ def stream_ivf_append(
 ):
     """Continuous ingest into a cell-partitioned IVF serving corpus —
     the streaming face of
-    :func:`~metaframe_spark.operators.similarity.append_ivf_corpus`
-    (r10 verdict next-#5): each micro-batch is assigned with the
-    layout's own co-persisted centroids and encoded with its stored SQ
-    bounds (never refit — the same delta relation the batch append
-    builds, via the shared ``_prepare_ivf_delta``), and its per-cell
+    :func:`~metaframe_spark.operators.similarity.append_ivf_corpus`:
+    each micro-batch is assigned with the layout's own co-persisted
+    centroids and encoded with its stored SQ bounds (never refit — the
+    same delta relation the batch append builds, via the shared
+    ``_prepare_ivf_delta``), so a streamed corpus probes exactly like a
+    batch-appended one, and its per-cell
     files land in the corpus. A probe (:func:`ivf_topk_stored`) at any
     moment sees everything ingested so far.
 
@@ -757,39 +780,37 @@ def stream_ivf_append(
             spark,
             corpus_path,
             batch_id,
-            lambda: _prepare_ivf_delta_for(
-                spark, corpus_path, batch_df, vec_col, format
+            lambda: _prepare_ivf_delta(
+                spark, corpus_path, batch_df, vec_col=vec_col, format=format
             ),
             format=format,
         )
 
-    writer = (
-        stream.to_spark() if isinstance(stream, MetaFrame) else stream
-    ).writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _each_batch(stream, _apply, checkpoint_dir)
 
 
-def _prepare_ivf_delta_for(spark, corpus_path, batch_df, vec_col, format):
-    from ..operators.similarity import _prepare_ivf_delta
-
-    return _prepare_ivf_delta(
-        spark, corpus_path, batch_df, vec_col=vec_col, format=format
-    )
-
-
-def _ivf_marks_last(fs, P, marks_dir: str) -> int:
-    """Highest committed ingest batch id recorded in the marker dir
-    (−1 when none): the marker files are the exactly-once high-water
-    record for the staged-move ingest protocol."""
+def _ivf_batch_committed(fs, P, root: str, batch_id: int) -> bool:
+    """True when ``batch_id`` is at or below the highest
+    ``{root}/_ingest_marks/batch-{id}`` marker — the exactly-once
+    high-water record of the staged-move ingest — so its files are
+    already in the corpus. The marker is created before the staging dir
+    is dropped, so a crash between the two leaves an empty
+    ``_ingest_staging_{id}`` skeleton that no later commit ever visits:
+    it is deleted here, or ``validate_ivf_corpus`` would fail
+    ``no_staging_debris`` forever."""
+    marks_dir = P(root + "/_ingest_marks")
     last = -1
-    if fs.exists(P(marks_dir)):
-        for st in fs.listStatus(P(marks_dir)):
+    if fs.exists(marks_dir):
+        for st in fs.listStatus(marks_dir):
             name = st.getPath().getName()
             if name.startswith("batch-"):
                 last = max(last, int(name[len("batch-"):]))
-    return last
+    if batch_id > last:
+        return False
+    staging = P(root + f"/_ingest_staging_{batch_id}")
+    if fs.exists(staging):
+        fs.delete(staging, True)
+    return True
 
 
 def _commit_ivf_delta(
@@ -799,7 +820,7 @@ def _commit_ivf_delta(
     :func:`stream_ivf_append` and :func:`stream_semantic_dedup`:
 
     1. skip entirely when ``batch_id`` is at or below the marker
-       high-water (cleaning any marker-then-crash staging debris);
+       high-water (:func:`_ivf_batch_committed`);
     2. (re)build + stage the delta under ``_ingest_staging_{id}`` unless
        a COMPLETE (_SUCCESS-marked) stage already exists — a crash
        mid-write leaves no marker and rebuilds, a crash mid-move resumes
@@ -817,11 +838,7 @@ def _commit_ivf_delta(
     root = corpus_path.rstrip("/")
     marks_dir = root + "/_ingest_marks"
     staging = root + f"/_ingest_staging_{batch_id}"
-    if batch_id <= _ivf_marks_last(fs, P, marks_dir):
-        # replayed batch: its files are already in the corpus; a
-        # marker-then-crash leftover staging skeleton is just debris
-        if fs.exists(P(staging)):
-            fs.delete(P(staging), True)
+    if _ivf_batch_committed(fs, P, root, batch_id):
         return False
     if not _staged_write_complete(fs, P, staging):
         # no complete stage for this id — (re)build it from the batch
@@ -908,7 +925,7 @@ def stream_semantic_dedup(
     crash inside the commit always leaves the staging dir as its
     tell) — without the rollback, a partially-committed vector would
     read back as a cross-history dup and silently kill its own
-    document (r11 self-review). The recompute over the restored
+    document. The recompute over the restored
     corpus is deterministic, so output and corpus converge to exactly
     the no-crash result. Returns the started ``StreamingQuery``
     (availableNow)."""
@@ -918,26 +935,14 @@ def stream_semantic_dedup(
         semantic_dup_pairs,
     )
     from ..operators.similarity import _prepare_ivf_delta
-    from ..session import persist_scope
 
     root = corpus_path.rstrip("/")
 
     def _apply(batch_df, batch_id: int):
         spark = batch_df.sparkSession
         fs, P = _hadoop_fs(spark, corpus_path)
-        if batch_id <= _ivf_marks_last(fs, P, root + "/_ingest_marks"):
-            # replayed batch: output + corpus already final — but a crash
-            # BETWEEN marker creation and staging deletion leaves the
-            # now-empty _ingest_staging_{id} skeleton behind, and this
-            # early return is the only code that ever sees that state
-            # again (the commit path is skipped outright). Drop it here,
-            # mirroring _commit_ivf_delta's replayed-batch cleanup, or
-            # validate_ivf_corpus fails no_staging_debris forever
-            # (ADVICE r12).
-            leftover = P(root + f"/_ingest_staging_{batch_id}")
-            if fs.exists(leftover):
-                fs.delete(leftover, True)
-            return
+        if _ivf_batch_committed(fs, P, root, batch_id):
+            return  # replayed batch: output + corpus already final
         # ROLL BACK any partial commit a crashed attempt of THIS batch
         # left in the corpus before recomputing: unlike stream_ivf_append
         # (whose delta depends only on the batch), this operator's
@@ -963,57 +968,47 @@ def stream_semantic_dedup(
                         fs.delete(f_st.getPath(), False)
             fs.delete(P(staging), True)
         batch = batch_df.select(id_col, vec_col)
-        # every cache this batch pins (the within-batch pairs, the
-        # dup-check's cell assignment, the survivors) is released when
-        # the batch ends, committed or not
-        with persist_scope(spark):
-            pairs = semantic_dup_pairs(
-                batch,
-                min_cosine=min_cosine,
-                n_cells=within_cells,
-                id_col=id_col,
-                vec_col=vec_col,
-            )
-            local = dedup_survivors(batch, pairs, id_col=id_col)
-            hits, assigned = _semantic_dup_against(
-                spark,
-                corpus_path,
-                local,
-                min_cosine=min_cosine,
-                new_id=id_col,
-                seen_id=id_col,
-                vec_col=vec_col,
-                format=format,
-            )
-            dead = hits.select(F.col("new_id").alias(id_col)).distinct()
-            survivors = local.join(dead, id_col, "left_anti").persist()
-            survivors.write.mode("overwrite").format(format).save(
-                out_path.rstrip("/") + f"/batch={batch_id}"
-            )
-            # reuse the assignment the dup-check already paid for: its
-            # pinned relation holds (id, vec, _cell) for the WHOLE batch
-            # against this layout's own centroids, so the delta joins it
-            # instead of re-running the assignment GEMM over the survivors
-            # (r11 self-review)
-            _commit_ivf_delta(
-                spark,
-                corpus_path,
-                batch_id,
-                lambda: _prepare_ivf_delta(
-                    spark, corpus_path, survivors,
-                    vec_col=vec_col, format=format,
-                    cells=assigned.select(id_col, "_cell"),
-                    cells_on=id_col,
-                ),
-                format=format,
-            )
+        pairs = semantic_dup_pairs(
+            batch,
+            min_cosine=min_cosine,
+            n_cells=within_cells,
+            id_col=id_col,
+            vec_col=vec_col,
+        )
+        local = dedup_survivors(batch, pairs, id_col=id_col)
+        hits, assigned = _semantic_dup_against(
+            spark,
+            corpus_path,
+            local,
+            min_cosine=min_cosine,
+            new_id=id_col,
+            seen_id=id_col,
+            vec_col=vec_col,
+            format=format,
+        )
+        dead = hits.select(F.col("new_id").alias(id_col)).distinct()
+        survivors = local.join(dead, id_col, "left_anti").persist()
+        survivors.write.mode("overwrite").format(format).save(
+            out_path.rstrip("/") + f"/batch={batch_id}"
+        )
+        # the delta's cells come from the assignment the dup-check already
+        # pinned — (id, vec, _cell) for the WHOLE batch against this
+        # layout's own centroids — so the assignment GEMM runs once per
+        # batch, never again over the survivors
+        _commit_ivf_delta(
+            spark,
+            corpus_path,
+            batch_id,
+            lambda: _prepare_ivf_delta(
+                spark, corpus_path, survivors,
+                vec_col=vec_col, format=format,
+                cells=assigned.select(id_col, "_cell"),
+                cells_on=id_col,
+            ),
+            format=format,
+        )
 
-    writer = (
-        stream.to_spark() if isinstance(stream, MetaFrame) else stream
-    ).writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _each_batch(stream, _apply, checkpoint_dir)
 
 
 def stream_bottomk_samples(
@@ -1095,20 +1090,19 @@ def stream_neardup_dedup(
     forever; near-dup ingestion needs the unbounded-history guarantee,
     and the signature store is the bounded-BY-CONTENT form of it.
 
-    Exactly-once: the store carries a ``_last_batch`` high-water mark —
-    a replayed batch id is skipped entirely — and each batch's
-    survivors are written to their OWN ``batch={id}`` directory with
-    overwrite, so a crash between the output write and the store swap
-    replays into an identical overwrite, never a duplicate append. The
-    store swap itself is the crash-safe staged rename of
+    Exactly-once: every store row carries the ``_last_batch`` high-water
+    mark (the id of the latest batch folded in, not of the batch that
+    added the row) — a replayed batch id is skipped entirely — and each
+    batch's survivors are written to their OWN ``batch={id}`` directory
+    with overwrite, so a crash between the output write and the store
+    swap replays into an identical overwrite, never a duplicate append.
+    The store swap itself is the crash-safe staged rename shared with
     :func:`apply_cdc_stream` (repairable via :func:`recover_cdc_swap`).
 
     Caveat shared with every MinHash operator here: documents shorter
     than ``shingle_n`` tokens have no shingles and never match — pair
     with :func:`stream_exact_dedup` upstream if byte-identical shorts
     matter. Returns the started ``StreamingQuery`` (availableNow)."""
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import (
         dedup_survivors,
         minhash_near_dup_against,
@@ -1116,68 +1110,36 @@ def stream_neardup_dedup(
         minhash_signatures,
     )
 
-    def _apply(batch_df, batch_id: int):
-        spark = batch_df.sparkSession
-        _recover_swap_for_batch(spark, store_path, batch_id)
-        fs, P = _hadoop_fs(spark, store_path)
-        has_store = fs.exists(P(store_path))
-        prior = spark.read.parquet(store_path) if has_store else None
-        if has_store:
-            last = prior.agg(F.max("_last_batch")).collect()[0][0]
-            if last is not None and batch_id <= last:
-                return  # replayed batch: output + store already final
+    def fold(batch_df, prior, batch_id):
         pairs = minhash_near_dup_pairs(
             batch_df, id_col, text_col, shingle_n=shingle_n,
             n_bands=n_bands, band_rows=band_rows,
             min_jaccard=min_jaccard, seed=seed,
         )
-        local = dedup_survivors(batch_df, pairs, id_col)
+        survivors = dedup_survivors(batch_df, pairs, id_col)
         # tokenize/shingle/hash the batch survivors ONCE: these signatures
         # serve both the against-store check and the store append
-        local_sigs = minhash_signatures(
-            local.select(id_col, text_col),
+        sigs = minhash_signatures(
+            survivors.select(id_col, text_col),
             id_col=id_col, text_col=text_col, shingle_n=shingle_n,
         ).persist()
-        try:
-            if has_store:
-                hits = minhash_near_dup_against(
-                    new_signatures=local_sigs,
-                    seen_signatures=prior.drop("_last_batch"),
-                    id_col=id_col, text_col=text_col, shingle_n=shingle_n,
-                    n_bands=n_bands, band_rows=band_rows,
-                    min_jaccard=min_jaccard, seed=seed,
-                )
-                dead = hits.select(F.col("new_id").alias(id_col)).distinct()
-                survivors = local.join(dead, id_col, "left_anti")
-                surv_sigs = local_sigs.join(dead, id_col, "left_anti")
-            else:
-                survivors, surv_sigs = local, local_sigs
-            survivors.write.mode("overwrite").parquet(
-                out_path.rstrip("/") + f"/batch={batch_id}"
+        if prior is not None:
+            hits = minhash_near_dup_against(
+                new_signatures=sigs, seen_signatures=prior,
+                id_col=id_col, text_col=text_col, shingle_n=shingle_n,
+                n_bands=n_bands, band_rows=band_rows,
+                min_jaccard=min_jaccard, seed=seed,
             )
-            sigs = surv_sigs.withColumn(
-                "_last_batch", F.lit(batch_id).cast("long")
-            )
-            merged = prior.unionByName(sigs) if has_store else sigs
-            staging = store_path.rstrip("/") + f"._staging_{batch_id}"
-            merged.write.mode("overwrite").parquet(staging)
-        finally:
-            local_sigs.unpersist()
-        if has_store:
-            _swap_in_base(spark, store_path, staging, batch_id,
-                          label="neardup signature-store swap")
-        elif not fs.rename(P(staging), P(store_path)):
-            raise RuntimeError(
-                f"neardup signature-store swap batch {batch_id}: failed to "
-                f"promote first-batch staging ({staging} -> {store_path})"
-            )
+            dead = hits.select(F.col("new_id").alias(id_col)).distinct()
+            survivors = survivors.join(dead, id_col, "left_anti")
+            sigs = sigs.join(dead, id_col, "left_anti")
+        survivors.write.mode("overwrite").parquet(
+            out_path.rstrip("/") + f"/batch={batch_id}"
+        )
+        return sigs if prior is None else prior.unionByName(sigs)
 
-    writer = (
-        stream.to_spark() if isinstance(stream, MetaFrame) else stream
-    ).writeStream.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _stream_store(stream, store_path, fold, checkpoint_dir,
+                         high_water=True, label="neardup signature-store swap")
 
 
 def recover_cdc_swap(spark, base_path: str) -> Dict[int, str]:
@@ -1187,7 +1149,7 @@ def recover_cdc_swap(spark, base_path: str) -> Dict[int, str]:
     Scans for ``{base}._staging_N`` / ``{base}._replaced_N`` leftovers and
     repairs each batch id in DESCENDING order via the same state machine
     the stream itself uses on retry (:func:`_recover_swap_for_batch`).
-    Descending is load-bearing: foreachBatch applies batches serially, so
+    Descending is load-bearing: micro-batches are applied serially, so
     the highest id's state is the newest — its crashed swap is repaired
     first (restoring the newest complete version as the base), after which
     every older batch's backup is provably stale debris and is dropped by
@@ -1234,7 +1196,7 @@ def apply_cdc_stream(
     ``StreamingQuery``; stop it (or use ``availableNow`` upstream) to
     finish.
 
-    foreachBatch runs batches serially with exactly-once batch ids, so
+    Micro-batches run serially with exactly-once batch ids, so
     the merge sequence is the stream order. The directory swap is
     rename-based: atomic on HDFS/POSIX, best-effort on object stores —
     at production scale put a transactional table format (Iceberg /
@@ -1251,31 +1213,19 @@ def apply_cdc_stream(
     attempt of the same batch (``merge_upsert`` is idempotent, so
     re-merging an already-applied batch is safe).
     """
+    from ..operators.merge import merge_upsert
+
     keys = list(keys)
 
-    def _apply(batch_df, batch_id: int):
-        from ..operators.merge import merge_upsert
-
-        spark = batch_df.sparkSession
-        # a retried batch id may find debris from a crashed prior attempt:
-        # repair the swap first so the base read below is a complete table
-        _recover_swap_for_batch(spark, base_path, batch_id)
+    def fold(batch_df, base, batch_id):
+        if base is None:  # no base table: raise the reader's missing-path error
+            base = batch_df.sparkSession.read.parquet(base_path)
         delta = latest_per_key(batch_df, keys, seq_col)
-        base = spark.read.parquet(base_path)
-        merged = merge_upsert(
+        return merge_upsert(
             base, delta.select(*base.columns, *(
                 [delete_col] if delete_col else []
             )), keys, delete_col
         )
-        staging = base_path.rstrip("/") + f"._staging_{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        _swap_in_base(spark, base_path, staging, batch_id, label="CDC swap")
 
-    writer = (
-        stream.writeStream if not isinstance(stream, MetaFrame)
-        else stream.to_spark().writeStream
-    )
-    writer = writer.foreachBatch(_apply).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _stream_store(stream, base_path, fold, checkpoint_dir,
+                         high_water=False, label="CDC swap")

@@ -8527,9 +8527,7 @@ class TestSelfJoinPins:
             assert len(during) >= 2
         assert not (self._pins(spark) & during)
 
-    def test_jaccard_similarity_pairs_pins_and_releases(
-        self, spark, docs, cached_plans
-    ):
+    def test_jaccard_similarity_pairs_pins_and_releases(self, spark, docs):
         from metaframe_spark.operators.dedup import jaccard_similarity_pairs
 
         before = self._pins(spark)
@@ -8541,15 +8539,6 @@ class TestSelfJoinPins:
             during = self._pins(spark) - before
             assert len(during) >= 1
         assert not (self._pins(spark) & during)
-        # persist=False: no cached plan, no pin
-        before2 = self._pins(spark)
-        n_plans = cached_plans()
-        lazy = jaccard_similarity_pairs(
-            docs.select("doc_id", "text"), minhash_block=True, persist=False
-        )
-        assert cached_plans() == n_plans
-        lazy.count()
-        assert not (self._pins(spark) - before2)
 
     def test_simhash_near_dup_pairs_pins_fingerprint(self, spark, docs):
         from metaframe_spark.operators.dedup import simhash_near_dup_pairs

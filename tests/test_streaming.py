@@ -892,7 +892,10 @@ class TestStreamNeardupDedup:
         assert {r.doc_id for r in sigs.select("doc_id").collect()} == surv
         # history text is never retained
         assert "text" not in sigs.columns
-        assert sigs.agg({"_last_batch": "max"}).collect()[0][0] == 1
+        # every row carries the store's high-water mark, not the id of the
+        # batch that added it
+        stamps = {r[0] for r in sigs.select("_last_batch").distinct().collect()}
+        assert stamps == {1}
         # full replay on a fresh checkpoint: batch ids restart at 0 <=
         # high-water 1 -> both skipped; outputs and store byte-stable
         before = sorted(map(tuple, sigs.drop("_last_batch").collect()))
@@ -921,6 +924,8 @@ class TestStreamNeardupDedup:
         # 21 near-matches doc 5 from two batches ago; 22 is too short to
         # shingle (documented caveat) and passes through
         assert surv3 == surv | {22}
+        restamped = spark.read.parquet(store).select("_last_batch").distinct()
+        assert {r[0] for r in restamped.collect()} == {2}
 
 
 class TestStreamIvfAppend:
@@ -1648,3 +1653,133 @@ class TestStreamExpectations:
                 str(tmp_path / "s"),
                 [{"type": "not_null", "column": "v"}] * 2,
             )
+
+
+def _neardup_case(spark, tmp_path):
+    from metaframe_spark.streaming import stream_neardup_dedup
+
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    text = lambda i: " ".join(f"w{i}x{j} token{i}y{j}" for j in range(10))
+    batches = [
+        mk([(i, text(i)) for i in range(1, 5)] + [(5, text(1) + " tail")]),
+        mk([(11, text(2) + " other tail"), (12, text(12))]),
+    ]
+    return batches, lambda stream, ckpt: stream_neardup_dedup(
+        stream, str(tmp_path / "store"), str(tmp_path / "out"),
+        checkpoint_dir=ckpt,
+    )
+
+
+def _semantic_case(spark, tmp_path):
+    from metaframe_spark.operators import unit_normalize
+    from metaframe_spark.operators.similarity import (
+        fit_sampled_centroids,
+        write_ivf_corpus,
+    )
+    from metaframe_spark.streaming import stream_semantic_dedup
+
+    emb = unit_normalize(load_table(spark, SF, "embeddings").to_spark())
+    vecs = {
+        r.vec_id: list(r.embedding)
+        for r in emb.filter(F.col("vec_id") < 20).collect()
+    }
+    mk = lambda rows: spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    )
+    seen0 = mk([(100 + i, vecs[10 + i]) for i in range(10)])
+    corpus = str(tmp_path / "corpus")
+    write_ivf_corpus(
+        seen0, fit_sampled_centroids(seen0, 2, seed=3, order_col="vec_id"),
+        corpus,
+    )
+    batches = [
+        mk([(i, vecs[i]) for i in range(1, 7)] + [(7, vecs[1])]),
+        mk([(11, vecs[10]), (12, vecs[8]), (13, vecs[8])]),
+    ]
+    return batches, lambda stream, ckpt: stream_semantic_dedup(
+        stream, corpus, str(tmp_path / "out"), min_cosine=0.99,
+        within_cells=1, checkpoint_dir=ckpt,
+    )
+
+
+def _moment_case(spark, tmp_path):
+    from metaframe_spark.streaming import stream_moment_sketches
+
+    mk = lambda rows: spark.createDataFrame(rows, "g int, x double")
+    batches = [
+        mk([(i % 3, float(i)) for i in range(30)]),
+        mk([(i % 3, float(i * 7 % 11)) for i in range(30)]),
+    ]
+    return batches, lambda stream, ckpt: stream_moment_sketches(
+        stream, str(tmp_path / "store"), ["x"], group_by=["g"],
+        checkpoint_dir=ckpt,
+    )
+
+
+def _cdc_case(spark, tmp_path):
+    from metaframe_spark.streaming import apply_cdc_stream
+
+    base = str(tmp_path / "base")
+    spark.createDataFrame(
+        [(i, f"v{i}") for i in range(10)], "id long, v string"
+    ).write.parquet(base)
+    mk = lambda rows: spark.createDataFrame(
+        rows, "id long, v string, deleted boolean, seq long"
+    )
+    batches = [
+        mk([(1, "b1", False, 1), (20, "new", False, 2)]),
+        mk([(2, "x", True, 3), (1, "b2", False, 4)]),
+    ]
+    return batches, lambda stream, ckpt: apply_cdc_stream(
+        stream, base, ["id"], "seq", delete_col="deleted", checkpoint_dir=ckpt,
+    )
+
+
+class TestStreamBatchLifecycle:
+    """Every stream_* / apply_cdc_stream micro-batch runs in its own
+    persist_scope: with no caller scope, a drained query leaves the
+    CacheManager at its starting size, whether its batches commit or
+    fail."""
+
+    @staticmethod
+    def _run(spark, tmp_path, batches, start):
+        src = tmp_path / "src"
+        for i, b in enumerate(batches):
+            b.coalesce(1).write.parquet(str(src / f"f{i}"))
+        stream = (
+            spark.readStream.schema(batches[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+        )
+        q = start(stream, str(tmp_path / "ckpt"))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return q
+
+    @pytest.mark.parametrize(
+        "case", [_neardup_case, _semantic_case, _moment_case, _cdc_case],
+        ids=["neardup", "semantic", "moments", "cdc"],
+    )
+    def test_batches_leave_no_cached_plans(
+        self, spark, tmp_path, cached_plans, case
+    ):
+        batches, start = case(spark, tmp_path)
+        n_plans = cached_plans()
+        q = self._run(spark, tmp_path, batches, start)
+        assert {p["batchId"] for p in q.recentProgress} == {0, 1}
+        assert cached_plans() == n_plans
+
+    def test_failed_batch_leaves_no_cached_plans(
+        self, spark, tmp_path, cached_plans
+    ):
+        """The survivors' write raises after the batch pinned its
+        signatures (a regular file blocks the output directory): the
+        batch's scope still releases the pin."""
+        batches, start = _neardup_case(spark, tmp_path)
+        (tmp_path / "out").write_text("not a directory")
+        n_plans = cached_plans()
+        with pytest.raises(Exception, match="not a directory"):
+            self._run(spark, tmp_path, batches, start)
+        assert cached_plans() == n_plans
