@@ -4,26 +4,37 @@ The reference has no reader of its own — a MetaFrame is always constructed
 from an existing DataFrame (``/root/reference/metaframe/metaframe.py:63-68``,
 SURVEY.md §2.3 row 1). We provide thin readers over ``spark.read.*`` that
 wrap the result and, for path-based formats, restore the metadata sidecar
-written by :class:`metaframe_spark.core.MetaWriter`.
+written by :class:`metaframe_spark.core.MetaWriter`. A path read infers its
+schema once per unchanged local file listing (:func:`_load`).
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Any, Dict, Optional
+import stat
+from typing import Any, Dict, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .core import MetaFrame, MetaWriter
+
+
+def _local_path(path: str) -> Optional[str]:
+    """``path`` as a local filesystem path (plain or ``file:`` URI), or None
+    for a remote URI."""
+    if "://" in path and not path.startswith("file:"):
+        return None
+    return path[len("file:"):] if path.startswith("file:") else path
 
 
 def _read_sidecar(path: str) -> Dict[str, Any]:
     try:
         # mirror MetaWriter._write_sidecar: local paths and file: URIs only
-        if "://" in path and not path.startswith("file:"):
+        local = _local_path(path)
+        if local is None:
             return {}
-        local = path[len("file:"):] if path.startswith("file:") else path
         sidecar = os.path.join(local, MetaWriter.SIDECAR)
         if os.path.isfile(sidecar):
             with open(sidecar) as fh:
@@ -38,29 +49,145 @@ def wrap(df: DataFrame, metadata: Optional[Dict[str, Any]] = None) -> MetaFrame:
     return MetaFrame(df, metadata)
 
 
-def _ns_timestamp_columns(path: str) -> list:
+def _ns_timestamp_columns(path: str) -> tuple:
     """Names of parquet columns typed timestamp[ns] (footer inspection only).
 
     Spark 4 rejects TIMESTAMP(NANOS) parquet outright (PARQUET_TYPE_ILLEGAL);
     DuckDB silently truncates to microseconds. We read the footer with
-    pyarrow (no data scan) so :func:`read_parquet` can apply the
+    pyarrow (no data scan) so :func:`_load` can apply the
     nanosAsLong + truncate-to-micros workaround and stay engine-compatible.
     """
     try:
         import pyarrow as pa
         import pyarrow.dataset as ds
 
-        if "://" in path and not path.startswith("file:"):
-            return []
-        local = path[len("file:"):] if path.startswith("file:") else path
+        local = _local_path(path)
+        if local is None:
+            return ()
         schema = ds.dataset(local, format="parquet").schema
-        return [
+        return tuple(
             f.name
             for f in schema
             if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
+        )
     except Exception:
-        return []
+        return ()
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+#: Session confs that change the schema a reader infers from the same files;
+#: their values are part of every cached schema's key.
+_INFERENCE_CONFS = (
+    _NANOS_AS_LONG,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.orc.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.timestampType",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
+class _Schema(NamedTuple):
+    listing: tuple  # (relative name, size, mtime_ns) of every file read
+    schema: StructType  # what Spark inferred (or wrote) for that listing
+    ns_cols: tuple  # parquet timestamp[ns] columns, see read_parquet
+
+
+#: The schema cache: one entry per (format, local path, options, inference
+#: confs), replaced whenever the files under the path change, so it grows
+#: with the distinct paths read, not with rewrites.
+_SCHEMAS: Dict[tuple, _Schema] = {}
+
+
+def _listing(local: str) -> Optional[tuple]:
+    """(relative name, size, mtime_ns) of every file at or under ``local``,
+    ``k=v`` partition directories included; None when there is no file."""
+    try:
+        st = os.stat(local)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _, names in os.walk(local):
+            for name in names:
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, local), st.st_size, st.st_mtime_ns))
+    except OSError:  # missing, or changing under us: let Spark read it
+        return None
+    return tuple(sorted(files)) or None
+
+
+def _schema_key(spark: SparkSession, fmt: str, local: str, options: Dict) -> tuple:
+    return (
+        fmt,
+        local,
+        tuple(sorted((k, str(v)) for k, v in options.items())),
+        tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+
+
+def _remember_schema(spark: SparkSession, fmt: str, path: str, schema: StructType) -> None:
+    """Record ``schema`` as what ``spark.read.<fmt>(path)`` infers from the
+    files now at ``path`` — for a writer that knows what it just wrote."""
+    local = _local_path(path)
+    listing = _listing(local) if local is not None else None
+    if listing:
+        _SCHEMAS[_schema_key(spark, fmt, local, {})] = _Schema(listing, schema, ())
+
+
+def _load(spark: SparkSession, fmt: str, path: str, options: Dict[str, Any]) -> DataFrame:
+    """``spark.read.<fmt>(path, **options)`` without a schema-inference job
+    when the same local files were read before.
+
+    Spark infers a schema with a job on every read that is given none
+    (a warm sf0.001 ``load_table`` on 4 cores: about 120 ms, against about
+    20 ms with a schema). Here the schema Spark inferred is kept, with the
+    file listing it came from, and passed back through ``.schema()`` while
+    the listing is unchanged.
+    Because it is Spark's own schema the types match inference exactly.
+    Remote URIs, globs, empty directories, an explicit ``schema`` and any
+    ``mergeSchema`` option read with inference every time.
+    """
+    local = _local_path(path)
+    listing = None
+    if (
+        local is not None
+        and "schema" not in options
+        and not any(k.lower() == "mergeschema" for k in options)
+    ):
+        listing = _listing(local)
+    hit = _SCHEMAS.get(_schema_key(spark, fmt, local, options)) if listing else None
+    if hit is not None and hit.listing == listing:
+        df = getattr(spark.read.schema(hit.schema), fmt)(path, **options)
+        ns_cols = hit.ns_cols
+    else:
+        ns_cols = _ns_timestamp_columns(path) if fmt == "parquet" else ()
+        if ns_cols:
+            # Spark 4 cannot read TIMESTAMP(NANOS): read them as raw
+            # nanosecond longs. The conf stays set on the session because
+            # the returned frame's plan consults it at execution time; a
+            # later RAW spark.read.parquet of an ns file then returns long
+            # columns instead of raising. The conf is part of the cache key,
+            # so the entry stored below is keyed with it set.
+            spark.conf.set(_NANOS_AS_LONG, "true")
+        df = getattr(spark.read, fmt)(path, **options)
+        if listing:
+            _SCHEMAS[_schema_key(spark, fmt, local, options)] = _Schema(
+                listing, df.schema, ns_cols
+            )
+    if ns_cols:
+        from pyspark.sql import functions as F  # local import: io stays light
+
+        # truncate to microseconds with exact integer division (`div`, never
+        # float `/` — ns epochs exceed 2^53). Matches DuckDB's silent ns→µs
+        # truncation, so oracle comparisons stay value-identical.
+        for c in ns_cols:
+            df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    return df
 
 
 def _read_path(
@@ -74,8 +201,7 @@ def _read_path(
     md = dict(_read_sidecar(path)) if restore_metadata else {}
     if metadata:
         md.update(metadata)
-    reader = getattr(spark.read, fmt)
-    return MetaFrame(reader(path, **options), md)
+    return MetaFrame(_load(spark, fmt, path, options), md)
 
 
 def read_parquet(
@@ -85,27 +211,11 @@ def read_parquet(
     restore_metadata: bool = True,
     **options: Any,
 ) -> MetaFrame:
-    ns_cols = _ns_timestamp_columns(path)
-    if not ns_cols:
-        return _read_path(spark, "parquet", path, metadata, restore_metadata, **options)
-    # Spark 4 cannot read TIMESTAMP(NANOS); read them as raw nanosecond longs
-    # and truncate to microseconds with exact integer division (`div`, never
-    # float `/` — ns epochs exceed 2^53). Matches DuckDB's silent ns→µs
-    # truncation, so oracle comparisons stay value-identical.
-    #
-    # The conf intentionally stays set on the session: the returned frame's
-    # plan consults it at execution time, so restoring it here would break
-    # the (lazy) read. Side effect: later RAW spark.read.parquet calls on
-    # ns files return long columns instead of raising — use this reader for
-    # ns-timestamp data.
-    from pyspark.sql import functions as F  # local import: io stays light
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    mf = _read_path(spark, "parquet", path, metadata, restore_metadata, **options)
-    df = mf.df
-    for c in ns_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return MetaFrame(df, mf.metadata)
+    """Parquet reader. timestamp[ns] columns (which Spark 4 rejects) load as
+    microsecond timestamps, truncated as DuckDB does: the read sets
+    ``spark.sql.legacy.parquet.nanosAsLong`` on the session, and that conf
+    is part of the schema cache's key (see :func:`_load`)."""
+    return _read_path(spark, "parquet", path, metadata, restore_metadata, **options)
 
 
 def read_csv(
@@ -240,7 +350,7 @@ def read_table(
 #: ``(l_orderkey, l_linenumber)`` but the driver-generated parquet violates it
 #: (1161 duplicated PK groups at sf0.001, 11785 at sf0.01 — verified
 #: 2026-08-13), and seeding a false PK would arm the dedup short-circuit into
-#: silently returning duplicate rows (ADVICE r1, high).
+#: silently returning duplicate rows. A key listed here must hold in the data.
 TPCH_PRIMARY_KEYS: Dict[str, list] = {
     "region": ["r_regionkey"],
     "nation": ["n_nationkey"],

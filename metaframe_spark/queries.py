@@ -165,7 +165,7 @@ def q07(spark, sf):
     o = load_table(spark, sf, "orders")
     # customer GROWS with scale factor (~15B rows at 100 TB) — no explicit
     # broadcast hint; AQE's autoBroadcastJoinThreshold picks broadcast only
-    # while the table actually fits (VERDICT r2 "what's wrong" #1)
+    # while the table actually fits, so the plan stays valid at every scale
     return o.join(c, c["c_custkey"] == o["o_custkey"]).select("c_name", "o_orderkey")
 
 
@@ -254,7 +254,7 @@ def q13(spark, sf):
     # fact-to-fact shuffled join on orderkey. Explicit broadcast hints ONLY
     # for the constant-cardinality dims (nation=25, region=5 rows at EVERY
     # scale factor); customer grows linearly with SF, so its join strategy is
-    # left to AQE's size threshold (VERDICT r2 "what's wrong" #1).
+    # left to AQE's size threshold.
     return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
@@ -674,7 +674,7 @@ def llm_fingerprint(spark, sf):
 #: near-duplicates do not occur naturally in the synthetic documents table,
 #: so a shifted copy is unioned in (same trick as llm_exact_dedup's doubling)
 #: to give the near-dup operators true positives to find. The id offset is
-#: far above any plausible doc_id (ADVICE r3 #1: at 10⁶ it collides once the
+#: far above any plausible doc_id (an offset of 10⁶ would collide once the
 #: corpus passes a million rows, silently corrupting pair identity) and is
 #: GUARDED per-row: a doc_id at or above the offset raises instead of
 #: aliasing a twin — a CASE branch inside codegen, no extra job.
@@ -733,11 +733,11 @@ def llm_ngram_jaccard(spark, sf):
     """Exact word-3gram Jaccard verification, blocked on a 1-permutation
     MinHash fingerprint (min md5 of 3-gram) — an LSH block key whose
     cardinality GROWS with the corpus, so expected pair volume tracks true
-    near-dups instead of n²/|blocks| (VERDICT r2 "what's wrong" #2), and
+    near-dups instead of n²/|blocks|, and
     oversized blocks are split by a second permutation so the worst case
     is sub-quadratic too. Fingerprint and shingle sets both derive from
-    ONE tokenize pass (``minhash_block=True`` — VERDICT r3 "what's wrong"
-    #1: the old two-step fingerprint_column+verify tokenized twice). The
+    ONE tokenize pass (``minhash_block=True``; fingerprinting and
+    verifying separately would tokenize every document twice). The
     corpus is the twin-injected one so the verifier has real near-dups."""
     from .operators import jaccard_similarity_pairs
 
@@ -790,9 +790,9 @@ _ALLPAIRS_JACCARD_ORACLE = (
 @query("llm_minhash_pairs", _ALLPAIRS_JACCARD_ORACLE)
 def llm_minhash_pairs(spark, sf):
     """MinHash-LSH near-duplicate pairs at Jaccard >= 0.7 over the
-    twin-injected corpus (the near-dup regime — VERDICT r2/r3: the old 0.8
-    *distance* threshold accepted pairs down to 0.2 similarity, flooding
-    the candidate set, and ran on a corpus with no true positives).
+    twin-injected corpus (the near-dup regime: a 0.8 *distance*
+    threshold would accept pairs down to 0.2 similarity, flooding the
+    candidate set, and a corpus with no twins has no true positives).
 
     Banded (16×3) candidates + exact shingle-set verification in one scan;
     the oracle is the EXHAUSTIVE all-pairs Jaccard join, so a hash match
@@ -1222,7 +1222,7 @@ def llm_multimodal_frames(spark, sf):
 )
 def llm_image_neardup(spark, sf):
     """Perceptual image near-duplicate pairs (multimodal/__init__.py::
-    image_near_dup_pairs — r10 verdict gap #3): 64-bit dHash fingerprints
+    image_near_dup_pairs): 64-bit dHash fingerprints
     over the binary payloads (one Arrow mapInPandas pass; real
     grayscale-resize-compare when PIL decodes, the deterministic
     byte-grid stub otherwise — the demo payloads are utf-8 text, so the
@@ -2719,7 +2719,7 @@ def llm_mixture_sample(spark, sf):
 )
 def llm_token_budget(spark, sf):
     """Token-denominated corpus cap (operators/packing.py::
-    take_token_budget — r12 verdict next-#3): the maximal PREFIX of the
+    take_token_budget): the maximal PREFIX of the
     doc_id order whose INCLUSIVE running pre-token sum stays within a
     15000-token budget — the reproducible "train on the first N tokens"
     cut every data budget needs. The oracle recomputes the cut with a
@@ -2783,7 +2783,7 @@ def llm_token_budget(spark, sf):
 )
 def llm_pack_documents(spark, sf):
     """Doc-boundary-respecting bin packing (operators/packing.py::
-    pack_documents — r12 verdict next-#4): first-fit-decreasing into
+    pack_documents): first-fit-decreasing into
     256-token bins inside 8 deterministic md5(doc_id) buckets, no
     document ever split; oversized documents come back with bin_id NULL.
     The Spark side places documents with a segment-tree leftmost-fit
@@ -4101,10 +4101,11 @@ def q61_profile_extended(spark, sf):
     min/max. Deliberately TWO one-row aggregations cross-joined (two
     scans): riding the percentile buffers on the distinct-agg Expand
     multiplied their input 5x and measured 6x slower — the split shape
-    and the measurement are documented at maintenance.py (r7);
+    and the measurement are documented at maintenance.py;
     ``exact_percentiles=False`` is the documented petabyte lever
     (t-digest approx_percentile, bounded state). Exact interpolation
-    (quantile_cont semantics) is engine-reproducible at round-6."""
+    (quantile_cont semantics) is engine-reproducible, so the oracle
+    compares exact values."""
     from .operators.maintenance import profile_columns
 
     o = load_table(spark, sf, "orders")
@@ -4148,7 +4149,7 @@ def llm_semantic_dedup(spark, sf):
     return semantic_dedup(e, min_cosine=0.35, n_cells=1).select("vec_id")
 
 
-# -- round-8 second-wave entries ----------------------------------------------
+# -- as-of, keep-best dedup and grouped-UDF entries ----------------------------
 
 
 @query(
@@ -4339,8 +4340,7 @@ def q76_regex_funcs(spark, sf):
     "FROM w WHERE tag = 1",
 )
 def q78_asof_nearest(spark, sf):
-    """As-of direction='nearest' (pandas merge_asof parity, round-8
-    operator extension): each click matched to the CLOSEST error event
+    """As-of direction='nearest' (pandas merge_asof parity): each click matched to the CLOSEST error event
     per user, whichever side of it that lies, ties to the earlier one.
     Same union-tag plan as backward/forward — one shuffle on user_id,
     two per-partition sorts (one per direction) feeding a row-local
@@ -4400,7 +4400,7 @@ def q79_set_ops_all(spark, sf):
     ") WHERE rn = 1",
 )
 def llm_dedup_keep_best(spark, sf):
-    """Exact dedup with the keep-CANONICAL policy (round-8 extension of
+    """Exact dedup with the keep-CANONICAL policy (the keep-best form of
     llm_exact_dedup): per content digest, keep the highest-quality copy
     (n_chars as the score here; ties to the lowest id) via a single
     max_by(id, struct(quality, -id)) — still one digest shuffle with
@@ -4733,7 +4733,7 @@ def q81_cogroup(spark, sf):
     bench readers: this entry's BENCH number is therefore the sliced
     cogroup (1/19 of customers), NOT full-corpus cogroup cost — the
     unsliced grouped-UDF run measured ~14.6 s at sf0.1 (pure per-group
-    Python dispatch floor, BASELINE.md round-8 notes) and is exactly the
+    Python dispatch floor, BASELINE.md) and is exactly the
     shape you should NOT use when a join+agg expresses the logic."""
     import pandas as pd
 
@@ -5444,7 +5444,7 @@ def llm_ivf_store(spark, sf):
     k-means index is FIT ONCE, written to parquet as the tiny (cell,
     centroid) relation, reloaded, and the query batch probes the
     RELOADED index — the per-call corpus count + fit that llm_ivf_topk
-    pays (the r9 verdict's missing piece) is paid exactly once and
+    pays is paid exactly once and
     amortized over every later batch, the same persistable-state
     pattern as the MinHash signature store. With n_probe = n_lists
     every cell is probed, so the result is pair-for-pair the exact
@@ -5517,7 +5517,7 @@ def llm_ivf_corpus(spark, sf):
 @query("llm_ivf_append", _IVF_EXACT_ORACLE)
 def llm_ivf_append(spark, sf):
     """Appendable IVF serving corpus (operators/similarity.py::
-    append_ivf_corpus — the FAISS add() analogue, r10 verdict gap #2):
+    append_ivf_corpus — the FAISS add() analogue):
     the layout is built from a BASE split (vec_id % 4 != 0) only, then
     the remaining quarter of the corpus is appended — assigned with the
     co-persisted STORED centroids (no foreign matrix can enter) and
@@ -5776,7 +5776,7 @@ def llm_ivf_pq(spark, sf):
 )
 def llm_pq_refine(spark, sf):
     """Two-stage exact-refined PQ serving (operators/similarity.py::
-    pq_refine — the FAISS IndexRefineFlat pattern, VERDICT r13 next-#4):
+    pq_refine — the FAISS IndexRefineFlat pattern):
     the compressed-domain ADC probe (pq_topk over the exemplar
     codebooks) nominates a 4k shortlist (k'=20), then the FULL-PRECISION
     float vectors re-rank exactly those ids and the top 5 per query win
@@ -6760,7 +6760,7 @@ def llm_rep_signals(spark, sf):
 def q95_anomaly_rules(spark, sf):
     """Anomaly rules over the persisted moment-sketch store
     (operators/expectations.py::validate_anomalies — Deequ's
-    anomaly-detection face, r10 verdict next-#4): a per-day moments
+    anomaly-detection face): a per-day moments
     store over events (one tiny row per (day, event_type)) is the ONLY
     input; each type's LATEST day is judged against its own trailing
     7-day history — row count and mean within a relative band of the
@@ -6901,7 +6901,7 @@ def q96_drift_from_store(spark, sf):
     )
 
 
-# -- round-12 additions: real BPE, substring dedup, DSIR ---------------------
+# -- real BPE, substring dedup, DSIR ------------------------------------------
 
 #: Literal byte-level BPE merges table for the llm_bpe_tokens entry — a
 #: VALID table (every rule's constituents are single bytes or products of
@@ -6957,7 +6957,7 @@ _BPE_MERGES_VALUES = ", ".join(
 )
 def llm_bpe_tokens(spark, sf):
     """REAL byte-level BPE token counts (operators/text.py::bpe_tokenize
-    / bpe_encode_words — r11 verdict next-#2): every document is
+    / bpe_encode_words): every document is
     pre-tokenized on the shared cross-engine pattern, each DISTINCT
     pre-token is greedily encoded against the literal merges relation
     (lowest rank first, leftmost occurrence, to fixpoint — the trained-
@@ -7025,8 +7025,8 @@ def llm_bpe_tokens(spark, sf):
 )
 def llm_substring_dedup(spark, sf):
     """Exact-substring removal (operators/dedup.py::substring_dedup —
-    Lee et al. 2022, the published strongest-dedup result; r11 verdict
-    next-#3): every 29th document and its injected twin form the
+    Lee et al. 2022, the published strongest-dedup result): every 29th
+    document and its injected twin form the
     corpus; winnowing fingerprint positions localize every shared
     passage, the canonical (lowest id, pos) occurrence survives, and
     each losing occurrence's ±(window−1)-padded extent is spliced out
@@ -7072,7 +7072,7 @@ def llm_substring_dedup(spark, sf):
 )
 def llm_dsir_weights(spark, sf):
     """DSIR importance weights (operators/sampling.py::dsir_weights —
-    Xie et al. 2023; r11 verdict next-#4): every 7th document plays the
+    Xie et al. 2023): every 7th document plays the
     curated target set, the full documents table is the raw pool, and
     each raw document scores the log-likelihood ratio of its hashed
     unigram+bigram bag under the target vs the raw smoothed
@@ -7200,8 +7200,7 @@ def llm_bpe_chunks(spark, sf):
 )
 def llm_bpe_chunks_special(spark, sf):
     """BPE chunking with per-chunk special-token reservation (operators/
-    text.py::bpe_chunk_documents n_special_per_chunk — r12 verdict
-    next-#5): same corpus slice and merges as llm_bpe_chunks, but every
+    text.py::bpe_chunk_documents n_special_per_chunk): same corpus slice and merges as llm_bpe_chunks, but every
     64-token training window reserves 2 slots for the collator's
     BOS/EOS, so the content stream is cut every 62 REAL tokens and each
     chunk's reported n_tokens includes the reservation — the count the

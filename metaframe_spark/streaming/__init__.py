@@ -414,14 +414,20 @@ def _stream_store(stream, store_path: str, fold, checkpoint_dir: Optional[str],
     suffices — but one store, one checkpoint: a fresh checkpoint restarts
     ids at 0 and is skipped against an old store's mark.
     ``high_water=False`` is for idempotent folds (HLL register-max,
-    upsert)."""
+    upsert).
+
+    Each commit records the written schema under the store's new file
+    listing in :mod:`metaframe_spark.io`'s schema cache, so the next
+    batch reads ``prior`` without a schema-inference job; after a restart,
+    or a rewrite by anyone else, the listing differs and the read infers."""
+    from ..io import _load, _remember_schema
 
     def _apply(batch_df, batch_id: int):
         spark = batch_df.sparkSession
         _recover_swap_for_batch(spark, store_path, batch_id)
         fs, P = _hadoop_fs(spark, store_path)
         has_store = fs.exists(P(store_path))
-        prior = spark.read.parquet(store_path) if has_store else None
+        prior = _load(spark, "parquet", store_path, {}) if has_store else None
         if high_water and has_store:
             last = prior.agg(F.max("_last_batch")).collect()[0][0]
             if last is not None and batch_id <= last:
@@ -441,6 +447,7 @@ def _stream_store(stream, store_path: str, fold, checkpoint_dir: Optional[str],
                 f"{label} batch {batch_id}: failed to promote "
                 f"first-batch staging ({staging} -> {store_path})"
             )
+        _remember_schema(spark, "parquet", store_path, merged.schema)
 
     return _each_batch(stream, _apply, checkpoint_dir)
 

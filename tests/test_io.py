@@ -1,11 +1,13 @@
 """Metadata sidecar round-trips (write → read preserves metadata) for every
 path-based format, plus ns-timestamp parquet ingestion."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 from metaframe_spark.core import MetaFrame
-from metaframe_spark.io import read_csv, read_json, read_orc, read_parquet
+from metaframe_spark.io import load_table, read_csv, read_json, read_orc, read_parquet
 
 MD = {"source": "unit", "primary_key": ["o_orderkey"]}
 
@@ -127,6 +129,100 @@ def test_timestamp_parquet_reads_as_micros(spark):
     assert dict(mf.dtypes)["ts"] in ("timestamp", "timestamp_ntz")
     row = mf.orderBy("event_id").first()
     assert row.ts.year == 2024
+
+
+class TestSchemaCache:
+    """Path readers infer a schema once per unchanged local file listing:
+    a repeat read passes Spark's own inferred schema back and launches no
+    job, and equals the first read."""
+
+    def test_repeat_load_table_launches_no_job(self, spark, spark_jobs, sf_dir, tmp_path):
+        shutil.copy(f"{sf_dir}/orders.parquet", tmp_path / "orders.parquet")
+        first, jobs = spark_jobs(lambda: load_table(spark, str(tmp_path), "orders"))
+        assert jobs  # the first read infers the schema with a job
+        second, jobs = spark_jobs(lambda: load_table(spark, str(tmp_path), "orders"))
+        assert jobs == []
+        assert second.schema == first.schema
+        assert second.primary_key == ["o_orderkey"]
+        assert second.count() == first.count()
+
+    def test_rewrite_invalidates_entry(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        spark.range(3).write.parquet(path)
+        assert read_parquet(spark, path).columns == ["id"]
+        spark.range(3).withColumn("extra", F.col("id") * 10).write.mode(
+            "overwrite"
+        ).parquet(path)
+        back = read_parquet(spark, path)
+        assert back.columns == ["id", "extra"]
+        assert sorted(r.extra for r in back.collect()) == [0, 10, 20]
+
+    def test_explicit_schema_bypasses_cache(self, spark, tmp_path):
+        from metaframe_spark import io
+
+        path = str(tmp_path / "c")
+        spark.range(3).write.option("header", "true").csv(path)
+        inferred = read_csv(spark, path, header=True, inferSchema=True)
+        assert dict(inferred.dtypes) == {"id": "int"}
+        n_entries = len(io._SCHEMAS)
+        given = read_csv(spark, path, header=True, inferSchema=True, schema="id string")
+        assert dict(given.dtypes) == {"id": "string"}
+        assert len(io._SCHEMAS) == n_entries  # an explicit schema is never cached
+
+    def test_merge_schema_bypasses_cache(self, spark, spark_jobs, tmp_path):
+        path = tmp_path / "m"
+        spark.range(2).write.parquet(str(path / "k=1"))
+        spark.range(2).withColumn("b", F.lit("x")).write.parquet(str(path / "k=2"))
+        for _ in range(2):
+            merged, jobs = spark_jobs(
+                lambda: read_parquet(spark, str(path), mergeSchema="true")
+            )
+            assert jobs  # inferred (and merged) on every read
+            assert merged.columns == ["id", "b", "k"]
+
+    @pytest.mark.parametrize("fmt", ["parquet", "orc", "json", "csv"])
+    def test_cached_read_equals_first_read(self, spark, spark_jobs, frame, tmp_path, fmt):
+        path = str(tmp_path / fmt)
+        writer = frame.to_spark().withColumn("s", F.concat(F.lit("v"), F.col("o_orderkey"))).write
+        if fmt == "csv":
+            writer = writer.option("header", "true")
+        getattr(writer, fmt)(path)
+        options = {"header": True, "inferSchema": True} if fmt == "csv" else {}
+        reader = {"parquet": read_parquet, "orc": read_orc, "json": read_json, "csv": read_csv}[fmt]
+        first = reader(spark, path, **options)
+        second, jobs = spark_jobs(lambda: reader(spark, path, **options))
+        assert jobs == []
+        assert second.schema == first.schema
+        assert sorted(second.collect()) == sorted(first.collect())
+
+    def test_partition_column_keeps_its_type(self, spark, spark_jobs, tmp_path):
+        path = str(tmp_path / "p")
+        spark.range(6).withColumn("k", (F.col("id") % 3).cast("int")).write.partitionBy(
+            "k"
+        ).parquet(path)
+        first = read_parquet(spark, path)
+        second, jobs = spark_jobs(lambda: read_parquet(spark, path))
+        assert jobs == []
+        assert dict(second.dtypes) == dict(first.dtypes) == {"id": "bigint", "k": "int"}
+        assert sorted(second.collect()) == sorted(first.collect())
+
+    def test_ns_timestamps_read_the_same_micros_twice(self, spark, sf_dir, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        ns = str(tmp_path / "ns.parquet")
+        pq.write_table(
+            pa.table({"ts": pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))}),
+            ns,
+        )
+        reads = {}
+        for path in (f"{sf_dir}/events.parquet", ns):
+            first = [r.ts for r in read_parquet(spark, path).select("ts").collect()]
+            second = [r.ts for r in read_parquet(spark, path).select("ts").collect()]
+            assert second == first
+            reads[path] = first
+        # the ns column is truncated, not rounded, to microseconds
+        assert reads[ns][0].microsecond == 123456
 
 
 def test_read_text_line_and_wholetext_modes(spark, tmp_path):

@@ -1739,7 +1739,9 @@ class TestStreamBatchLifecycle:
     """Every stream_* / apply_cdc_stream micro-batch runs in its own
     persist_scope: with no caller scope, a drained query leaves the
     CacheManager at its starting size, whether its batches commit or
-    fail."""
+    fail. Each versioned-store commit records the store's schema under its
+    new listing, so the next batch reads the store with no
+    schema-inference job and sees exactly what inference would give."""
 
     @staticmethod
     def _run(spark, tmp_path, batches, start):
@@ -1759,17 +1761,31 @@ class TestStreamBatchLifecycle:
         return q
 
     @pytest.mark.parametrize(
-        "case", [_neardup_case, _semantic_case, _moment_case, _cdc_case],
+        "case, store",
+        [(_neardup_case, "store"), (_semantic_case, None),
+         (_moment_case, "store"), (_cdc_case, "base")],
         ids=["neardup", "semantic", "moments", "cdc"],
     )
     def test_batches_leave_no_cached_plans(
-        self, spark, tmp_path, cached_plans, case
+        self, spark, tmp_path, cached_plans, spark_jobs, case, store
     ):
+        from metaframe_spark.io import _load
+
         batches, start = case(spark, tmp_path)
         n_plans = cached_plans()
         q = self._run(spark, tmp_path, batches, start)
         assert {p["batchId"] for p in q.recentProgress} == {0, 1}
         assert cached_plans() == n_plans
+        if store is None:  # the IVF corpus is append-only, not a store
+            return
+        path = str(tmp_path / store)
+        cached, jobs = spark_jobs(lambda: _load(spark, "parquet", path, {}))
+        assert jobs == []
+        inferred = spark.read.parquet(path)
+        assert cached.schema == inferred.schema
+        assert sorted(cached.collect(), key=str) == sorted(
+            inferred.collect(), key=str
+        )
 
     def test_failed_batch_leaves_no_cached_plans(
         self, spark, tmp_path, cached_plans
