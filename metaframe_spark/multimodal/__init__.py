@@ -149,7 +149,7 @@ def image_dhash(
 ) -> DataFrame:
     """64-bit perceptual difference-hash (dHash) fingerprints over binary
     image payloads — the fingerprint a multimodal training-data pipeline
-    dedups with (r10 verdict gap #3): near-identical images (re-encodes,
+    dedups with: near-identical images (re-encodes,
     small edits, resizes) land within a few Hamming bits of each other,
     unlike the exact sha256 digest which any single-byte change escapes.
 
@@ -225,7 +225,7 @@ def image_dhash(
     # the id column passes through UNTOUCHED, so the output schema carries
     # its actual input type — hardcoding `long` would make a string-id
     # corpus die deep inside the Arrow cast with an error naming neither
-    # the operator nor the column (r11 self-review)
+    # the operator nor the column
     id_type = df.schema[id_col].dataType.simpleString()
     return df.select(id_col, payload_col).mapInPandas(
         fingerprint, schema=f"{id_col} {id_type}, {out_col} long, mode string"
@@ -637,8 +637,8 @@ def video_near_dup_pairs(
     ).filter(F.col("_da") != F.col("_db"))
     # vote on DISTINCT matched frames of the lower-id doc, not on match
     # PAIRS: a repeated frame (padding, black frames) would otherwise
-    # multiply the count past either document's frame total (r11
-    # self-review) — n_shared_frames is "how many of the lower doc's
+    # multiply the count past either document's frame total —
+    # n_shared_frames is "how many of the lower doc's
     # frames found a near-match", bounded by max_frames
     lo_frame = F.when(
         F.col("_da") < F.col("_db"), F.col("_fa")

@@ -9,6 +9,14 @@ Scale design (the 100-TB contract of the build brief):
   ``pyspark.ml.feature.MinHashLSH`` banded ``approxSimilarityJoin``: the
   join key is the band bucket, so candidate volume is O(collisions), never
   the O(n²) cross product.
+* **banded MinHash near-dup** — one path for every operator of the
+  family (:func:`minhash_near_dup_pairs`, :func:`minhash_near_dup_against`,
+  :func:`prefix_filter_pairs` and ``stream_neardup_dedup``'s fold): the
+  :func:`minhash_signatures` relation (``_shingle_sets`` is its one
+  tokenizer) → :func:`_band_keys` → the operator's own candidate join (a
+  banded self-join, a banded cross-side join or a prefix join) →
+  :func:`_verify_pairs`, the one exact-Jaccard verify. Text is tokenized
+  once per call and every operator applies the same threshold test.
 * **simhash** — 64-bit fingerprint computed per-row with nested
   higher-order functions (zero shuffle, zero Python); near-dup candidates
   come from a banded self-join on 16-bit sub-bands (any pair within
@@ -230,11 +238,11 @@ def minhash_near_dup_pairs(
     (a 64-bit collision *inside one compared pair* ~1e-15 — the counts are
     exact in practice, and cheap: long arrays, not strings).
 
-    Scale shape: one tokenize scan — the hashed-shingle relation is
-    referenced four times (band build + both verify sides) and is
-    ``persist()``-ed (MEMORY_AND_DISK) so the text is tokenized once, the
-    standard shape for multi-pass LSH pipelines. The cache is released by
-    the operator itself: the (small) verified-pairs result is
+    Scale shape: one tokenize scan — the :func:`minhash_signatures`
+    relation is referenced three times (band build + both verify sides)
+    and is ``persist()``-ed (MEMORY_AND_DISK) so the text is tokenized
+    once, the standard shape for multi-pass LSH pipelines. The cache is
+    released by the operator itself: the (small) verified-pairs result is
     ``localCheckpoint``-ed eagerly — materializing it once and truncating
     its lineage off the cached relation — and the cache unpersisted
     before returning, so a call with no caller scope leaves no
@@ -247,37 +255,29 @@ def minhash_near_dup_pairs(
 
     Returns (id_a, id_b, n_inter, n_union, jaccard), id_a < id_b.
     """
-    from ..scale import fan_out
+    sigs = minhash_signatures(df, id_col, text_col, shingle_n).persist()
+    out = _banded_self_pairs(sigs, id_col, n_bands, band_rows, min_jaccard, seed)
+    sigs.unpersist()
+    return out
 
-    # token-count filter BEFORE the shingle projection: filtering on
-    # size(_shs) afterwards re-evaluates the interpreted shingle lambda
-    # inside the predicate (~8× cost); size(tokens) >= n is equivalent.
-    hashed = (
-        fan_out(df).select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= shingle_n)
-        .withColumn("_shs", F.array_distinct(shingles("_toks", shingle_n)))
-        .select(
-            id_col,
-            F.expr("transform(_shs, s -> xxhash64(s))").alias("_sh"),
-        )
-        .withColumn("_n", F.size("_sh"))
-    ).persist()
-    # n_bands*band_rows minhash permutations: permutation p re-hashes every
-    # shingle hash with salt p and takes the min; band j hashes its r
-    # consecutive permutation minima (a slice of the permutation array)
-    # into one 64-bit key. One nested-transform expression — all codegen,
-    # zero Python, one pass over the shingle array per permutation.
+
+def _band_keys(
+    sigs: DataFrame, id_col: str, n_bands: int, band_rows: int, seed: int
+) -> DataFrame:
+    """``(id, _band, _bk)``: the ``n_bands`` band keys of every document of
+    a :func:`minhash_signatures` relation. Permutation p re-hashes every
+    shingle hash with salt ``seed + p`` and takes the min; band j hashes
+    its ``band_rows`` consecutive permutation minima (a slice of the
+    permutation array) into one 64-bit key. One nested-transform
+    expression — all codegen, zero Python, one pass over the shingle
+    array per permutation. Key equality is the banded candidate test, so
+    every operator that compares band keys must derive them here."""
     n_perms = n_bands * band_rows
     perms = (
         f"transform(sequence(0, {n_perms - 1}), "
-        f"p -> array_min(transform(_sh, h -> xxhash64(h, {seed} + p))))"
+        f"p -> array_min(transform(shingle_hashes, h -> xxhash64(h, {seed} + p))))"
     )
-    # both self-join sides consume bands; without this pin the
-    # n_perms-permutation minhash pass over every shingle array runs
-    # twice (the broadcast build side cannot reuse the probe side's
-    # computation). The cached relation is tiny: (id, band, key) ×
-    # n_bands rows per document.
-    bands = hashed.withColumn("_perms", F.expr(perms)).select(
+    return sigs.withColumn("_perms", F.expr(perms)).select(
         id_col,
         F.posexplode(
             F.expr(
@@ -285,7 +285,79 @@ def minhash_near_dup_pairs(
                 f"j -> xxhash64(slice(_perms, j * {band_rows} + 1, {band_rows}), j))"
             )
         ).alias("_band", "_bk"),
-    ).persist()
+    )
+
+
+def _verify_pairs(
+    cand: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    names: Sequence[str],
+    min_jaccard: float,
+) -> DataFrame:
+    """Exact-Jaccard verification of a candidate pair relation ``cand``
+    whose two id columns are ``names``: each side's shingle hashes come
+    from the :func:`minhash_signatures` relation ``left`` / ``right``
+    (keyed on ``id_col``). Returns ``(*names, n_inter, n_union, jaccard)``
+    for the pairs with ``J ≥ min_jaccard``.
+
+    |A ∪ B| = |A| + |B| − |A ∩ B| over distinct sets: the intersection is
+    computed once per pair and the union is pure arithmetic. The threshold
+    test is ``n_inter ≥ t·n_union − 1e-9`` in doubles — the epsilon keeps
+    exact-boundary pairs whose product rounds up (``0.56·25 →
+    14.000000000000002``) and, for ``n_union ≤ 1e6``, admits no
+    sub-threshold pair; :func:`neardup_threshold_sweep` re-applies the
+    same comparison."""
+    a, b = names
+    t = float(min_jaccard)
+
+    def side(sigs, name, tag):
+        return sigs.select(
+            F.col(id_col).alias(name),
+            F.col("shingle_hashes").alias(f"_sh_{tag}"),
+            F.col("n_shingles").alias(f"_n{tag}"),
+        )
+
+    return (
+        cand.join(side(left, a, "a"), a)
+        .join(side(right, b, "b"), b)
+        .select(
+            a,
+            b,
+            F.size(F.array_intersect("_sh_a", "_sh_b")).cast("long").alias("n_inter"),
+            (F.col("_na") + F.col("_nb")).cast("long").alias("_nsum"),
+        )
+        .select(a, b, "n_inter", (F.col("_nsum") - F.col("n_inter")).alias("n_union"))
+        .filter(
+            F.col("n_inter").cast("double")
+            >= t * F.col("n_union").cast("double") - 1e-9
+        )
+        .withColumn(
+            "jaccard", F.round(F.col("n_inter") / F.col("n_union").cast("double"), 6)
+        )
+    )
+
+
+def _banded_self_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    n_bands: int,
+    band_rows: int,
+    min_jaccard: float,
+    seed: int,
+) -> DataFrame:
+    """Verified near-dup pairs ``(id_a, id_b, n_inter, n_union, jaccard)``,
+    ``id_a < id_b``, within one :func:`minhash_signatures` relation (which
+    the caller pins): :func:`_band_keys` → banded self-join →
+    :func:`_verify_pairs`. The result is ``localCheckpoint``-ed eagerly, so
+    its lineage no longer reads ``sigs`` and the caller may release it."""
+    # both self-join sides consume bands; without this pin the
+    # n_perms-permutation minhash pass over every shingle array runs
+    # twice (the broadcast build side cannot reuse the probe side's
+    # computation). The cached relation is tiny: (id, band, key) ×
+    # n_bands rows per document.
+    bands = _band_keys(sigs, id_col, n_bands, band_rows, seed).persist()
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -300,38 +372,9 @@ def minhash_near_dup_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_a = hashed.select(
-        F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"), F.col("_n").alias("_na")
-    )
-    sh_b = hashed.select(
-        F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"), F.col("_n").alias("_nb")
-    )
-    out = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("_sh_a", "_sh_b")).cast("long").alias("n_inter"),
-            (F.col("_na") + F.col("_nb")).cast("long").alias("_nsum"),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            "n_inter",
-            (F.col("_nsum") - F.col("n_inter")).alias("n_union"),
-        )
-        .filter(F.col("n_inter") >= F.lit(min_jaccard) * F.col("n_union"))
-        .withColumn(
-            "jaccard", F.round(F.col("n_inter") / F.col("n_union").cast("double"), 6)
-        )
-    )
-    # materialize the (small) pairs output once, truncating its lineage
-    # off the cached shingle relation, so the cache can be freed NOW
-    # instead of pinning the tokenized corpus for the session
+    out = _verify_pairs(cand, sigs, sigs, id_col, ("id_a", "id_b"), min_jaccard)
     out = out.localCheckpoint(eager=True)
     bands.unpersist()
-    hashed.unpersist()
     return out
 
 
@@ -552,17 +595,8 @@ def jaccard_similarity_pairs(
             "generate candidates with minhash_candidate_pairs/"
             "simhash_near_dup_pairs first"
         )
-    from ..scale import fan_out
-
-    keep = [F.col(id_col)] + ([F.col(block_col).alias("_block")] if block_col else [])
-    # token-count filter BEFORE the shingle projection (not size(_shs)
-    # after): the post-hoc filter re-evaluates the interpreted shingle
-    # lambda in the predicate — measured ~8× the projection cost.
-    base = (
-        fan_out(df).select(*keep, tokens(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= shingle_n)
-        .withColumn("_shs", F.array_distinct(shingles("_toks", shingle_n)))
-    )
+    keep = [F.col(block_col).alias("_block")] if block_col else []
+    base = _shingle_sets(df, id_col, text_col, shingle_n, *keep)
     if minhash_block:
         # 1-permutation MinHash over the same shingle array — min md5; block
         # cardinality grows with the corpus (md5 so oracles can reproduce it)
@@ -587,7 +621,7 @@ def jaccard_similarity_pairs(
             id_col,
             "_block",
             (
-                F.array_distinct(F.expr("transform(_shs, s -> xxhash64(s))"))
+                F.array_distinct(F.expr(_SHINGLE_HASHES))
                 if hash_shingles
                 else F.col("_shs")
             ).alias("_sh"),
@@ -939,6 +973,33 @@ def dedup_against(
     )
 
 
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, *keep: Column
+) -> DataFrame:
+    """``(id, *keep, _toks, _shs)``: every document's distinct word
+    ``shingle_n``-grams — the one tokenizer of :func:`minhash_signatures`
+    (hence of every banded near-dup operator) and
+    :func:`jaccard_similarity_pairs`.
+    Documents with fewer than ``shingle_n`` tokens have no shingles and are
+    dropped. The filter is on the TOKEN count, before the shingle
+    projection: filtering on ``size(_shs)`` afterwards re-evaluates the
+    interpreted shingle lambda inside the predicate (measured ~8× the
+    projection cost), and ``size(tokens) >= n`` ⟺ shingles nonempty."""
+    from ..scale import fan_out
+
+    return (
+        fan_out(df)
+        .select(F.col(id_col), *keep, tokens(F.col(text_col)).alias("_toks"))
+        .filter(F.size("_toks") >= shingle_n)
+        .withColumn("_shs", F.array_distinct(shingles("_toks", shingle_n)))
+    )
+
+
+#: ``_shs`` (shingle strings) → 64-bit shingle hashes: the one hash every
+#: signature, band key and verify intersection is computed over.
+_SHINGLE_HASHES = "transform(_shs, s -> xxhash64(s))"
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -963,17 +1024,9 @@ def minhash_signatures(
     each) — typically ~1/10th of the text it replaces, and exactly the
     relation the verify stage needs for exact-Jaccard precision.
     """
-    from ..scale import fan_out
-
     return (
-        fan_out(df)
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= shingle_n)
-        .withColumn("_shs", F.array_distinct(shingles("_toks", shingle_n)))
-        .select(
-            id_col,
-            F.expr("transform(_shs, s -> xxhash64(s))").alias("shingle_hashes"),
-        )
+        _shingle_sets(df, id_col, text_col, shingle_n)
+        .select(id_col, F.expr(_SHINGLE_HASHES).alias("shingle_hashes"))
         .withColumn("n_shingles", F.size("shingle_hashes"))
         .withColumn("shingle_n", F.lit(int(shingle_n)))
     )
@@ -1027,12 +1080,10 @@ def prefix_filter_pairs(
             f"({min_jaccard})"
         )
     t = float(min_jaccard)
-    base = minhash_signatures(df, id_col, text_col, shingle_n).select(
-        id_col,
-        F.col("shingle_hashes").alias("_sh"),
-        F.col("n_shingles").alias("_n"),
-    ).persist()
-    tok = base.select(id_col, "_n", F.explode("_sh").alias("_tok"))
+    sigs = minhash_signatures(df, id_col, text_col, shingle_n).persist()
+    tok = sigs.select(
+        id_col, F.col("n_shingles").alias("_n"), F.explode("shingle_hashes").alias("_tok")
+    )
     freq = tok.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
     # rarest-first total order: (document frequency, hash value) — every
     # document sorts by the SAME order, which the prefix lemma requires
@@ -1078,40 +1129,7 @@ def prefix_filter_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_a = base.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_sh").alias("_sh_a"),
-        F.col("_n").alias("_na"),
-    )
-    sh_b = base.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_sh").alias("_sh_b"),
-        F.col("_n").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("long")
-    return (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("n_inter", inter)
-        .withColumn(
-            "n_union", (F.col("_na") + F.col("_nb") - F.col("n_inter")).cast("long")
-        )
-        .filter(
-            # integer n_inter vs once-rounded product: error < 1e-10 at
-            # n_union <= 1e6, so the epsilon admits no sub-threshold pair
-            F.col("n_inter").cast("double")
-            >= t * F.col("n_union").cast("double") - 1e-9
-        )
-        .select(
-            "id_a",
-            "id_b",
-            "n_inter",
-            "n_union",
-            F.round(
-                F.col("n_inter").cast("double") / F.col("n_union"), 6
-            ).alias("jaccard"),
-        )
-    )
+    return _verify_pairs(cand, sigs, sigs, id_col, ("id_a", "id_b"), t)
 
 
 def neardup_threshold_sweep(
@@ -1262,59 +1280,24 @@ def minhash_near_dup_against(
 
     sig_sides = []  # (label, relation) of every signature-store side
 
-    def _sig_side(sigs, label):
-        missing = {"shingle_hashes", "n_shingles", "shingle_n"} - set(
-            sigs.columns
-        )
-        if missing or id_col not in sigs.columns:
-            raise ValueError(
-                f"{label} is not a minhash_signatures relation "
-                f"(missing columns: "
-                f"{sorted(missing) + ([id_col] if id_col not in sigs.columns else [])!r})"
+    def _side(raw, sigs, label):
+        if sigs is None:
+            sigs = minhash_signatures(raw, id_col, text_col, shingle_n)
+        else:
+            missing = {"shingle_hashes", "n_shingles", "shingle_n"} - set(
+                sigs.columns
             )
-        sig_sides.append((label, sigs))
-        return sigs.select(
-            id_col,
-            F.col("shingle_hashes").alias("_sh"),
-            F.col("n_shingles").alias("_n"),
-        )
-
-    def _hashed(df_):
-        return (
-            minhash_signatures(df_, id_col, text_col, shingle_n)
-            .select(
-                id_col,
-                F.col("shingle_hashes").alias("_sh"),
-                F.col("n_shingles").alias("_n"),
-            )
-        )
-
-    n_perms = n_bands * band_rows
-    perms = (
-        f"transform(sequence(0, {n_perms - 1}), "
-        f"p -> array_min(transform(_sh, h -> xxhash64(h, {seed} + p))))"
-    )
-
-    def _bands(hashed):
-        return hashed.withColumn("_perms", F.expr(perms)).select(
-            id_col,
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, {n_bands - 1}), "
-                    f"j -> xxhash64(slice(_perms, j * {band_rows} + 1, {band_rows}), j))"
+            if missing or id_col not in sigs.columns:
+                raise ValueError(
+                    f"{label} is not a minhash_signatures relation "
+                    f"(missing columns: "
+                    f"{sorted(missing) + ([id_col] if id_col not in sigs.columns else [])!r})"
                 )
-            ).alias("_band", "_bk"),
-        )
+            sig_sides.append((label, sigs))
+        return sigs.select(id_col, "shingle_hashes", "n_shingles")
 
-    h_new = (
-        _sig_side(new_signatures, "new_signatures")
-        if new_signatures is not None
-        else _hashed(new)
-    )
-    if seen_signatures is not None:
-        h_seen = _sig_side(seen_signatures, "seen_signatures")
-    else:
-        h_seen = _hashed(seen)
+    h_new = _side(new, new_signatures, "new_signatures")
+    h_seen = _side(seen, seen_signatures, "seen_signatures")
     if sig_sides:
         # any row with a foreign shingle_n proves a parameter mismatch that
         # would otherwise yield silent zero-recall (stored and fresh shingle
@@ -1349,11 +1332,11 @@ def minhash_near_dup_against(
                 "the store or match the parameter"
             )
     h_new, h_seen = h_new.persist(), h_seen.persist()
+    a = _band_keys(h_new, id_col, n_bands, band_rows, seed).alias("a")
+    b = _band_keys(h_seen, id_col, n_bands, band_rows, seed).alias("b")
     cand = (
-        _bands(h_new)
-        .alias("a")
-        .join(
-            _bands(h_seen).alias("b"),
+        a.join(
+            b,
             (F.col("a._band") == F.col("b._band"))
             & (F.col("a._bk") == F.col("b._bk")),
         )
@@ -1363,39 +1346,9 @@ def minhash_near_dup_against(
         )
         .dropDuplicates(["new_id", "seen_id"])
     )
-    sh_a = h_new.select(
-        F.col(id_col).alias("new_id"),
-        F.col("_sh").alias("_sh_a"),
-        F.col("_n").alias("_na"),
-    )
-    sh_b = h_seen.select(
-        F.col(id_col).alias("seen_id"),
-        F.col("_sh").alias("_sh_b"),
-        F.col("_n").alias("_nb"),
-    )
-    out = (
-        cand.join(sh_a, "new_id")
-        .join(sh_b, "seen_id")
-        .select(
-            "new_id",
-            "seen_id",
-            F.size(F.array_intersect("_sh_a", "_sh_b")).cast("long").alias("n_inter"),
-            (F.col("_na") + F.col("_nb")).cast("long").alias("_nsum"),
-        )
-        .select(
-            "new_id",
-            "seen_id",
-            "n_inter",
-            (F.col("_nsum") - F.col("n_inter")).alias("n_union"),
-        )
-        .filter(F.col("n_inter") >= F.lit(min_jaccard) * F.col("n_union"))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / F.col("n_union").cast("double"), 6),
-        )
-        .select("new_id", "seen_id", "n_inter", "n_union", "jaccard")
-    )
-    out = out.localCheckpoint(eager=True)
+    out = _verify_pairs(
+        cand, h_new, h_seen, id_col, ("new_id", "seen_id"), min_jaccard
+    ).localCheckpoint(eager=True)
     h_new.unpersist()
     h_seen.unpersist()
     return out

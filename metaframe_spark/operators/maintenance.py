@@ -843,7 +843,7 @@ def compact_sketch_relation(
     schema equals input schema, so compaction composes (day → week →
     month) and the result re-merges like any store.
 
-    The r11 store families compact through the same door: a relation
+    The sketch store families compact through the same door: a relation
     carrying ``depth_i/bucket/count/width/depth/seed`` is a COUNT-MIN
     store (cell counts sum per coarse grain — one groupBy, exact by
     commutativity, spec validated per grain), and one carrying
@@ -999,7 +999,7 @@ def compact_sketch_store(
     is the caller's atomic rename, same discipline as the CDC sink.
     Returns the compacted relation (lazily re-read from ``dest_path``,
     so downstream plans scan the compacted layout)."""
-    # enforce the "NEW path" contract (ADVICE r10): the compaction plan
+    # enforce the "NEW path" contract: the compaction plan
     # reads src_path LAZILY while mode('overwrite') deletes dest_path
     # first — dest == src (or either nested in the other) would destroy
     # the store the job is still reading, possibly the only copy
@@ -1106,7 +1106,7 @@ def merge_bottomk_samples(
     garbage; the draw key travels with the row precisely so merges
     never re-hash).
 
-    The merge keys on ``draw_key`` itself (ADVICE r10): the draw key is
+    The merge keys on ``draw_key`` itself: the draw key is
     a pure function of the id, so ``(group, id)`` duplicates are exactly
     ``(group, draw_key)`` duplicates and the post-dedup key is unique
     per group, making the rank order total — no id-column inference,
@@ -1307,7 +1307,7 @@ def histogram_drift(
         # a side with zero IN-RANGE observations has no distribution to
         # compare (all mass in below/above) — NULL, not NaN from 0-division
         defined = (na > 0) & (nb > 0)
-        # EVERY output column carries the spec check (ADVICE r10): if only
+        # EVERY output column carries the spec check: if only
         # {col}_ks survives projection pruning, the assert must still run —
         # otherwise zip_with NULL-pads unequal-length count arrays and
         # array_max returns a silently wrong KS instead of raising
@@ -1462,10 +1462,10 @@ def _join_null_safe(
     the left side's key columns — the semantics a sketch store needs:
     ``groupBy`` puts NULL group keys in a real group, so every join that
     routes sketch cells back to their group must match that group rather
-    than silently dropping it (ADVICE r12: ``merge_cms_sketches`` lost
-    NULL-key groups through a plain column-name-list join, breaking the
-    documented merged-store exactness; ``cms_estimates`` answered 0 for
-    them). Column-name-list joins use ``EqualTo``; this chains
+    than silently dropping it (through a plain column-name-list join,
+    ``merge_cms_sketches`` would lose NULL-key groups, breaking the
+    documented merged-store exactness, and ``cms_estimates`` would answer
+    0 for them). Column-name-list joins use ``EqualTo``; this chains
     ``eqNullSafe`` on renamed right-side keys and drops them after."""
     if not keys:
         raise ValueError("_join_null_safe: need at least one key")
@@ -1561,7 +1561,7 @@ def merge_cms_sketches(
     cells and CANNOT be merged meaningfully; the mismatch raises AT
     EXECUTION per group via ``assert_true``, and the check gates EVERY
     output column so projection pruning can never silently skip it
-    (the histogram_drift lesson, ADVICE r10). Shuffles touch only
+    (as in histogram_drift). Shuffles touch only
     sketch-sized relations (occupied cells, never raw data)."""
     if not sketch_dfs:
         raise ValueError("merge_cms_sketches: need at least one input")
@@ -1610,7 +1610,7 @@ def merge_cms_sketches(
         F.sum("count").cast("long").alias("count")
     )
     # null-safe on the group keys: groupBy put a NULL-key group in both
-    # relations, and a plain equi-join would silently drop it (ADVICE r12)
+    # relations, and a plain equi-join would silently drop it
     joined = (
         _join_null_safe(merged, spec, keys)
         if keys
@@ -1672,7 +1672,7 @@ def cms_estimates(
         zero = F.lit(0).cast("long")
         # distinct mirrors the non-empty path's final groupBy(keys, column):
         # duplicate query rows must not change output cardinality depending
-        # on whether anything was ever counted (r11 self-review)
+        # on whether anything was ever counted
         return queries.select(*keys, F.col(column)).distinct().select(
             *keys,
             F.col(column),
@@ -1714,7 +1714,7 @@ def cms_estimates(
     totals = totals_g.agg(F.sum("count").cast("long").alias("n_total"))
     # null-safe on the group keys (depth_i/bucket are non-null on the cell
     # side, so <=> coincides with = there): a NULL-key group the sketch
-    # actually holds must answer its true counts, not 0 (ADVICE r12)
+    # actually holds must answer its true counts, not 0
     est = (
         _join_null_safe(probes, cells, [*keys, "depth_i", "bucket"], "left")
         .groupBy(*keys, column)

@@ -28,8 +28,8 @@ No counterpart exists in the reference (its surface stops at relational
 ops); this extends the engine for training-data preparation per the build
 brief.
 
-Why there is deliberately NO streaming face for this module (VERDICT r13
-next-#8, option "one paragraph"): packing is a batch-FINALIZATION step,
+Why there is deliberately NO streaming face for this module: packing is
+a batch-FINALIZATION step,
 not a maintenance step. Every operator here derives its assignment from
 a total property of the finalized corpus — pack_sequences from the
 global running token offset (any later arrival would shift every
@@ -246,7 +246,7 @@ def take_token_budget(
     """Maximal prefix of ``df`` in ``order_col`` order whose token count
     stays within ``budget`` — the reproducible "train on the first N
     tokens of the curated corpus" cut every token-denominated data
-    budget needs (r11 verdict next-#7). A row survives iff the running
+    budget needs. A row survives iff the running
     INCLUSIVE sum of ``tokens_col`` up to and including it is ≤
     ``budget``; with a deterministic total order (the curation
     pipeline's ``seq`` interleave — ``order_col`` values must be
@@ -303,7 +303,7 @@ def pack_documents(
     id_col: str = "doc_id",
     n_groups: int = 32,
 ) -> DataFrame:
-    """Document-boundary-respecting bin packing (r12 verdict next-#4):
+    """Document-boundary-respecting bin packing:
     assign each document to a fixed-capacity training bin WITHOUT ever
     splitting a document — the packing trainers want when cross-document
     attention is forbidden (concat-and-chunk, :func:`pack_sequences`, is

@@ -123,7 +123,7 @@ def _global_rank(df: DataFrame, order_cols, out_col: str):
     :func:`curriculum_stages` (score order) — see global_shuffle's
     docstring for why each piece is shaped this way (range repartition +
     in-partition sort, per-partition counts as a dense literal offset
-    array, the monotonic-id local ordinal; ADVICE r4 on the release
+    array, the monotonic-id local ordinal, and the checkpoint-then-release
     pattern).
 
     Returns ``(ranked, handle, total)``: ``ranked`` carries ``out_col``
@@ -195,7 +195,7 @@ def global_shuffle(
     returning by localCheckpoint-ing the result — the checkpoint
     materializes the output once, truncates the lineage back to the
     cache, and lets ``unpersist()`` free the intermediate instead of
-    pinning it for the session (ADVICE r4).
+    pinning it for the session.
 
     The mechanism itself lives in :func:`_global_rank`, shared with
     :func:`curriculum_stages` (same machinery pointed at a score).

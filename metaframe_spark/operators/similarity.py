@@ -46,7 +46,7 @@ def _local_rel_dir(path: str, format: str, spark=None) -> "str | None":
     ``fs.defaultFS`` is the local filesystem*. On a real cluster a
     scheme-less path resolves against HDFS/S3A, so treating it as
     driver-local would split the layout between the driver's disk and
-    the cluster FS (r15 verdict next-#4); those return None and the
+    the cluster FS; those return None and the
     caller takes the regular Spark job path, as do non-parquet formats
     and explicit remote schemes."""
     if format != "parquet":
@@ -502,7 +502,7 @@ def ann_similarity_join(
     if first is None:  # empty input: empty result, correct schema
         # derive id types from the inputs — hardcoding `long` would make
         # the empty path diverge from the non-empty path for string/other
-        # id columns (ADVICE r4)
+        # id columns
         schema = StructType(
             [
                 StructField("id_l", left.schema[left_id].dataType),
@@ -593,7 +593,7 @@ def cosine_pairs_exact(
     )
 
     # the GEMM path keys rows by int64 id inside numpy; anything else would
-    # silently miscast (e.g. string ids) — fail loudly up front (ADVICE r4)
+    # silently miscast (e.g. string ids) — fail loudly up front
     id_type = corpus.schema[id_col].dataType
     if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
         raise TypeError(
@@ -977,8 +977,8 @@ def append_ivf_corpus(
       the co-persisted ``{path}/_ivf_index`` matrix — there is no
       ``centroids=`` parameter, so a foreign matrix can never split
       the layout into two incompatible cell spaces. A path without a
-      readable co-persisted index is refused (pre-r10 layouts must be
-      rewritten once via :func:`write_ivf_corpus`).
+      readable co-persisted index is refused (layouts written without
+      one must be rewritten once via :func:`write_ivf_corpus`).
     * **Stored bounds, never refit.** A quantized layout
       (``write_ivf_corpus(quantize_bits=...)``) encodes the delta with
       the STORED ``{path}/_sq_bounds`` — refitting bounds on the union
@@ -1020,9 +1020,9 @@ def _prepare_ivf_delta(
     the same relation and move files instead of a direct append so
     replays stay exactly-once.
 
-    ``cells``/``cells_on`` is the internal assignment-reuse fast path
-    (r11 self-review): a caller that ALREADY paid the assignment GEMM
-    against THIS layout's co-persisted centroids (e.g.
+    ``cells``/``cells_on`` is the internal assignment-reuse fast path: a
+    caller that ALREADY paid the assignment GEMM against THIS layout's
+    co-persisted centroids (e.g.
     ``stream_semantic_dedup``, whose dup-check assigns the whole batch)
     passes the (``cells_on``, ``_cell``) relation and the delta joins it
     instead of re-running ``assign_cells`` over the survivors. Every
@@ -1441,7 +1441,7 @@ def ivf_topk_stored(
         except ValueError:
             raise  # a CORRUPT co-persisted index is an error, not absence
         except Exception:
-            stored = None  # pre-r10 layout without a co-persisted index
+            stored = None  # a layout written without a co-persisted index
         if stored is not None and (
             stored.shape != centroids.shape
             or not np.allclose(stored, centroids)
@@ -1694,7 +1694,7 @@ def validate_ivf_corpus(
         ):
             # the allowlist is exact: a stray `_ivf_index_old` or
             # `_sq_bounds.bak` must NOT ride the underscore convention
-            # through (r11 self-review); dot-files are committer crc
+            # through; dot-files are committer crc
             # droppings
             continue
         else:
@@ -1833,7 +1833,7 @@ def validate_ivf_corpus(
                         # isNull leads: size(NULL)/exists(NULL, ...) are
                         # NULL under ANSI, and when(NULL) falls to the
                         # otherwise-0 branch — a NULL vector would pass
-                        # the very invariant it violates (r11 self-review)
+                        # the very invariant it violates
                         F.col(vec_col).isNull()
                         | (F.size(F.col(vec_col)) != F.lit(exp_len))
                         | F.exists(F.col(vec_col), lambda x: x.isNull()),

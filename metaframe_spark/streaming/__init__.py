@@ -1084,9 +1084,10 @@ def stream_neardup_dedup(
 ):
     """Continuous-ingest NEAR-duplicate dedup against an accreting
     MinHash signature store — the streaming composition of the batch
-    operators (``minhash_near_dup_pairs`` → ``dedup_survivors`` for
-    within-batch, ``minhash_near_dup_against(seen_signatures=...)`` for
-    batch-vs-history): per micro-batch, documents near-matching either
+    operators over ONE :func:`minhash_signatures` relation per batch (the
+    banded self-join of ``minhash_near_dup_pairs`` → ``dedup_survivors``
+    for within-batch, ``minhash_near_dup_against(seen_signatures=...)``
+    for batch-vs-history): per micro-batch, documents near-matching either
     a batch sibling (lowest id survives) or ANY previously-ingested
     survivor are dropped, the survivors land under
     ``{out_path}/batch={id}`` and ONLY survivors' signatures join the
@@ -1111,25 +1112,20 @@ def stream_neardup_dedup(
     with :func:`stream_exact_dedup` upstream if byte-identical shorts
     matter. Returns the started ``StreamingQuery`` (availableNow)."""
     from ..operators.dedup import (
+        _banded_self_pairs,
         dedup_survivors,
         minhash_near_dup_against,
-        minhash_near_dup_pairs,
         minhash_signatures,
     )
 
     def fold(batch_df, prior, batch_id):
-        pairs = minhash_near_dup_pairs(
-            batch_df, id_col, text_col, shingle_n=shingle_n,
-            n_bands=n_bands, band_rows=band_rows,
-            min_jaccard=min_jaccard, seed=seed,
-        )
+        # tokenize/shingle/hash the batch ONCE: these signatures serve the
+        # within-batch pairs, the against-store check and the store append
+        # (the batch's persist_scope releases them)
+        sigs = minhash_signatures(batch_df, id_col, text_col, shingle_n).persist()
+        pairs = _banded_self_pairs(sigs, id_col, n_bands, band_rows, min_jaccard, seed)
         survivors = dedup_survivors(batch_df, pairs, id_col)
-        # tokenize/shingle/hash the batch survivors ONCE: these signatures
-        # serve both the against-store check and the store append
-        sigs = minhash_signatures(
-            survivors.select(id_col, text_col),
-            id_col=id_col, text_col=text_col, shingle_n=shingle_n,
-        ).persist()
+        sigs = sigs.join(survivors.select(id_col), id_col, "left_semi")
         if prior is not None:
             hits = minhash_near_dup_against(
                 new_signatures=sigs, seen_signatures=prior,

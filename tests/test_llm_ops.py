@@ -5958,6 +5958,53 @@ class TestPrefixFilterPairs:
             prefix_filter_pairs(df, min_jaccard=0.0)
 
 
+class TestBandedSignaturePath:
+    """The banded MinHash family shares one signature path: one tokenizer,
+    one band-key expression and one exact verify, so the operators agree
+    on every pair, boundary pairs included."""
+
+    def test_exact_boundary_pair_kept_by_every_operator(self, spark):
+        """J = 14/25 = 0.56 exactly, and 0.56 * 25 rounds UP in doubles
+        (14.000000000000002): a verify without the epsilon guard drops the
+        pair at min_jaccard=0.56. band_rows=1 makes the pair a banded
+        candidate, so only the verify decides."""
+        from metaframe_spark.operators.dedup import (
+            minhash_near_dup_against,
+            minhash_near_dup_pairs,
+            prefix_filter_pairs,
+        )
+
+        a = " ".join(f"w{i}" for i in range(22))  # 20 shingles
+        b = " ".join([f"w{i}" for i in range(16)] + [f"x{i}" for i in range(5)])
+        df = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
+        want = [(1, 2, 14, 25, 0.56)]
+        assert [tuple(r) for r in prefix_filter_pairs(df, min_jaccard=0.56).collect()] == want
+        pairs = minhash_near_dup_pairs(df, band_rows=1, min_jaccard=0.56)
+        assert [tuple(r) for r in pairs.collect()] == want
+        against = minhash_near_dup_against(
+            df.filter("doc_id = 2"), df.filter("doc_id = 1"),
+            band_rows=1, min_jaccard=0.56,
+        )
+        assert [tuple(r) for r in against.collect()] == [(2, 1, 14, 25, 0.56)]
+
+    def test_each_stage_is_written_once(self):
+        """Grep guard: the shingle hash, the permutation minima, the band
+        slice and the verify intersection each appear once in the module,
+        so no operator can drift from the others."""
+        import inspect
+
+        from metaframe_spark.operators import dedup
+
+        src = inspect.getsource(dedup)
+        for stage in (
+            "transform(_shs, s -> xxhash64(s))",
+            "xxhash64(h, {seed} + p)",
+            "slice(_perms",
+            'F.array_intersect("_sh_a", "_sh_b")',
+        ):
+            assert src.count(stage) == 1, stage
+
+
 class TestNeardupThresholdSweep:
     """operators/dedup.py::neardup_threshold_sweep — the threshold data
     card: floor-candidates + per-threshold requalification must match a
