@@ -1,8 +1,7 @@
 """MetaFrame — a metadata-propagating wrapper around ``pyspark.sql.DataFrame``.
 
 Reproduces (Spark-first, from scratch) the capability surface of the reference
-``invent-analytics/metaframe`` (see ``/root/reference/metaframe/metaframe.py:1-197``
-and SURVEY.md §1-§2):
+``invent-analytics/metaframe`` (its ``metaframe.py:1-197``; SURVEY.md §1-§2):
 
 * a free-form, frame-level ``metadata`` dict that survives DataFrame
   transformations (reference: ``metaframe.py:111-117``);
@@ -13,6 +12,21 @@ and SURVEY.md §1-§2):
   (reference: ``metaframe.py:77-119``) — every relational operator, scalar
   function, and I/O path is Spark's own, so Catalyst/Tungsten/AQE optimize the
   plan untouched.
+
+Three rules carry the whole wrapper:
+
+* **routing follows the class** — a name resolves on the wrapper exactly when
+  ``MetaFrame`` itself defines it (its methods, constants and the three
+  ``__slots__`` fields); every other name is looked up once on the wrapped
+  Spark object, so a column can never shadow the wrapper's own machinery;
+* **every hop is a MetaFrame** — callables are wrapped and their
+  DataFrame/GroupedData results re-wrapped; the ``.na``/``.stat`` accessors
+  are MetaFrames over Spark's accessor object, so their results take the
+  same PK rules as direct calls; ``.write``/``.writeStream`` go through one
+  writer chain proxy;
+* **one argument reader** — every PK rule reads a positional-or-keyword
+  argument with :func:`_arg` and column names with :func:`_names`; a value
+  :func:`_names` does not recognise goes to Spark to accept or reject.
 
 Differences from the reference (deliberate fixes, SURVEY.md §7.2 P0; the
 original quirky behaviors are available via ``strict_reference_compat=True``):
@@ -27,7 +41,8 @@ original quirky behaviors are available via ``strict_reference_compat=True``):
   break uniqueness (``union``/fan-out ``join``; reference never invalidates —
   quirk q3);
 * metadata survives the ``.na`` / ``.stat`` / ``.write`` / ``mf[["c"]]``
-  accessor hops (reference loses it — quirk q4);
+  accessor hops (reference loses it — quirk q4): the ``na``/``stat`` hops are
+  MetaFrames, the writer hops keep it until the terminal save;
 * the constructor unwraps an already-wrapped MetaFrame (reference
   double-wraps — quirk q5);
 * metadata-driven optimization: ``dropDuplicates``/``distinct`` become
@@ -79,6 +94,10 @@ _UNIQUENESS_BREAKING = frozenset(
     }
 )
 
+#: value rewrites (direct and ``.na``) -> position of their ``subset``
+#: argument; rewriting values inside a PK column can merge distinct keys.
+_VALUE_REWRITES = {"fillna": 1, "fill": 1, "replace": 2}
+
 #: generator functions that fan rows out when they appear inside a projection
 #: (``select``/``selectExpr``/``withColumn``) — presence invalidates the PK.
 _GENERATOR_RE = re.compile(
@@ -86,19 +105,44 @@ _GENERATOR_RE = re.compile(
     re.IGNORECASE,
 )
 
-#: join types in which each left row appears at most once when the join keys
-#: are unique on the right side.
-_LEFT_ONCE_JOINS = frozenset({"inner", "left", "leftouter", "left_outer"})
+#: join types (as :func:`_join_type` spells them) in which each left row
+#: appears at most once when the join keys are unique on the right side.
+_LEFT_ONCE_JOINS = frozenset({"inner", "left", "leftouter"})
 
-#: writer methods that terminate a write chain (return None / non-writer).
-_WRITER_TERMINALS = frozenset(
-    {"save", "parquet", "csv", "json", "orc", "text", "saveAsTable", "insertInto", "jdbc"}
-)
+#: join types that return a row subset of the left side and no new columns.
+_SEMI_ANTI_JOINS = frozenset({"semi", "leftsemi", "anti", "leftanti"})
 
-#: the subset of terminals whose first argument is a filesystem PATH — only
-#: these get a metadata sidecar (saveAsTable/insertInto/jdbc take a table
-#: name, which must never be treated as a local directory).
+#: writer terminals whose first argument is a filesystem PATH — only these
+#: get a metadata sidecar (saveAsTable/insertInto/jdbc take a table name,
+#: which must never be treated as a local directory).
 _PATH_TERMINALS = frozenset({"save", "parquet", "csv", "json", "orc", "text"})
+
+
+def _arg(args: Tuple, kwargs: Dict, i: int, name: str, default: Any = None) -> Any:
+    """A positional-or-keyword argument: ``args[i]`` when passed by
+    position, else ``kwargs[name]``, else ``default``."""
+    return args[i] if len(args) > i else kwargs.get(name, default)
+
+
+def _names(value: Any) -> Optional[List[str]]:
+    """Column names as a list: a ``str`` is one name, a ``list``/``tuple``
+    of ``str`` is several. Anything else (None, a set, Columns) is None:
+    no PK rule reads it, and Spark accepts or rejects it."""
+    if isinstance(value, str):
+        return [value]
+    if isinstance(value, (list, tuple)) and all(isinstance(v, str) for v in value):
+        return list(value)
+    return None
+
+
+def _join_type(how: Any) -> str:
+    """A join type in one spelling: lower case, no underscores, and
+    ``"inner"`` when unset (``"left_outer"`` -> ``"leftouter"``)."""
+    return str(how or "inner").lower().replace("_", "")
+
+
+def _without_pk(md: Dict[str, Any]) -> Dict[str, Any]:
+    return {k: v for k, v in md.items() if k != "primary_key"}
 
 
 def _column_name(col: Column, df: Optional[DataFrame] = None) -> Optional[str]:
@@ -150,6 +194,9 @@ class MetaFrame(DataFrame):
     invoke the classic ``__init__(jdf, sql_ctx)`` and crash (SURVEY.md §7.4).
     """
 
+    # the instance fields, declared so the routing rule covers them
+    __slots__ = ("df", "metadata", "strict_reference_compat")
+
     #: result types that get re-wrapped with the caller's metadata
     #: (reference: ``metaframe.py:46``). These are the PySpark-4 *unified*
     #: base classes, which both the classic and the Spark Connect
@@ -167,30 +214,6 @@ class MetaFrame(DataFrame):
         "drop_duplicates": "from_subset_or_all",
         "distinct": "all_columns",
     }
-
-    # attribute names resolved on the wrapper itself; everything else is
-    # delegated to the wrapped Spark object.
-    _OWN_NAMES = frozenset(
-        {
-            "df",
-            "metadata",
-            "set_metadata",
-            "with_primary_key",
-            "primary_key",
-            "to_spark",
-            "strict_reference_compat",
-            "RETURNED_CLASSES",
-            "SET_PK_AFTER",
-            "_OWN_NAMES",
-            "_wrapper",
-            "_set_pk_after",
-            "_rewrap_accessor",
-            "_invalidate_pk_if_needed",
-            "_join_keeps_left_pk",
-            "_pk_shortcircuit",
-            "_mf_kwargs",
-        }
-    )
 
     # -- construction --------------------------------------------------------
 
@@ -235,18 +258,18 @@ class MetaFrame(DataFrame):
 
     def __getattribute__(self, key: str) -> Any:
         get = object.__getattribute__
-        if key.startswith("__") or key in MetaFrame._OWN_NAMES:
+        if key.startswith("__") or key in _CLASS_NAMES:
             return get(self, key)
-        wrapped = get(self, "df")
-        if hasattr(wrapped, key):
-            attr = getattr(wrapped, key)
-            if callable(attr):
-                return get(self, "_wrapper")(attr, key)
-            return get(self, "_rewrap_accessor")(key, attr)
-        # fall through to normal resolution (raises AttributeError with the
-        # standard message, mirroring the reference's column-lookup fallback
-        # failing for non-DataFrame wrapped objects, ``metaframe.py:89``)
-        return get(self, key)
+        try:
+            attr = getattr(get(self, "df"), key)
+        except AttributeError:
+            # not Spark's either: normal resolution raises the standard
+            # error, mirroring the reference's column-lookup fallback
+            # failing for non-DataFrame wrapped objects (``metaframe.py:89``)
+            return get(self, key)
+        if callable(attr):
+            return get(self, "_wrapper")(attr, key)
+        return get(self, "_rewrap_accessor")(key, attr)
 
     def __getattr__(self, key: str) -> Any:
         raise AttributeError(
@@ -263,7 +286,7 @@ class MetaFrame(DataFrame):
             pk = md.get("primary_key")
             if pk and not set(pk).issubset(set(result.columns)):
                 # list-select dropped a PK column — don't propagate the key
-                md = {k: v for k, v in md.items() if k != "primary_key"}
+                md = _without_pk(md)
             return MetaFrame(result, md, **self._mf_kwargs())
         return result
 
@@ -272,12 +295,14 @@ class MetaFrame(DataFrame):
 
         The reference returns these raw, losing metadata through ``.na`` /
         ``.stat`` / ``.write`` (``metaframe.py:87-88``, quirk q4). Fixed mode
-        wraps the accessor so DataFrame/Writer results keep the metadata.
+        wraps the ``na``/``stat`` accessor in a MetaFrame (as it wraps
+        ``GroupedData``), so its results take the PK rules of direct calls,
+        and the writers in their chain proxies.
         """
         if self.strict_reference_compat:
             return attr
         if key in ("na", "stat"):
-            return _AccessorProxy(attr, self.metadata, self._mf_kwargs())
+            return MetaFrame(attr, self.metadata, **self._mf_kwargs())
         if key == "write":
             return MetaWriter(attr, self.metadata, self._mf_kwargs())
         if key == "writeStream":
@@ -360,19 +385,11 @@ class MetaFrame(DataFrame):
                         break
                 primary_key = _ordered_dedupe(names) if names else None
         elif rule == "from_subset_or_all":  # dropDuplicates / drop_duplicates
-            subset: Any = None
-            if args:
-                subset = args[0]
-            elif "subset" in kwargs:
-                subset = kwargs["subset"]
+            subset = _arg(args, kwargs, 0, "subset")
             if subset is None:
                 primary_key = list(result.columns) if isinstance(result, DataFrame) else None
-            elif isinstance(subset, (list, tuple, set)):
-                primary_key = (
-                    list(subset) if not isinstance(subset, set) else sorted(subset)
-                )
             else:
-                primary_key = [subset]
+                primary_key = _names(subset)
 
         if primary_key is None:
             LOG.info("could not infer primary key after %s; metadata unchanged", callable_key)
@@ -391,32 +408,35 @@ class MetaFrame(DataFrame):
         If rows are already unique per ``primary_key`` and the dedup subset
         contains the PK, ``dropDuplicates``/``distinct`` cannot remove any row
         — skip the operation entirely (saves a full shuffle; SURVEY.md §4.3a).
+        Only calls Spark itself accepts are skipped: a subset that is not a
+        list or tuple of existing column names goes to Spark, which rejects
+        it (a bare ``str`` or a ``set`` raise there with or without a PK).
         """
         pk = self.metadata.get("primary_key")
-        if not pk or not isinstance(self.df, DataFrame):
+        if (
+            not pk
+            or callable_key not in ("distinct", "dropDuplicates", "drop_duplicates")
+            or not isinstance(self.df, DataFrame)
+        ):
             return None
-        if not set(pk).issubset(set(self.df.columns)):
+        columns = self.df.columns
+        if not set(pk).issubset(columns):
             return None
         if callable_key == "distinct" and not args and not kwargs:
             return MetaFrame(
                 self.df,
-                {**self.metadata, "primary_key": list(self.df.columns)},
+                {**self.metadata, "primary_key": list(columns)},
                 **self._mf_kwargs(),
             )
         if callable_key in ("dropDuplicates", "drop_duplicates"):
-            subset = args[0] if args else kwargs.get("subset")
-            if subset is None:
-                subset_list = list(self.df.columns)
-            elif isinstance(subset, (list, tuple, set)):
-                subset_list = list(subset)
-            else:
-                subset_list = [subset]
-            if not set(subset_list).issubset(set(self.df.columns)):
-                return None  # let Spark raise its own AnalysisException
-            if set(pk).issubset(set(subset_list)):
+            subset = _arg(args, kwargs, 0, "subset")
+            names = list(columns) if subset is None else _names(subset)
+            if names is None or isinstance(subset, str) or not set(names).issubset(columns):
+                return None  # let Spark raise its own error
+            if set(pk).issubset(names):
                 return MetaFrame(
                     self.df,
-                    {**self.metadata, "primary_key": list(subset_list)},
+                    {**self.metadata, "primary_key": names},
                     **self._mf_kwargs(),
                 )
         return None
@@ -427,6 +447,22 @@ class MetaFrame(DataFrame):
     # still bounds network fan-out (cap × executors bytes on a cluster).
     PK_BROADCAST_MAX_BYTES = 128 * 1024 * 1024
     _PK_BROADCAST_CONF = "spark.metaframe.pkJoinBroadcastThreshold"
+
+    @staticmethod
+    def _pk_covered_other(args: Tuple, kwargs: Dict) -> Optional["MetaFrame"]:
+        """The join's other side when it is a MetaFrame whose known
+        ``primary_key`` the ``on`` column names cover — each row of this
+        side then matches at most one of its rows — else None. A Column
+        condition is not provably an equi-join on names and never
+        qualifies."""
+        other = _arg(args, kwargs, 0, "other")
+        if not isinstance(other, MetaFrame):
+            return None
+        pk = other.metadata.get("primary_key")
+        on = _names(_arg(args, kwargs, 1, "on"))
+        if pk and on is not None and set(pk).issubset(on):
+            return other
+        return None
 
     def _pk_join_broadcast_hint(self, args: Tuple, kwargs: Dict) -> Tuple[Tuple, Dict]:
         """Join-cardinality hint from PK metadata (SURVEY.md §4.3b).
@@ -442,37 +478,20 @@ class MetaFrame(DataFrame):
         q54_pk_broadcast_join), and joins that might fan out, non-equi
         conditions, or over-cap sides are left untouched.
         """
-        other = args[0] if args else kwargs.get("other")
-        on = args[1] if len(args) > 1 else kwargs.get("on")
-        how = (args[2] if len(args) > 2 else kwargs.get("how")) or "inner"
-        if not isinstance(other, MetaFrame) or not isinstance(other.df, DataFrame):
+        other = self._pk_covered_other(args, kwargs)
+        # broadcast of the RIGHT side is only valid for these join types
+        # (right/full outer must stream the right side)
+        if (
+            other is None
+            or not isinstance(other.df, DataFrame)
+            or _join_type(_arg(args, kwargs, 2, "how")) not in _LEFT_ONCE_JOINS | _SEMI_ANTI_JOINS
+        ):
             return args, kwargs
         try:
             # never hint a streaming side: stream-stream joins must shuffle
             # both sides, and a broadcast hint there is wrong at any size
             if other.df.isStreaming:
                 return args, kwargs
-        except Exception:
-            return args, kwargs
-        pk = other.metadata.get("primary_key")
-        if not pk:
-            return args, kwargs
-        if isinstance(on, str):
-            on_list = [on]
-        elif isinstance(on, (list, tuple)) and all(isinstance(c, str) for c in on):
-            on_list = list(on)
-        else:
-            return args, kwargs  # Column/None conditions: not provably equi
-        if not set(pk).issubset(set(on_list)):
-            return args, kwargs
-        hownorm = str(how).lower().replace("_", "")
-        # broadcast of the RIGHT side is only valid for these join types
-        # (right/full outer must stream the right side)
-        if hownorm not in {
-            "inner", "left", "leftouter", "semi", "leftsemi", "anti", "leftanti",
-        }:
-            return args, kwargs
-        try:
             # cache the estimate on the DataFrame: its plan is immutable, and
             # re-running the optimizer for every join against the same dim
             # would add driver latency to wide query graphs
@@ -506,16 +525,18 @@ class MetaFrame(DataFrame):
         """Drop a stale ``primary_key`` (fixes reference quirk q3).
 
         Hazards handled: (a) the op removed/renamed a PK column (subset check
-        at the end); (b) the op can change row multiplicity even with all PK
-        columns present — unions, cross joins, ``mapInPandas``/``mapInArrow``/
+        at the end — this also covers ``stat`` results such as ``crosstab``);
+        (b) the op can change row multiplicity even with all PK columns
+        present — unions, cross joins, ``mapInPandas``/``mapInArrow``/
         ``unpivot``/``melt``/``transform``, generator expressions in a
         projection; (c) the op rewrote values *inside* a PK column
-        (``withColumn`` on a PK name, ``replace``/``fillna`` touching PK).
+        (``withColumn`` on a PK name, ``replace``/``fillna``/``na.fill``
+        touching PK).
 
         Joins keep the left PK when they provably cannot fan out: semi/anti
         joins always; inner/left equi-joins whose key set covers the *other*
         side's known primary key (each left row matches at most one right
-        row) — see :meth:`_join_keeps_left_pk`.
+        row) — see :meth:`_pk_covered_other`.
         """
         pk = out.metadata.get("primary_key")
         if not pk:
@@ -524,21 +545,19 @@ class MetaFrame(DataFrame):
         if callable_key in _UNIQUENESS_BREAKING:
             invalid = True
         elif callable_key == "join":
-            how = kwargs.get("how", args[2] if len(args) > 2 else "inner") or "inner"
-            how = str(how).lower().replace("_", "")
-            if how in {"semi", "leftsemi", "anti", "leftanti"}:
-                pass  # row-subset of the left side, no new columns — PK holds
-            elif not self._join_keeps_left_pk(how, args, kwargs):
-                invalid = True
+            how = _join_type(_arg(args, kwargs, 2, "how"))
+            invalid = how not in _SEMI_ANTI_JOINS and (
+                how not in _LEFT_ONCE_JOINS or self._pk_covered_other(args, kwargs) is None
+            )
         elif callable_key in ("withColumn", "withColumns"):
             # overwriting a PK column in place breaks uniqueness silently;
             # a generator expr fans rows out.
             if callable_key == "withColumn":
-                target = args[0] if args else kwargs.get("colName")
+                target = _arg(args, kwargs, 0, "colName")
                 targets = [target] if isinstance(target, str) else []
                 exprs = list(args[1:]) + [v for k, v in kwargs.items() if k != "colName"]
             else:
-                colsmap = args[0] if args else kwargs.get("colsMap", {})
+                colsmap = _arg(args, kwargs, 0, "colsMap", {})
                 targets = list(colsmap) if isinstance(colsmap, dict) else []
                 exprs = list(colsmap.values()) if isinstance(colsmap, dict) else []
             if any(t in pk for t in targets):
@@ -561,16 +580,10 @@ class MetaFrame(DataFrame):
                     if any(alias_re.search(str(a)) for a in flat):
                         invalid = True
                         break
-        elif callable_key in ("replace", "fillna"):
-            # value rewrites inside a PK column can merge distinct keys
-            subset = kwargs.get("subset")
-            if subset is None and len(args) > (2 if callable_key == "replace" else 1):
-                subset = args[2] if callable_key == "replace" else args[1]
-            if subset is None:
-                invalid = True
-            else:
-                subset_list = [subset] if isinstance(subset, str) else list(subset)
-                invalid = bool(set(subset_list) & set(pk))
+        elif callable_key in _VALUE_REWRITES:
+            # no subset means every column, the PK ones included
+            subset = _names(_arg(args, kwargs, _VALUE_REWRITES[callable_key], "subset"))
+            invalid = subset is None or bool(set(subset) & set(pk))
         if not invalid and isinstance(out.df, DataFrame):
             try:
                 if not set(pk).issubset(set(out.df.columns)):
@@ -578,36 +591,8 @@ class MetaFrame(DataFrame):
             except Exception:  # unresolvable plan state — keep metadata as-is
                 return out
         if invalid:
-            md = {k: v for k, v in out.metadata.items() if k != "primary_key"}
-            return MetaFrame(out.df, md, **self._mf_kwargs())
+            return MetaFrame(out.df, _without_pk(out.metadata), **self._mf_kwargs())
         return out
-
-    @staticmethod
-    def _join_keeps_left_pk(how: str, args: Tuple, kwargs: Dict) -> bool:
-        """True when an equi-join provably cannot duplicate left rows.
-
-        Requires: ``how`` is inner/left, the join condition is a column-name
-        equi-join (``on`` is a str or list of str), the other side is a
-        MetaFrame with a known primary key, and the join keys cover that key
-        (unique right keys ⇒ each left row matches at most once), so a
-        PK-equi-join keeps the left key instead of dropping it.
-        """
-        if how not in _LEFT_ONCE_JOINS:
-            return False
-        other = args[0] if args else kwargs.get("other")
-        on = args[1] if len(args) > 1 else kwargs.get("on")
-        if not isinstance(other, MetaFrame):
-            return False
-        other_pk = other.metadata.get("primary_key")
-        if not other_pk:
-            return False
-        if isinstance(on, str):
-            on_list = [on]
-        elif isinstance(on, (list, tuple)) and all(isinstance(c, str) for c in on):
-            on_list = list(on)
-        else:
-            return False
-        return set(other_pk).issubset(set(on_list))
 
     # -- metadata plane (reference: ``metaframe.py:179-197``) ----------------
 
@@ -629,53 +614,36 @@ class MetaFrame(DataFrame):
         return self.df
 
 
-class _AccessorProxy:
-    """Wraps ``DataFrameNaFunctions`` / ``DataFrameStatFunctions`` so their
-    DataFrame results keep the caller's metadata (fixes reference quirk q4).
+#: the names that resolve on a MetaFrame itself (see ``__getattribute__``)
+_CLASS_NAMES = frozenset(vars(MetaFrame))
 
-    ``na.fill``/``na.replace`` rewrite values and can merge distinct PK
-    values — the primary key is dropped from the propagated metadata unless
-    an explicit ``subset`` avoids the PK columns entirely (mirrors the
-    direct ``fillna``/``replace`` invalidation; without this the accessor
-    path would arm the dedup short-circuit with a stale key)."""
 
-    #: accessor method -> positional index of its ``subset`` argument
-    _PK_REWRITERS = {"fill": 1, "replace": 2}
+class _ChainProxy:
+    """One link of a Spark writer's builder chain, carrying the caller's
+    metadata: non-callable attributes pass through, and each method's result
+    goes to :meth:`_chain`, which re-wraps the next link or acts at a
+    terminal."""
 
-    def __init__(self, obj: Any, metadata: Dict[str, Any], mf_kwargs: Dict[str, Any]):
-        object.__setattr__(self, "_obj", obj)
-        object.__setattr__(self, "_metadata", metadata)
-        object.__setattr__(self, "_mf_kwargs", mf_kwargs)
-
-    def _result_metadata(self, key: str, args: Tuple, kwargs: Dict) -> Dict[str, Any]:
-        pk = self._metadata.get("primary_key")
-        if not pk or key not in self._PK_REWRITERS:
-            return self._metadata
-        idx = self._PK_REWRITERS[key]
-        subset = kwargs.get("subset", args[idx] if len(args) > idx else None)
-        if subset is not None:
-            subset_list = [subset] if isinstance(subset, str) else list(subset)
-            if not set(subset_list) & set(pk):
-                return self._metadata
-        return {k: v for k, v in self._metadata.items() if k != "primary_key"}
+    def __init__(self, writer: Any, metadata: Dict[str, Any]):
+        self._writer = writer
+        self._metadata = metadata
 
     def __getattr__(self, key: str) -> Any:
-        attr = getattr(self._obj, key)
+        attr = getattr(self._writer, key)
         if not callable(attr):
             return attr
 
         @functools.wraps(attr)
         def wrapped(*args: Any, **kwargs: Any) -> Any:
-            result = attr(*args, **kwargs)
-            if isinstance(result, DataFrame):
-                md = self._result_metadata(key, args, kwargs)
-                return MetaFrame(result, md, **self._mf_kwargs)
-            return result
+            return self._chain(key, attr(*args, **kwargs), args, kwargs)
 
         return wrapped
 
+    def _chain(self, key: str, result: Any, args: Tuple, kwargs: Dict) -> Any:
+        raise NotImplementedError
 
-class MetaWriter:
+
+class MetaWriter(_ChainProxy):
     """Wraps ``DataFrameWriter`` so chained writer config keeps metadata and
     terminal saves persist the metadata as a JSON sidecar next to the data.
 
@@ -688,39 +656,25 @@ class MetaWriter:
 
     SIDECAR = "_metaframe_metadata.json"
 
-    def __init__(self, writer: DataFrameWriter, metadata: Dict[str, Any], mf_kwargs: Dict[str, Any]):
-        self._writer = writer
-        self._metadata = metadata
-        self._mf = mf_kwargs
-
-    def __getattr__(self, key: str) -> Any:
-        attr = getattr(self._writer, key)
-        if not callable(attr):
-            return attr
-
-        @functools.wraps(attr)
-        def wrapped(*args: Any, **kwargs: Any) -> Any:
-            result = attr(*args, **kwargs)
-            if key in _WRITER_TERMINALS:
-                if key in _PATH_TERMINALS:
-                    path = args[0] if args and isinstance(args[0], str) else kwargs.get("path")
-                    if path:
-                        self._write_sidecar(path)
-                elif key in ("saveAsTable", "insertInto"):
-                    name = args[0] if args and isinstance(args[0], str) else (
-                        kwargs.get("name") or kwargs.get("tableName")
-                    )
-                    if name:
-                        self._write_table_properties(name)
-                return result
-            if isinstance(result, DataFrameWriter):
-                return MetaWriter(result, self._metadata, self._mf)
-            return result
-
-        return wrapped
-
     #: key under which frame metadata is persisted on catalog tables
     TABLE_PROPERTY = "metaframe.metadata"
+
+    def __init__(self, writer: DataFrameWriter, metadata: Dict[str, Any], mf_kwargs: Dict[str, Any]):
+        super().__init__(writer, metadata)
+        self._mf = mf_kwargs
+
+    def _chain(self, key: str, result: Any, args: Tuple, kwargs: Dict) -> Any:
+        if key in _PATH_TERMINALS:
+            path = _arg(args, kwargs, 0, "path")
+            if isinstance(path, str) and path:
+                self._write_sidecar(path)
+        elif key in ("saveAsTable", "insertInto"):
+            name = _arg(args, kwargs, 0, "name" if key == "saveAsTable" else "tableName")
+            if isinstance(name, str) and name:
+                self._write_table_properties(name)
+        elif isinstance(result, DataFrameWriter):
+            return MetaWriter(result, self._metadata, self._mf)
+        return result
 
     def _write_table_properties(self, table: str) -> None:
         """Persist the metadata into the catalog table's TBLPROPERTIES.
@@ -775,32 +729,23 @@ class MetaWriter:
             LOG.debug("could not write metadata sidecar for %s", path, exc_info=True)
 
 
-class MetaStreamWriter:
+class MetaStreamWriter(_ChainProxy):
     """Wraps ``DataStreamWriter`` so chained streaming-sink config keeps the
     caller's metadata until the terminal ``start()``/``toTable()``.
 
     The reference loses metadata at the ``writeStream`` property hop
-    (``/root/reference/metaframe/metaframe.py:87-88``, SURVEY.md §2.3 row 16,
-    quirk q4); this proxy fixes that for the streaming path the same way
-    :class:`MetaWriter` does for batch writes. ``metadata`` stays inspectable
-    on the proxy; the terminal result (a ``StreamingQuery``) passes through
-    raw — queries are runtime handles, not frames.
+    (``metaframe.py:87-88``, SURVEY.md §2.3 row 16, quirk q4); this proxy
+    fixes that for the streaming path the same way :class:`MetaWriter` does
+    for batch writes. ``metadata`` stays inspectable on the proxy; the
+    terminal result (a ``StreamingQuery``) passes through raw — queries are
+    runtime handles, not frames.
     """
 
-    def __init__(self, writer: Any, metadata: Dict[str, Any]):
-        self._writer = writer
-        self.metadata = metadata
+    @property
+    def metadata(self) -> Dict[str, Any]:
+        return self._metadata
 
-    def __getattr__(self, key: str) -> Any:
-        attr = getattr(self._writer, key)
-        if not callable(attr):
-            return attr
-
-        @functools.wraps(attr)
-        def wrapped(*args: Any, **kwargs: Any) -> Any:
-            result = attr(*args, **kwargs)
-            if type(result).__name__ == "DataStreamWriter":
-                return MetaStreamWriter(result, self.metadata)
-            return result
-
-        return wrapped
+    def _chain(self, key: str, result: Any, args: Tuple, kwargs: Dict) -> Any:
+        if type(result).__name__ == "DataStreamWriter":
+            return MetaStreamWriter(result, self._metadata)
+        return result

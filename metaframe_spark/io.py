@@ -388,11 +388,12 @@ def load_table(
 
     ``verify_pk=True`` validates the declared key against the data before
     seeding (skips seeding when violated) at the cost of one count job.
+
+    The caller's session settings are left alone. Timestamp outputs are
+    oracle-compared against DuckDB's naive (UTC) values, so those
+    comparisons rely on the UTC session time zone that
+    :func:`metaframe_spark.session.get_session` pins.
     """
-    # timestamp outputs are oracle-compared against DuckDB's naive (UTC)
-    # values — pin the session timezone so results don't depend on the
-    # caller's JVM default
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     mf = read_parquet(spark, f"{sf_dir}/{name}.parquet", metadata={"table": name})
     pk = TPCH_PRIMARY_KEYS.get(name)
     if not pk:

@@ -973,26 +973,35 @@ def dedup_against(
     )
 
 
-def _shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int, *keep: Column
+def _distinct_shingles(
+    df: DataFrame, text_col: str, shingle_n: int, *keep: Column
 ) -> DataFrame:
-    """``(id, *keep, _toks, _shs)``: every document's distinct word
-    ``shingle_n``-grams — the one tokenizer of :func:`minhash_signatures`
-    (hence of every banded near-dup operator) and
-    :func:`jaccard_similarity_pairs`.
+    """``(*keep, _toks, _shs)``: every document's distinct word
+    ``shingle_n``-grams — the one tokenizer of every shingle-set operator
+    in this module (through :func:`_shingle_sets` for the banded family and
+    :func:`jaccard_similarity_pairs`; directly for the contamination and
+    novelty operators).
     Documents with fewer than ``shingle_n`` tokens have no shingles and are
     dropped. The filter is on the TOKEN count, before the shingle
     projection: filtering on ``size(_shs)`` afterwards re-evaluates the
     interpreted shingle lambda inside the predicate (measured ~8× the
     projection cost), and ``size(tokens) >= n`` ⟺ shingles nonempty."""
-    from ..scale import fan_out
-
     return (
-        fan_out(df)
-        .select(F.col(id_col), *keep, tokens(F.col(text_col)).alias("_toks"))
+        df.select(*keep, tokens(F.col(text_col)).alias("_toks"))
         .filter(F.size("_toks") >= shingle_n)
         .withColumn("_shs", F.array_distinct(shingles("_toks", shingle_n)))
     )
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, *keep: Column
+) -> DataFrame:
+    """``(id, *keep, _toks, _shs)`` over the fanned-out corpus: the
+    tokenizer of :func:`minhash_signatures` (hence of every banded near-dup
+    operator) and :func:`jaccard_similarity_pairs`."""
+    from ..scale import fan_out
+
+    return _distinct_shingles(fan_out(df), text_col, shingle_n, F.col(id_col), *keep)
 
 
 #: ``_shs`` (shingle strings) → 64-bit shingle hashes: the one hash every
@@ -1800,17 +1809,14 @@ def ngram_contamination(
     count's shuffle.
     """
     bench_sh = (
-        benchmark.select(tokens(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= n)
-        .select(F.explode(F.array_distinct(shingles("_toks", n))).alias("_sh"))
+        _distinct_shingles(benchmark, text_col, n)
+        .select(F.explode("_shs").alias("_sh"))
         .distinct()
     )
     if broadcast_benchmark:
         bench_sh = F.broadcast(bench_sh)
-    corp_sh = (
-        corpus.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= n)
-        .select(id_col, F.explode(F.array_distinct(shingles("_toks", n))).alias("_sh"))
+    corp_sh = _distinct_shingles(corpus, text_col, n, F.col(id_col)).select(
+        id_col, F.explode("_shs").alias("_sh")
     )
     return (
         corp_sh.join(bench_sh, "_sh")
@@ -1853,9 +1859,8 @@ def bloom_contamination(
     if n_hashes < 1:
         raise ValueError("n_hashes must be >= 1")
     bench_sh = (
-        benchmark.select(tokens(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= n)
-        .select(F.explode(F.array_distinct(shingles("_toks", n))).alias("_sh"))
+        _distinct_shingles(benchmark, text_col, n)
+        .select(F.explode("_shs").alias("_sh"))
         .distinct()
     )
 
@@ -1874,10 +1879,8 @@ def bloom_contamination(
         .agg(F.bit_or("_b").alias("_word"))
     )
 
-    cand = (
-        corpus.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= n)
-        .select(id_col, F.explode(F.array_distinct(shingles("_toks", n))).alias("_sh"))
+    cand = _distinct_shingles(corpus, text_col, n, F.col(id_col)).select(
+        id_col, F.explode("_shs").alias("_sh")
     )
     for i in range(n_hashes):
         wi = words.select(
@@ -1943,34 +1946,18 @@ def containment_contamination(
         )
     if n < 1:
         raise ValueError(f"containment_contamination: n must be >= 1 ({n})")
-    bench_sh = (
-        benchmark.select(
-            F.col(id_col).alias("bench_id"),
-            tokens(F.col(text_col)).alias("_toks"),
-        )
-        .filter(F.size("_toks") >= n)
-        .select(
-            "bench_id",
-            F.explode(F.array_distinct(shingles("_toks", n))).alias("_sh"),
-        )
-    )
+    bench_sh = _distinct_shingles(
+        benchmark, text_col, n, F.col(id_col).alias("bench_id")
+    ).select("bench_id", F.explode("_shs").alias("_sh"))
     bench_sizes = bench_sh.groupBy("bench_id").agg(
         F.count(F.lit(1)).cast("long").alias("bench_size")
     )
     if broadcast_benchmark:
         bench_sh = F.broadcast(bench_sh)
         bench_sizes = F.broadcast(bench_sizes)
-    corp_sh = (
-        corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            tokens(F.col(text_col)).alias("_toks"),
-        )
-        .filter(F.size("_toks") >= n)
-        .select(
-            "corpus_id",
-            F.explode(F.array_distinct(shingles("_toks", n))).alias("_sh"),
-        )
-    )
+    corp_sh = _distinct_shingles(
+        corpus, text_col, n, F.col(id_col).alias("corpus_id")
+    ).select("corpus_id", F.explode("_shs").alias("_sh"))
     pairs = corp_sh.join(bench_sh, "_sh").groupBy("bench_id", "corpus_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_shared")
     )
@@ -2210,13 +2197,8 @@ def shingle_novelty(
     beyond the rows that already exist); the per-document rollup
     shuffles on the id. Everything is linear in the distinct
     (document, shingle) relation — no pairs anywhere."""
-    sh = (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .filter(F.size("_toks") >= shingle_n)
-        .select(
-            id_col,
-            F.explode(F.array_distinct(shingles("_toks", shingle_n))).alias("_sh"),
-        )
+    sh = _distinct_shingles(df, text_col, shingle_n, F.col(id_col)).select(
+        id_col, F.explode("_shs").alias("_sh")
     )
     if hash_shingles:
         sh = sh.select(id_col, F.xxhash64("_sh").alias("_sh"))

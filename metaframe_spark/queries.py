@@ -44,21 +44,34 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .io import load_table
+from .operators.text import STOPWORDS
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: Dict[str, str] = {}
 
 
 def query(name: str, sql: str = None):
-    """Register a query callable and (optionally) its DuckDB oracle SQL."""
+    """Register a query callable and (optionally) its DuckDB oracle SQL.
+
+    A ``__SW_XX__`` macro in the SQL becomes the SQL list of language
+    ``xx``'s stopwords, taken from the one STOPWORDS source
+    (:mod:`.operators.text`) so the two lists can never drift apart."""
 
     def deco(fn):
         QUERIES[name] = fn
         if sql is not None:
-            ORACLE[name] = sql
+            ORACLE[name] = _expand_stopwords(sql)
         return fn
 
     return deco
+
+
+def _expand_stopwords(sql: str) -> str:
+    for lang, words in STOPWORDS.items():
+        sql = sql.replace(
+            f"__SW_{lang.upper()}__", "[" + ", ".join(f"'{w}'" for w in words) + "]"
+        )
+    return sql
 
 
 _DEC = "decimal(18,6)"
@@ -576,10 +589,6 @@ def q30(spark, sf):
 # ===========================================================================
 
 _NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-
-
-def _sw_sql(words):
-    return "[" + ", ".join("'" + w + "'" for w in words) + "]"
 
 
 @query(
@@ -1360,20 +1369,6 @@ def llm_video_neardup(spark, sf):
     return video_near_dup_pairs(
         corpus, max_hamming=3, n_bands=4, min_shared_frames=2
     )
-
-
-def _expand_stopword_macros() -> None:
-    """Substitute __SW_XX__ macros in oracle SQL from the single STOPWORDS
-    source of truth (operators.text) so the lists can never drift apart."""
-    from .operators.text import STOPWORDS
-
-    for key, sql in list(ORACLE.items()):
-        for lang, words in STOPWORDS.items():
-            sql = sql.replace(f"__SW_{lang.upper()}__", _sw_sql(words))
-        ORACLE[key] = sql
-
-
-_expand_stopword_macros()
 
 
 @query(
@@ -2422,11 +2417,6 @@ def llm_corpus_stats(spark, sf):
             6,
         ).alias("avg_quality"),
     )
-
-
-# new entries appended after the first expansion call need the macros
-# substituted too (the call is idempotent)
-_expand_stopword_macros()
 
 
 @query(
@@ -7343,9 +7333,6 @@ def llm_quality_sweep(spark, sf):
     )
 
 
-_expand_stopword_macros()
-
-
 @query(
     "llm_vocab_drift",
     "WITH t AS (SELECT doc_id, "
@@ -8127,10 +8114,6 @@ def llm_distinctive_terms(spark, sf):
 
     d = load_table(spark, sf, "documents")
     return distinctive_terms(d.to_spark(), top_k=5)
-
-
-_expand_stopword_macros()
-
 
 
 @query(

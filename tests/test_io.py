@@ -131,6 +131,19 @@ def test_timestamp_parquet_reads_as_micros(spark):
     assert row.ts.year == 2024
 
 
+def test_load_table_keeps_caller_session_time_zone(spark, sf_dir):
+    """load_table leaves the session's settings alone: a zone the caller
+    set survives the load."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "America/New_York")
+        load_table(spark, sf_dir, "orders")
+        assert spark.conf.get(key) == "America/New_York"
+    finally:
+        spark.conf.set(key, old)
+
+
 class TestSchemaCache:
     """Path readers infer a schema once per unchanged local file listing:
     a repeat read passes Spark's own inferred schema back and launches no

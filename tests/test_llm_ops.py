@@ -5988,9 +5988,10 @@ class TestBandedSignaturePath:
         assert [tuple(r) for r in against.collect()] == [(2, 1, 14, 25, 0.56)]
 
     def test_each_stage_is_written_once(self):
-        """Grep guard: the shingle hash, the permutation minima, the band
-        slice and the verify intersection each appear once in the module,
-        so no operator can drift from the others."""
+        """Grep guard: the distinct-shingle set, the shingle hash, the
+        permutation minima, the band slice and the verify intersection each
+        appear once in the module, so no operator can drift from the
+        others."""
         import inspect
 
         from metaframe_spark.operators import dedup
@@ -6001,6 +6002,7 @@ class TestBandedSignaturePath:
             "xxhash64(h, {seed} + p)",
             "slice(_perms",
             'F.array_intersect("_sh_a", "_sh_b")',
+            "F.array_distinct(shingles(",
         ):
             assert src.count(stage) == 1, stage
 

@@ -47,7 +47,7 @@ OPS = [
             "inner",
         ),
     ),
-    # accessor-path value rewrite — exercises the _AccessorProxy PK rules
+    # accessor-path value rewrite — exercises the na-hop PK rules
     ("na_fill_all", lambda mf: mf.na.fill(0)),
     ("na_fill_quantity", lambda mf: mf.na.fill(0, subset=["quantity"])),
     # alias an expression onto an existing column name (re-binding)

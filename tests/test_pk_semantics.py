@@ -108,6 +108,27 @@ class TestPkThroughJoins:
         out = o.join(customer, "c_custkey", "left_semi")
         assert out.primary_key == ["o_orderkey"]
 
+    def test_columns_named_like_wrapper_members_keep_the_hint(self, spark, orders, customer):
+        """Names MetaFrame defines resolve on the wrapper, never on a
+        column: a left frame with columns named like the join hint's own
+        members joins with the right rows, and the PK broadcast hint still
+        applies (checked as in test_plans.py::test_pk_join_broadcast_hint)."""
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        try:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            o = orders.select(
+                F.col("o_custkey").alias("c_custkey"),
+                F.col("o_orderkey").alias("_pk_join_broadcast_hint"),
+                F.col("o_totalprice").alias("PK_BROADCAST_MAX_BYTES"),
+            )
+            hinted = o.join(customer, "c_custkey")
+            raw = o.to_spark().join(customer.to_spark(), "c_custkey")
+            plan = hinted.to_spark()._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" in plan
+            assert sorted(hinted.collect()) == sorted(raw.collect())
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
 
 class TestShortCircuitSafety:
     def test_dropduplicates_bogus_column_raises(self, orders):
@@ -131,6 +152,16 @@ class TestShortCircuitSafety:
     def test_load_table_verify_pk_skips_violated(self, spark):
         mf = load_table(spark, SF, "orders", verify_pk=True)
         assert mf.primary_key == ["o_orderkey"]
+
+    def test_dropduplicates_set_subset_raises_like_spark(self, orders):
+        """Spark rejects a ``set`` subset; a known PK covering it must not
+        make the wrapper accept it (and record a hash-ordered key)."""
+        raised = []
+        for frame in (orders, MetaFrame(orders.to_spark())):
+            with pytest.raises(Exception) as exc:
+                frame.dropDuplicates({"o_orderkey", "o_custkey"})
+            raised.append(type(exc.value))
+        assert raised[0] is raised[1]
 
 
 class TestStreamWriter:
@@ -175,6 +206,14 @@ class TestReviewFixes:
     def test_na_drop_keeps_pk(self, orders):
         # row removal cannot break uniqueness
         assert orders.na.drop().primary_key == ["o_orderkey"]
+
+    def test_stat_crosstab_drops_stale_pk(self, orders):
+        # the stat hop takes the PK-columns-present check of direct calls
+        out = orders.stat.crosstab("o_orderstatus", "o_orderpriority")
+        assert isinstance(out, MetaFrame)
+        assert "o_orderkey" not in out.columns
+        assert out.primary_key is None
+        assert out.metadata["table"] == "orders"
 
     def test_grouped_applyinpandas_invalidates(self, orders):
         def expand(pdf):
@@ -222,3 +261,21 @@ class TestReviewFixes:
         finally:
             os.chdir(cwd)
             spark.sql("DROP TABLE IF EXISTS ttab")
+
+
+def test_core_reads_each_argument_once():
+    """Grep guard: the subset and the join's other side are each read in
+    one place, routing follows the class (no hand-kept name list), the
+    na/stat hops need no proxy of their own, and the two writers share one
+    chain proxy."""
+    import inspect
+
+    from metaframe_spark import core
+
+    src = inspect.getsource(core)
+    assert src.count('kwargs.get("subset"') <= 1
+    assert src.count('kwargs.get("other"') <= 1
+    assert "_OWN_NAMES" not in src
+    assert "_AccessorProxy" not in src
+    # MetaFrame's error message and the writer chain proxy's delegation
+    assert src.count("def __getattr__") == 2
