@@ -13,10 +13,15 @@ Scale design (the 100-TB contract of the build brief):
   family (:func:`minhash_near_dup_pairs`, :func:`minhash_near_dup_against`,
   :func:`prefix_filter_pairs` and ``stream_neardup_dedup``'s fold): the
   :func:`minhash_signatures` relation (``_shingle_sets`` is its one
-  tokenizer) → :func:`_band_keys` → the operator's own candidate join (a
-  banded self-join, a banded cross-side join or a prefix join) →
-  :func:`_verify_pairs`, the one exact-Jaccard verify. Text is tokenized
-  once per call and every operator applies the same threshold test.
+  tokenizer) → a candidate join → :func:`_verify_pairs`, the one
+  exact-Jaccard verify. Every banded operator's candidates come from
+  :func:`_banded_pairs`, one band self-join over :func:`_band_keys`: within
+  one relation, strictly cross-side (``minhash_near_dup_against``), or
+  over a batch ∪ store band relation with a side flag, which gives
+  ``stream_neardup_dedup`` its within-batch and against-store pairs in
+  one join and one checkpoint; :func:`prefix_filter_pairs` joins on
+  prefix shingles instead. Text is tokenized once per call and every
+  operator applies the same threshold test.
 * **simhash** — 64-bit fingerprint computed per-row with nested
   higher-order functions (zero shuffle, zero Python); near-dup candidates
   come from a banded self-join on 16-bit sub-bands (any pair within
@@ -256,7 +261,7 @@ def minhash_near_dup_pairs(
     Returns (id_a, id_b, n_inter, n_union, jaccard), id_a < id_b.
     """
     sigs = minhash_signatures(df, id_col, text_col, shingle_n).persist()
-    out = _banded_self_pairs(sigs, id_col, n_bands, band_rows, min_jaccard, seed)
+    out = _banded_pairs(sigs, id_col, n_bands, band_rows, min_jaccard, seed)
     sigs.unpersist()
     return out
 
@@ -339,40 +344,75 @@ def _verify_pairs(
     )
 
 
-def _banded_self_pairs(
+def _banded_pairs(
     sigs: DataFrame,
     id_col: str,
     n_bands: int,
     band_rows: int,
     min_jaccard: float,
     seed: int,
+    store: Optional[DataFrame] = None,
+    within: bool = True,
 ) -> DataFrame:
-    """Verified near-dup pairs ``(id_a, id_b, n_inter, n_union, jaccard)``,
-    ``id_a < id_b``, within one :func:`minhash_signatures` relation (which
-    the caller pins): :func:`_band_keys` → banded self-join →
-    :func:`_verify_pairs`. The result is ``localCheckpoint``-ed eagerly, so
-    its lineage no longer reads ``sigs`` and the caller may release it."""
-    # both self-join sides consume bands; without this pin the
-    # n_perms-permutation minhash pass over every shingle array runs
+    """The one banded candidate join: verified near-dup pairs of the
+    :func:`minhash_signatures` relation ``sigs`` (which the caller pins),
+    :func:`_band_keys` → one band self-join → :func:`_verify_pairs`. The
+    result is ``localCheckpoint``-ed eagerly, so its lineage no longer
+    reads ``sigs`` or ``store`` and the caller may release them.
+
+    Without ``store``: ``(id_a, id_b, n_inter, n_union, jaccard)``,
+    ``id_a < id_b``, the pairs within ``sigs``. With ``store`` (a second
+    signature relation, e.g. a stream's history) the band relation is
+    ``sigs`` (side 0) ∪ ``store`` (side 1), every row keyed on
+    ``(side, id)`` so the two id spaces may overlap; a side-0 document
+    pairs with a side-0 document of higher id or with any store
+    document, never store with store. The result gains ``side``, the
+    side of ``id_b`` (1: ``id_a`` near-matches the store); ``within=False``
+    keeps only those cross pairs."""
+
+    def keyed(rel, side):
+        key = F.col(id_col)
+        if store is not None:
+            key = F.struct(F.lit(side).alias("side"), key.alias("id"))
+        return rel.select(key.alias("_key"), "shingle_hashes", "n_shingles")
+
+    left = keyed(sigs, 0)
+    # the left side's bands are read by both join sides; without this pin
+    # the n_perms-permutation minhash pass over every shingle array runs
     # twice (the broadcast build side cannot reuse the probe side's
-    # computation). The cached relation is tiny: (id, band, key) ×
+    # computation). The cached relation is tiny: (key, band, band key) ×
     # n_bands rows per document.
-    bands = _band_keys(sigs, id_col, n_bands, band_rows, seed).persist()
-    a, b = bands.alias("a"), bands.alias("b")
+    bands = _band_keys(left, "_key", n_bands, band_rows, seed).persist()
+    right, right_bands = left, bands
+    if store is not None:
+        right = keyed(store, 1)
+        right_bands = _band_keys(right, "_key", n_bands, band_rows, seed)
+        if within:
+            right, right_bands = (
+                left.unionByName(right), bands.unionByName(right_bands)
+            )
+    a, b = bands.alias("a"), right_bands.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a._band") == F.col("b._band"))
             & (F.col("a._bk") == F.col("b._bk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            # (0, id) < (1, id') for every pair of ids: cross pairs pass
+            & (F.col("a._key") < F.col("b._key")),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        .select(F.col("a._key").alias("id_a"), F.col("b._key").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    out = _verify_pairs(cand, sigs, sigs, id_col, ("id_a", "id_b"), min_jaccard)
+    out = _verify_pairs(cand, left, right, "_key", ("id_a", "id_b"), min_jaccard)
+    if store is not None:
+        out = out.select(
+            F.col("id_a.id").alias("id_a"),
+            F.col("id_b.id").alias("id_b"),
+            F.col("id_b.side").alias("side"),
+            "n_inter",
+            "n_union",
+            "jaccard",
+        )
     out = out.localCheckpoint(eager=True)
     bands.unpersist()
     return out
@@ -926,11 +966,16 @@ def dedup_survivors(
     (from minhash/simhash/cosine candidates + verification), keep one
     survivor per connected component (the smallest id) plus all unpaired
     documents. Returns the surviving rows of ``df``."""
+    return df.join(_near_dup_losers(pairs, id_col), id_col, "left_anti")
+
+
+def _near_dup_losers(pairs: DataFrame, id_col: str) -> DataFrame:
+    """``(id_col)``: the ids :func:`dedup_survivors` drops — every paired
+    id that is not the smallest of its :func:`near_dup_groups` group."""
     groups = near_dup_groups(pairs, "id_a", "id_b")
-    losers = groups.filter(F.col("id") != F.col("group_id")).select(
+    return groups.filter(F.col("id") != F.col("group_id")).select(
         F.col("id").alias(id_col)
     )
-    return df.join(losers, id_col, "left_anti")
 
 
 def exact_dedup_rows(
@@ -1266,8 +1311,10 @@ def minhash_near_dup_against(
     spaces would silently never collide). The NEW side takes the same
     pair — ``new`` (raw text) or ``new_signatures`` — so a caller that
     already built today's signatures (to append them to the store
-    afterwards, as ``stream_neardup_dedup`` does) never tokenizes the
-    batch twice.
+    afterwards) never tokenizes the batch twice. The candidates come from
+    the same band join as every banded operator (:func:`_banded_pairs`,
+    cross pairs only); ``stream_neardup_dedup`` runs that join itself,
+    within-batch pairs included, instead of calling this operator.
 
     Returns (new_id, seen_id, n_inter, n_union, jaccard), one row per
     cross near-match at ``min_jaccard``. To drop the matched new docs::
@@ -1341,23 +1388,16 @@ def minhash_near_dup_against(
                 "the store or match the parameter"
             )
     h_new, h_seen = h_new.persist(), h_seen.persist()
-    a = _band_keys(h_new, id_col, n_bands, band_rows, seed).alias("a")
-    b = _band_keys(h_seen, id_col, n_bands, band_rows, seed).alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._bk") == F.col("b._bk")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("new_id"),
-            F.col(f"b.{id_col}").alias("seen_id"),
-        )
-        .dropDuplicates(["new_id", "seen_id"])
+    out = _banded_pairs(
+        h_new, id_col, n_bands, band_rows, min_jaccard, seed,
+        store=h_seen, within=False,
+    ).select(
+        F.col("id_a").alias("new_id"),
+        F.col("id_b").alias("seen_id"),
+        "n_inter",
+        "n_union",
+        "jaccard",
     )
-    out = _verify_pairs(
-        cand, h_new, h_seen, id_col, ("new_id", "seen_id"), min_jaccard
-    ).localCheckpoint(eager=True)
     h_new.unpersist()
     h_seen.unpersist()
     return out

@@ -398,7 +398,7 @@ def _each_batch(stream, apply, checkpoint_dir: Optional[str]):
 
 
 def _stream_store(stream, store_path: str, fold, checkpoint_dir: Optional[str],
-                  high_water: bool, label: str):
+                  high_water: bool, label: str, require=None):
     """Maintain the parquet store at ``store_path`` from a stream: per
     micro-batch, ``fold(batch_df, prior, batch_id)`` returns the new store
     (``prior`` is None before the first batch), which is staged to
@@ -414,7 +414,10 @@ def _stream_store(stream, store_path: str, fold, checkpoint_dir: Optional[str],
     suffices — but one store, one checkpoint: a fresh checkpoint restarts
     ids at 0 and is skipped against an old store's mark.
     ``high_water=False`` is for idempotent folds (HLL register-max,
-    upsert).
+    upsert). ``require=(condition, message)`` validates a high-water
+    store in the same aggregate job as its mark: a ``condition``
+    aggregate over ``prior`` that comes out false raises
+    ``ValueError(message)`` before the fold runs.
 
     Each commit records the written schema under the store's new file
     listing in :mod:`metaframe_spark.io`'s schema cache, so the next
@@ -429,9 +432,13 @@ def _stream_store(stream, store_path: str, fold, checkpoint_dir: Optional[str],
         has_store = fs.exists(P(store_path))
         prior = _load(spark, "parquet", store_path, {}) if has_store else None
         if high_water and has_store:
-            last = prior.agg(F.max("_last_batch")).collect()[0][0]
+            last, ok = prior.agg(
+                F.max("_last_batch"), require[0] if require else F.lit(True)
+            ).collect()[0]
             if last is not None and batch_id <= last:
                 return  # replayed batch: already folded into the store
+            if ok is False:
+                raise ValueError(require[1])
             prior = prior.drop("_last_batch")
         merged = fold(batch_df, prior, batch_id)
         if high_water:
@@ -1084,12 +1091,10 @@ def stream_neardup_dedup(
 ):
     """Continuous-ingest NEAR-duplicate dedup against an accreting
     MinHash signature store — the streaming composition of the batch
-    operators over ONE :func:`minhash_signatures` relation per batch (the
-    banded self-join of ``minhash_near_dup_pairs`` → ``dedup_survivors``
-    for within-batch, ``minhash_near_dup_against(seen_signatures=...)``
-    for batch-vs-history): per micro-batch, documents near-matching either
-    a batch sibling (lowest id survives) or ANY previously-ingested
-    survivor are dropped, the survivors land under
+    operators over ONE :func:`minhash_signatures` relation per batch:
+    per micro-batch, documents near-matching either a batch sibling
+    (lowest id survives, as in ``dedup_survivors``) or ANY
+    previously-ingested survivor are dropped, the survivors land under
     ``{out_path}/batch={id}`` and ONLY survivors' signatures join the
     store at ``store_path`` — history is never re-tokenized and its
     text is never retained, so cross-history state is the signature
@@ -1097,6 +1102,17 @@ def stream_neardup_dedup(
     state by a watermark horizon because byte-identical repeats recur
     forever; near-dup ingestion needs the unbounded-history guarantee,
     and the signature store is the bounded-BY-CONTENT form of it.
+
+    Each batch runs ONE band join, checkpointed once: the band relation
+    is the batch's signatures (side 0) ∪ the store (side 1), keyed on
+    ``(side, id)`` so batch and store ids may overlap, and its verified
+    pairs split into within-batch pairs (→ the batch's losers) and
+    store matches; it does not call ``minhash_near_dup_against``. The
+    losers and the store matches are collected once as the batch's
+    drop set, which both the output write and the store append
+    anti-join. The store's ``shingle_n`` is checked in the same
+    aggregate that reads its high-water mark: a store built with another
+    ``shingle_n`` raises ``ValueError`` before the batch writes anything.
 
     Exactly-once: every store row carries the ``_last_batch`` high-water
     mark (the id of the latest batch folded in, not of the batch that
@@ -1112,37 +1128,49 @@ def stream_neardup_dedup(
     with :func:`stream_exact_dedup` upstream if byte-identical shorts
     matter. Returns the started ``StreamingQuery`` (availableNow)."""
     from ..operators.dedup import (
-        _banded_self_pairs,
-        dedup_survivors,
-        minhash_near_dup_against,
+        _banded_pairs,
+        _near_dup_losers,
         minhash_signatures,
     )
 
     def fold(batch_df, prior, batch_id):
         # tokenize/shingle/hash the batch ONCE: these signatures serve the
-        # within-batch pairs, the against-store check and the store append
-        # (the batch's persist_scope releases them)
+        # band join and the store append (the batch's persist_scope
+        # releases them)
         sigs = minhash_signatures(batch_df, id_col, text_col, shingle_n).persist()
-        pairs = _banded_self_pairs(sigs, id_col, n_bands, band_rows, min_jaccard, seed)
-        survivors = dedup_survivors(batch_df, pairs, id_col)
-        sigs = sigs.join(survivors.select(id_col), id_col, "left_semi")
+        pairs = _banded_pairs(
+            sigs, id_col, n_bands, band_rows, min_jaccard, seed, store=prior
+        )
+        drop = _near_dup_losers(
+            pairs if prior is None else pairs.filter(F.col("side") == 0), id_col
+        )
         if prior is not None:
-            hits = minhash_near_dup_against(
-                new_signatures=sigs, seen_signatures=prior,
-                id_col=id_col, text_col=text_col, shingle_n=shingle_n,
-                n_bands=n_bands, band_rows=band_rows,
-                min_jaccard=min_jaccard, seed=seed,
+            # within-batch losers ∪ store matches, collected once: both id
+            # sets are small (driver-path labels, checkpointed pairs), and
+            # the output and store writes then each anti-join a local
+            # relation instead of re-running the two joins
+            dead = pairs.filter(F.col("side") == 1).select(
+                F.col("id_a").alias(id_col)
             )
-            dead = hits.select(F.col("new_id").alias(id_col)).distinct()
-            survivors = survivors.join(dead, id_col, "left_anti")
-            sigs = sigs.join(dead, id_col, "left_anti")
-        survivors.write.mode("overwrite").parquet(
+            drop = batch_df.sparkSession.createDataFrame(
+                drop.unionByName(dead).toArrow()
+            )
+        batch_df.join(drop, id_col, "left_anti").write.mode("overwrite").parquet(
             out_path.rstrip("/") + f"/batch={batch_id}"
         )
+        sigs = sigs.join(drop, id_col, "left_anti")
         return sigs if prior is None else prior.unionByName(sigs)
 
-    return _stream_store(stream, store_path, fold, checkpoint_dir,
-                         high_water=True, label="neardup signature-store swap")
+    return _stream_store(
+        stream, store_path, fold, checkpoint_dir, high_water=True,
+        label="neardup signature-store swap",
+        require=(
+            F.bool_and(F.col("shingle_n").eqNullSafe(int(shingle_n))),
+            f"the signature store at {store_path} was built with a different "
+            f"shingle_n than this call's shingle_n={shingle_n}; rebuild the "
+            "store or match the parameter",
+        ),
+    )
 
 
 def recover_cdc_swap(spark, base_path: str) -> Dict[int, str]:

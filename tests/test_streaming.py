@@ -927,6 +927,117 @@ class TestStreamNeardupDedup:
         restamped = spark.read.parquet(store).select("_last_batch").distinct()
         assert {r[0] for r in restamped.collect()} == {2}
 
+    @staticmethod
+    def _drain_files(spark, tmp_path, batches, start, timeout_s=None):
+        """Write each DataFrame of ``batches`` as the next source file and
+        drain it on the same checkpoint, one query (one micro-batch) per
+        file; returns the queries."""
+        sc = spark.sparkContext
+        queries = []
+        for i, b in enumerate(batches):
+            b.coalesce(1).write.parquet(str(tmp_path / "src" / f"f{i}"))
+            stream = (
+                spark.readStream.schema(b.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(str(tmp_path / "src" / "*"))
+            )
+            q = start(stream, str(tmp_path / "ckpt"))
+            try:
+                if timeout_s is None:
+                    q.processAllAvailable()
+                else:
+                    assert q.awaitTermination(timeout_s), "drain timed out"
+                    if q.exception() is not None:
+                        raise q.exception()
+            finally:
+                q.stop()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            queries.append(q)
+        return queries
+
+    def test_store_built_with_other_shingle_n_fails_before_output(
+        self, spark, tmp_path
+    ):
+        from metaframe_spark.streaming import stream_neardup_dedup
+
+        text = lambda i: " ".join(f"w{i}x{j} token{i}y{j}" for j in range(10))
+        store, out = str(tmp_path / "store"), str(tmp_path / "out")
+        self._drain_files(
+            spark, tmp_path, [self._mk(spark, [(1, text(1)), (2, text(2))])],
+            lambda stream, ckpt: stream_neardup_dedup(
+                stream, store, out, shingle_n=4, checkpoint_dir=ckpt
+            ),
+        )
+        b1 = self._mk(spark, [(11, text(11))])
+        b1.coalesce(1).write.parquet(str(tmp_path / "src" / "f1"))
+        stream = (
+            spark.readStream.schema(b1.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(tmp_path / "src" / "*"))
+        )
+        q = stream_neardup_dedup(
+            stream, store, out, checkpoint_dir=str(tmp_path / "ckpt")
+        )
+        try:
+            with pytest.raises(Exception, match="different shingle_n"):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        assert not (tmp_path / "out" / "batch=1").exists()
+        assert (tmp_path / "out" / "batch=0").exists()
+
+    def test_unshingled_batch_and_reused_ids_pass_against_store(
+        self, spark, tmp_path
+    ):
+        """A batch with no document long enough to shingle leaves the
+        band join's batch side empty: it still completes and passes every
+        document through (the documented caveat). A new document that
+        reuses a stored document's id with unrelated text is not a match:
+        the batch and store id spaces are separate."""
+        from metaframe_spark.streaming import stream_neardup_dedup
+
+        text = lambda i: " ".join(f"w{i}x{j} token{i}y{j}" for j in range(10))
+        store, out = str(tmp_path / "store"), str(tmp_path / "out")
+        batches = [
+            self._mk(spark, [(1, text(1)), (2, text(2)), (3, text(1) + " tail")]),
+            self._mk(spark, [(11, "too short"), (12, "hi"), (1, "short")]),
+            self._mk(spark, [(2, text(30)), (31, text(1) + " other tail")]),
+        ]
+        self._drain_files(
+            spark, tmp_path, batches,
+            lambda stream, ckpt: stream_neardup_dedup(
+                stream, store, out, checkpoint_dir=ckpt
+            ),
+            timeout_s=180,
+        )
+        by_batch = {
+            (r.batch, r.doc_id, r.text)
+            for r in spark.read.parquet(out).collect()
+        }
+        assert by_batch == {
+            (0, 1, text(1)), (0, 2, text(2)),
+            (1, 11, "too short"), (1, 12, "hi"), (1, 1, "short"),
+            (2, 2, text(30)),
+        }
+        stored = sorted(
+            r.doc_id for r in spark.read.parquet(store).select("doc_id").collect()
+        )
+        assert stored == [1, 2, 2]
+
+    def test_store_batch_costs_about_a_first_batch_in_jobs(
+        self, spark, tmp_path
+    ):
+        """The against-store batch runs one band join and one checkpoint,
+        so it launches about as many Spark jobs as the first batch, not a
+        second pair pipeline on top of it."""
+        batches, start = _neardup_case(spark, tmp_path)
+        sc = spark.sparkContext
+        first, second = (
+            len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+            for q in self._drain_files(spark, tmp_path, batches, start)
+        )
+        assert second <= first + 4, (first, second)
+
 
 class TestStreamIvfAppend:
     """stream_ivf_append: continuous ingest into a cell-partitioned IVF
